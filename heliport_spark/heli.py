@@ -19,6 +19,14 @@ From-scratch reimplementation of the reference's scoring dataflow
 * C6 top-k ranking with collapse-dedup (identifier.rs:101-136)
 * C7 empty/no-word fallback → (zxx, 7.0) (identifier.rs:309-315)
 
+One batch, one context: ``BatchContext`` holds everything the consumers of
+a batch share — the exact-duplicate factorize of the raw texts, the raw
+``'\\n'`` join and its lowered copy, P1-P4 over the distinct texts, the
+token span hashes and the counts matrix. HeLI scoring, the word-NLL signal,
+the fastText cross-check and (in the identify UDF) textstats are functions
+of it, computed once per distinct text and scattered back by the dedup
+codes. The public ``*_batch`` calls each build their own context.
+
 Two accumulation modes:
 
 * ``exact=True``: float32 additions in the reference's exact sequential order
@@ -37,8 +45,11 @@ No Spark imports here — this module runs inside Arrow-batch UDFs.
 
 from __future__ import annotations
 
+from functools import cached_property
+
 import numpy as np
 
+from .ft_train import FT_BUCKETS, FT_NGRAMS
 from .langs import CJK_LANG_MASK, COLLAPSE, LANGS_ARR, N_LANGS, UND, ZXX
 from .model import (
     _FNV_OFFSET,
@@ -57,10 +68,11 @@ _COLLAPSE_I = COLLAPSE.astype(np.int64)
 _EMPTY_I16 = np.empty(0, np.int16)
 _EMPTY_F32 = np.empty(0, np.float32)
 
-# word_nll_batch dense-matrix cap: (uniq words × distinct winner langs)
-# cells above this fall back to the sorted-key binary-search probe (32 MB
-# of f32 at the cap; both paths are bit-identical — see word_nll_batch)
-_WNLL_DENSE_CELL_CAP = 8_000_000
+# word-NLL gathers from a dense (distinct word × winner lang) matrix built
+# this many cells at a time (32 MB of f32), one block of winner columns each
+_WNLL_BLOCK_CELLS = 8_000_000
+# rows per chunk when one long segment is left in a _seq_row_sums tail
+_SEQ_CHUNK = 4096
 
 
 def _shingles(wordspace: str, t: int) -> "list[str]":
@@ -118,50 +130,6 @@ def _hash_spans(cp: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.ndar
     return h
 
 
-def _dup_probe_rules_out(texts: "list") -> bool:
-    """True when the exact-duplicate shortcut provably cannot fire — a
-    cheap O(n) upper-bound probe run BEFORE the NUL scan + pd.factorize.
-
-    Python caches ``str.__hash__`` per object and equal contents hash
-    equal, so ``len({hash(t)})`` ≤ the true distinct-content count (hash
-    collisions only shrink the set; non-str rows count as the empty
-    string, matching _factorize_texts' coercion). Hence a set bigger than
-    n/2 proves ``2*uniq <= n`` is impossible and the full factorize is
-    skipped — the decision is performance-only (both score paths are
-    bit-identical), so the probe can never change an output, only when
-    the factorize money is spent. On duplicate-free corpora (e.g. salted
-    scaling tables) this removes the whole probe cost; on duplicate-heavy
-    batches it adds one cheap hash pass before the unchanged factorize."""
-    n = len(texts)
-    h_empty = hash("")
-    probe = {hash(t) if isinstance(t, str) else h_empty for t in texts}
-    return 2 * len(probe) > n
-
-
-def _factorize_texts(texts: "list") -> "tuple[np.ndarray, np.ndarray]":
-    """(codes, uniq) for a batch of raw texts — pandas-fast, NUL-correct.
-
-    pandas 2.x hashes/compares ``str`` objects as C strings: everything
-    after an embedded ``\\x00`` is ignored, so ``pd.factorize`` silently
-    merges ``'A\\x00B'`` with ``'A'`` — which would scatter the WRONG
-    text's scores in the exact-duplicate shortcuts. NUL-free batches (all
-    real-world text) keep the O(n) hash factorize; a batch containing any
-    NUL falls back to sort-based ``np.unique`` (correct for arbitrary
-    codepoints), with non-str rows coerced to ``''`` (identical downstream:
-    no tokens → invalid → C7)."""
-    import pandas as pd
-
-    if any(isinstance(t, str) and "\x00" in t for t in texts):
-        arr = np.asarray(
-            [t if isinstance(t, str) else "" for t in texts], dtype=object
-        )
-        uniq, codes = np.unique(arr, return_inverse=True)
-        return codes, uniq
-    arr = np.asarray(list(texts), dtype=object)
-    codes, uniq = pd.factorize(arr, use_na_sentinel=False)
-    return codes, uniq
-
-
 def _hash_windows(buf: np.ndarray, wstart: np.ndarray, t: int) -> np.ndarray:
     """FNV-1a + splitmix over all fixed-width-t windows (P5 shingles) of a
     codepoint buffer; every window is exactly t chars so no masking."""
@@ -173,13 +141,319 @@ def _hash_windows(buf: np.ndarray, wstart: np.ndarray, t: int) -> np.ndarray:
     return h
 
 
-class Scorer:
-    """Batch scorer holding the model + a distinct-word memo.
+def _pad_spans(cp: np.ndarray, starts: np.ndarray, lens: np.ndarray):
+    """``' w '`` for every span, packed into one codepoint buffer by one
+    scatter → (pbuf uint32[], pstart int64[k+1], lenp int64[k])."""
+    lenp = lens + 2
+    pstart = np.zeros(len(lens) + 1, dtype=np.int64)
+    np.cumsum(lenp, out=pstart[1:])
+    pbuf = np.full(int(pstart[-1]), 0x20, dtype=np.uint32)
+    cum0 = np.zeros(len(lens), dtype=np.int64)
+    np.cumsum(lens[:-1], out=cum0[1:])
+    ar = np.arange(int(lens.sum()))
+    pbuf[np.repeat(pstart[:-1] + 1 - cum0, lens) + ar] = \
+        cp[np.repeat(starts - cum0, lens) + ar]
+    return pbuf, pstart, lenp
 
-    One instance per Python worker process (see operators/identify.py); the
-    memo mirrors the reference's thread-local Identifier clones sharing an
-    Arc<Model> (identifier.rs:333-359) — state is per-worker, model is shared
-    via mmap.
+
+def _padded_windows(pbuf: np.ndarray, pstart: np.ndarray, lenp: np.ndarray,
+                    rows: np.ndarray, t: int):
+    """Hashes of every width-t window of the padded spans ``rows`` (P5), in
+    (span, offset) order → (hashes, owner — index into ``rows`` —, nwin)."""
+    nwin = np.maximum(lenp[rows] - t + 1, 0)
+    cumw = np.zeros(len(rows), dtype=np.int64)
+    np.cumsum(nwin[:-1], out=cumw[1:])
+    wstart = np.repeat(pstart[rows] - cumw, nwin) + np.arange(int(nwin.sum()))
+    return (_hash_windows(pbuf, wstart, t),
+            np.repeat(np.arange(len(rows)), nwin), nwin)
+
+
+def _seq_row_sums(M: np.ndarray, idx: np.ndarray, seg_start: np.ndarray,
+                  seg_len: np.ndarray) -> np.ndarray:
+    """Per segment s: Σ_j M[idx[seg_start[s] + j]] over j < seg_len[s],
+    added sequentially from +0.0 in j order — bit-identical to numpy's
+    axis-0 sum of the segment's rows and to ``np.add.at`` over them
+    (``np.add.reduceat`` is not). A shrinking-tail loop over j: segments
+    sorted by length, so the live ones at step j are a contiguous tail.
+    A segment left alone in the tail (one long word or text) finishes in
+    sequential chunks instead of one numpy call per row."""
+    k = len(seg_len)
+    acc = np.zeros((k, M.shape[1]), dtype=M.dtype)
+    order = np.argsort(seg_len, kind="stable")
+    ls = seg_len[order]
+    base = seg_start[order]
+    for j in range(int(ls[-1]) if k else 0):
+        lo = int(np.searchsorted(ls, j + 1))
+        if lo == k - 1:
+            rest = idx[base[lo] + j : base[lo] + ls[lo]]
+            a = acc[lo]
+            for c in range(0, len(rest), _SEQ_CHUNK):
+                a = np.vstack([a[None], M[rest[c : c + _SEQ_CHUNK]]]).sum(axis=0)
+            acc[lo] = a
+            break
+        acc[lo:] += M[idx[base[lo:] + j]]
+    out = np.empty_like(acc)
+    out[order] = acc
+    return out
+
+
+def _ft_word_sums(M: np.ndarray, cp: np.ndarray, starts: np.ndarray,
+                  lens: np.ndarray):
+    """Per-word fastText features for token spans: (Σ M[buckets] f32[k,242],
+    bucket count f32[k]), bit-identical to ``M[word_buckets(w)].sum(axis=0)``
+    and ``len(word_buckets(w))`` (ft_train.py, the training-side definition).
+    Buckets come from the padded-word windows; a stable sort by word of the
+    per-width window runs lays them out in ``word_buckets`` order (all
+    2-grams, then 3-, 4-, 5-grams) — four presorted runs, so the sort is a
+    cheap merge."""
+    k = len(starts)
+    pbuf, pstart, lenp = _pad_spans(cp, starts, lens)
+    win = [_padded_windows(pbuf, pstart, lenp, np.arange(k), t)
+           for t in FT_NGRAMS]
+    owner = np.concatenate([w[1] for w in win])
+    order = np.argsort(owner, kind="stable")
+    bk = (np.concatenate([w[0] for w in win])[order]
+          % np.uint64(FT_BUCKETS)).astype(np.int64)
+    cnt = np.bincount(owner, minlength=k)
+    start = np.zeros(k, dtype=np.int64)
+    np.cumsum(cnt[:-1], out=start[1:])
+    return _seq_row_sums(M, bk, start, cnt), cnt.astype(np.float32)
+
+
+def _dedup(texts: "list[str]"):
+    """Exact-duplicate factorize of raw texts → (codes int[n] | None, distinct
+    texts in first-appearance order); codes is None when every text is
+    distinct (the distinct list is then ``texts`` itself).
+
+    ``pyarrow.compute.dictionary_encode`` hashes length-delimited UTF-8, so
+    it is NUL-safe by construction (pandas hashes ``str`` as C strings and
+    would merge ``'A\\x00B'`` with ``'A'``)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    enc = pc.dictionary_encode(pa.array(texts, type=pa.string()))
+    if len(enc.dictionary) == len(texts):
+        return None, texts
+    return enc.indices.to_numpy(), enc.dictionary.to_pylist()
+
+
+def _preprocess(model: HeliModel, texts: "list[str]"):
+    """P1-P4 for a batch of str in one numpy pass — codepoint-level.
+
+    Returns (raw, low, core): the raw ``'\\n'`` join, its lowered copy (None
+    when a text embeds ``'\\n'``) and core = (cp, s_idx, e_idx, tok_text,
+    bounds, cjk_pct, valid):
+      cp        uint32[] cleaned codepoint buffer of all texts joined
+      s_idx     int64[n_tokens] token start offsets into cp
+      e_idx     int64[n_tokens] token end offsets (inclusive)
+      tok_text  int64[n_tokens] owning-text index
+      bounds    int64[n+1] token offsets per text
+      cjk_pct   float32[n]
+      valid     bool[n] (≥1 token)
+    Texts are lowered (P1) then joined with '\\n' (never in the kept set →
+    becomes a space → a guaranteed token boundary)."""
+    n = len(texts)
+    cjk_pct = np.zeros(n, dtype=np.float32)
+    valid = np.zeros(n, dtype=bool)
+    # P1 fast path: ONE C-level .lower() over the joined buffer instead
+    # of n Python calls (24 → ~3 ms per 10k batch). Safe because '\n' is
+    # neither cased nor case-ignorable, so even the conditional
+    # final-sigma mapping sees the same context at text boundaries as it
+    # would per-text; boundaries are recovered from the actual separator
+    # positions AFTER lowering (length-changing mappings like 'İ'→'i̇'
+    # shift offsets, never create or destroy '\n'). Texts that embed a
+    # newline take the per-text path.
+    raw = "\n".join(texts)
+    low = raw.lower() if raw.count("\n") == n - 1 else None
+    joined = low
+    if joined:
+        cp = np.frombuffer(joined.encode("utf-32-le"), dtype="<u4")
+        text_start = np.empty(n + 1, dtype=np.int64)
+        text_start[0] = 0
+        text_start[1:n] = np.flatnonzero(cp == 0x0A) + 1
+        text_start[n] = len(cp) + 1
+    else:
+        lowered = [t.lower() for t in texts]
+        # char offsets of each text inside the joined buffer
+        lens = np.fromiter((len(t) for t in lowered), dtype=np.int64, count=n)
+        text_start = np.zeros(n + 1, dtype=np.int64)
+        np.cumsum(lens + 1, out=text_start[1:])  # +1 for the separator
+        joined = "\n".join(lowered)
+        if joined:
+            cp = np.frombuffer(joined.encode("utf-32-le"), dtype="<u4")
+    if not joined:
+        z = np.empty(0, np.int64)
+        return raw, low, (np.empty(0, np.uint32), z, z, z,
+                          np.zeros(n + 1, np.int64), cjk_pct, valid)
+    cp = np.where(model.keep_table[cp], cp, np.uint32(0x20))
+    # CJK fast path: the lowest CJK block starts at 0x2E80 (chartables
+    # CJK_BLOCK_RANGES), so a batch whose max cleaned codepoint is below
+    # it — or whose cjk-table gather comes back all-False (e.g. Hangul
+    # syllables sit above 0x2E80 but outside the 17 blocks) — skips the
+    # cjk prefix sum and both transition terms. Outputs are identical:
+    # with iscjk all-False every cjk-derived term is False/0 and
+    # cjk_pct keeps its +0.0 initialization (= 0/mystery bit-for-bit).
+    iscjk = None
+    if int(cp.max()) >= 0x2E80:
+        iscjk = model.cjk_table[cp]
+        if not iscjk.any():
+            iscjk = None
+    nonspace = cp != 0x20
+    # per-text counts via prefix sums (robust to empty texts); int32 is
+    # plenty (counts ≤ buffer length < 2^31 per Arrow batch) and halves
+    # the traffic of the buffer-wide cumsums
+    cs_ns = np.zeros(len(cp) + 1, dtype=np.int32)
+    np.cumsum(nonspace, out=cs_ns[1:])
+    t0 = text_start[:-1]
+    t1 = np.minimum(text_start[1:] - 1, len(cp))  # exclude separator
+    mystery = cs_ns[t1] - cs_ns[t0]
+    nz = mystery > 0
+    if iscjk is not None:
+        cs_cjk = np.zeros(len(cp) + 1, dtype=np.int32)
+        np.cumsum(iscjk, out=cs_cjk[1:])
+        cjk_n = cs_cjk[t1] - cs_cjk[t0]
+        cjk_pct[nz] = cjk_n[nz] / mystery[nz]
+    # token boundaries: break at spaces and CJK↔non-CJK transitions (P3)
+    prev_ns = np.empty_like(nonspace)
+    prev_ns[0] = False
+    prev_ns[1:] = nonspace[:-1]
+    next_ns = np.empty_like(nonspace)
+    next_ns[-1] = False
+    next_ns[:-1] = nonspace[1:]
+    if iscjk is not None:
+        prev_cjk = np.empty_like(iscjk)
+        prev_cjk[0] = False
+        prev_cjk[1:] = iscjk[:-1]
+        starts = nonspace & (~prev_ns | (iscjk != prev_cjk))
+        next_cjk = np.empty_like(iscjk)
+        next_cjk[-1] = False
+        next_cjk[:-1] = iscjk[1:]
+        ends = nonspace & (~next_ns | (iscjk != next_cjk))
+    else:
+        starts = nonspace & ~prev_ns
+        ends = nonspace & ~next_ns
+    s_idx = np.flatnonzero(starts)
+    e_idx = np.flatnonzero(ends)
+    tok_text = np.searchsorted(text_start[1:], s_idx, side="right")
+    bounds = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(np.bincount(tok_text, minlength=n), out=bounds[1:])
+    valid = bounds[1:] > bounds[:-1]
+    return raw, low, (cp, s_idx, e_idx, tok_text, bounds, cjk_pct, valid)
+
+
+def _token_strings(cp: np.ndarray, s_idx: np.ndarray, e_idx: np.ndarray):
+    cleaned = cp.tobytes().decode("utf-32-le")
+    return [cleaned[a : b + 1] for a, b in zip(s_idx.tolist(), e_idx.tolist())]
+
+
+def _grow(arr: np.ndarray, need: int) -> np.ndarray:
+    """``arr``, or a copy with room for ``need`` rows (capacity doubles)."""
+    if need <= len(arr):
+        return arr
+    new = np.empty((max(need, 2 * len(arr)),) + arr.shape[1:], arr.dtype)
+    new[: len(arr)] = arr
+    return new
+
+
+class _WordIndex:
+    """Word-hash → slot map of a word memo: a SORTED key snapshot probed with
+    one vectorized searchsorted (a per-unique dict.get generator measured
+    ~20 ms per warm 10k×45-word batch; the probe is ~2 ms). Words are added
+    once per batch; hashes are never re-added, so concatenate-and-sort
+    needs no dedup."""
+
+    def __init__(self):
+        self.keys = np.empty(0, np.uint64)
+        self.slots = np.empty(0, np.int64)
+
+    def __len__(self) -> int:
+        return len(self.keys)
+
+    def lookup(self, h: np.ndarray) -> np.ndarray:
+        """Slot of each hash, -1 for unknown."""
+        ks = self.keys
+        if not ks.size:
+            return np.full(len(h), -1, np.int64)
+        p = np.minimum(np.searchsorted(ks, h), ks.size - 1)
+        return np.where(ks[p] == h, self.slots[p], np.int64(-1))
+
+    def add(self, h: np.ndarray, slots: np.ndarray) -> None:
+        keys = np.concatenate([self.keys, h])
+        order = np.argsort(keys)
+        self.keys = keys[order]
+        self.slots = np.concatenate([self.slots, slots])[order]
+
+
+class BatchContext:
+    """Everything the consumers of ONE batch of texts share, built once.
+
+    Rows are the batch's DISTINCT texts (``texts``, first-appearance order);
+    ``scatter`` maps a per-distinct-row output back to the batch rows. The
+    fields are pure functions of the batch — nothing here outlives the
+    call, so no cache keyed on batch contents exists anywhere:
+
+      codes     int[n] dedup codes, None when every text is distinct
+      texts     list[str] distinct texts (non-str rows count as '')
+      raw, low  the raw '\\n' join of ``texts`` and its lowered copy (None
+                when a text embeds '\\n': P1 then lowers per text)
+      cp … valid  P1-P4 over ``texts`` (see ``_preprocess``)
+      flat_ids, uniq_h, first_idx  token span hashes, first-appearance
+                factorized, and each distinct token's first occurrence
+      counts    dense (row × distinct word) f32 counts matrix (lazy)
+    """
+
+    def __init__(self, model: HeliModel, texts):
+        tl = [t if isinstance(t, str) else "" for t in texts]
+        self.n = len(tl)
+        self.codes, self.texts = _dedup(tl)
+        self.raw, self.low, core = _preprocess(model, self.texts)
+        (self.cp, self.s_idx, self.e_idx, self.tok_text, self.bounds,
+         self.cjk_pct, self.valid) = core
+        self.tok_len = self.e_idx - self.s_idx + 1
+        # distinct tokens by 64-bit span hash — the SAME hash the model keys
+        # use (order-0 lookup consumes it directly) and the word memos' key
+        # (a 64-bit collision merging two words is ~(d²/2)·2⁻⁶⁴, far below
+        # the model's own hash-collision tolerance). Hash factorize, not
+        # np.unique: no argsort (63 → 9 ms per 10k×45-word batch), and the
+        # counts matrix columns follow its first-appearance order.
+        import pandas as pd
+
+        flat_ids, uniq_h = pd.factorize(
+            _hash_spans(self.cp, self.s_idx, self.tok_len)
+        )
+        self.flat_ids = flat_ids.astype(np.int64, copy=False)
+        self.uniq_h = np.asarray(uniq_h, dtype=np.uint64)
+        # each distinct token's first occurrence: reversed scatter, the
+        # last write per slot is the smallest index
+        self.first_idx = np.empty(len(self.uniq_h), dtype=np.int64)
+        self.first_idx[self.flat_ids[::-1]] = np.arange(
+            len(self.flat_ids) - 1, -1, -1, dtype=np.int64
+        )
+
+    @cached_property
+    def counts(self):
+        """f32 (row × distinct word) occurrence counts for the HeLI and ft
+        sgemms, or None above the dense cap (the callers then scatter per
+        occurrence)."""
+        n, u = len(self.texts), len(self.uniq_h)
+        if n * u > 12_000_000 or u > 20_000:
+            return None
+        key = self.tok_text * u + self.flat_ids
+        return np.bincount(key, minlength=n * u).reshape(n, u).astype(np.float32)
+
+    def scatter(self, a: np.ndarray) -> np.ndarray:
+        return a if self.codes is None else a[self.codes]
+
+
+class Scorer:
+    """Batch scorer holding the model + per-worker word memos.
+
+    One instance per Python worker process (see operators/identify.py). Its
+    only cross-call state is the word memos — the HeLI vocab bank (fast
+    path), the exact path's word vectors and the fastText word bank — which
+    mirror the reference's thread-local Identifier clones sharing an
+    Arc<Model> (identifier.rs:333-359): state is per-worker, the model is
+    shared via mmap. Everything per-batch lives in a ``BatchContext``.
     """
 
     def __init__(self, model: "HeliModel | None" = None, exact: bool = False,
@@ -187,24 +461,17 @@ class Scorer:
         self.model = model if model is not None else get_model()
         self.exact = exact
         self.cache_cap = cache_cap
-        # fast memo: word-hash (python int) -> slot in the vocab bank
-        self._memo: dict = {}
         self._bank_reset()
         # exact memo: word -> dense (N_LANGS,) f32 word-score vector
         self._memo_exact: dict = {}
-        # one-slot P1-P4 result cache: with_ft scores every batch twice
-        # (HeLI + fastText); the second pass reuses the first's codepoint
-        # work (same str objects → tuple == is pointer-fast)
-        self._core_cache: "tuple | None" = None
-        # one-slot token-hash cache (fast path): word_nll_batch reuses the
-        # batch's (uniq_h, flat_ids, tok_text, bounds) instead of re-hashing
-        # every token span (measured ~18% whole-pipeline overhead without it)
-        self._tok_cache: "tuple | None" = None
-        # (batch key, codes, uniq) from score_batch's duplicate-shortcut
-        # factorize — codes/uniq are None when the shortcut was evaluated
-        # but not profitable. Lets word_nll_batch skip re-running the
-        # identical NUL scan + factorize on the same batch (~7 ms/10k).
-        self._dup_cache: "tuple | None" = None
+        # fastText word bank: word-hash -> row of (_ft_V, _ft_K)
+        self._ft_index = _WordIndex()
+        self._ft_V = np.empty((0, N_LANGS), np.float32)
+        self._ft_K = _EMPTY_F32
+        self._ft: "tuple | None" = None
+
+    def context(self, texts) -> BatchContext:
+        return BatchContext(self.model, texts)
 
     # ------------------------------------------------------------ vocab bank
     # Scored distinct words live in flat growable arrays (sparse CSR-style):
@@ -212,13 +479,7 @@ class Scorer:
     # a pure-numpy gather instead of a per-unique-word Python loop.
 
     def _bank_reset(self) -> None:
-        self._memo.clear()
-        # two-tier memo: `_memo` holds words appended since the last merge;
-        # `_memo_keys`/`_memo_slots` are a SORTED snapshot probed with one
-        # vectorized searchsorted (the per-unique dict.get generator measured
-        # ~20 ms per warm 10k×45-word batch; the snapshot probe is ~2 ms)
-        self._memo_keys = np.empty(0, np.uint64)
-        self._memo_slots = np.empty(0, np.int64)
+        self._memo = _WordIndex()  # word-hash -> slot in the vocab bank
         self._vb_n = 0
         self._vb_len = 0
         self._vb_base = np.empty(4096, np.float32)
@@ -227,208 +488,36 @@ class Scorer:
         self._vb_idx = np.empty(16384, np.int16)
         self._vb_val = np.empty(16384, np.float32)
 
-    def _memo_lookup(self, uniq_h: np.ndarray) -> np.ndarray:
-        """Slot of each hash, -1 for unknown: sorted-snapshot searchsorted
-        first, pending-dict fallback for the (usually few) leftovers."""
-        ks = self._memo_keys
-        u = len(uniq_h)
-        if ks.size:
-            p = np.minimum(np.searchsorted(ks, uniq_h), ks.size - 1)
-            hit = ks[p] == uniq_h
-            slots = np.where(hit, self._memo_slots[p], np.int64(-1))
-        else:
-            slots = np.full(u, -1, np.int64)
-        pend = self._memo
-        if pend:
-            miss = np.flatnonzero(slots < 0)
-            if miss.size:
-                get = pend.get
-                slots[miss] = np.fromiter(
-                    (get(h, -1) for h in uniq_h[miss].tolist()),
-                    np.int64, count=miss.size,
-                )
-        return slots
-
-    def _memo_merge(self) -> None:
-        """Fold the pending dict into the sorted snapshot (hashes are never
-        re-appended, so concatenate-and-sort needs no dedup)."""
-        pend = self._memo
-        if not pend:
-            return
-        k = np.fromiter(pend.keys(), np.uint64, count=len(pend))
-        v = np.fromiter(pend.values(), np.int64, count=len(pend))
-        keys = np.concatenate([self._memo_keys, k])
-        slots = np.concatenate([self._memo_slots, v])
-        order = np.argsort(keys)
-        self._memo_keys = keys[order]
-        self._memo_slots = slots[order]
-        pend.clear()
-
-    def _vb_ensure(self, k: int, m: int) -> None:
-        n, L = self._vb_n, self._vb_len
-        while n + k > len(self._vb_base):
-            for name in ("_vb_base", "_vb_nnz", "_vb_start"):
-                arr = getattr(self, name)
-                new = np.empty(len(arr) * 2, arr.dtype)
-                new[: len(arr)] = arr
-                setattr(self, name, new)
-        while L + m > len(self._vb_idx):
-            for name in ("_vb_idx", "_vb_val"):
-                arr = getattr(self, name)
-                new = np.empty(len(arr) * 2, arr.dtype)
-                new[: len(arr)] = arr
-                setattr(self, name, new)
-
-    def _bank_append(self, hashes: "list[int]", base_scalar: float,
+    def _bank_append(self, k: int, base_scalar: float,
                      flat_idx, flat_val, bnd: np.ndarray) -> None:
-        """Append len(hashes) words whose sparse (idx, val) vectors are the
-        flat arrays split by bnd; register their memo slots."""
-        k = len(hashes)
+        """Append k words whose sparse (idx, val) vectors are the flat
+        arrays split by bnd, at slots _vb_n, _vb_n + 1, …"""
         m = int(bnd[-1])
-        self._vb_ensure(k, m)
         n, L = self._vb_n, self._vb_len
-        if m:
-            self._vb_idx[L : L + m] = flat_idx
-            self._vb_val[L : L + m] = flat_val
+        for name in ("_vb_base", "_vb_nnz", "_vb_start"):
+            setattr(self, name, _grow(getattr(self, name), n + k))
+        for name in ("_vb_idx", "_vb_val"):
+            setattr(self, name, _grow(getattr(self, name), L + m))
+        self._vb_idx[L : L + m] = flat_idx
+        self._vb_val[L : L + m] = flat_val
         self._vb_base[n : n + k] = base_scalar
         self._vb_nnz[n : n + k] = np.diff(bnd)
         self._vb_start[n : n + k] = L + bnd[:-1]
-        memo = self._memo
-        for i, h in enumerate(hashes):
-            memo[h] = n + i
         self._vb_n = n + k
         self._vb_len = L + m
 
     # ---------------------------------------------------------- preprocessing
 
-    def _preprocess_core(self, texts: "list[str]"):
-        """P1-P4 for a whole batch in one numpy pass — codepoint-level.
-
-        Returns (cp, s_idx, e_idx, tok_text, bounds, cjk_pct, valid):
-          cp        uint32[] cleaned codepoint buffer of all texts joined
-          s_idx     int64[n_tokens] token start offsets into cp
-          e_idx     int64[n_tokens] token end offsets (inclusive)
-          tok_text  int64[n_tokens] owning-text index
-          bounds    int64[n+1] token offsets per text
-          cjk_pct   float32[n]
-          valid     bool[n] (≥1 token)
-        Texts are lowered individually (P1) then joined with '\\n' (never in
-        the kept set → becomes a space → a guaranteed token boundary). The
-        fast scoring path consumes the spans directly (no substring objects);
-        ``preprocess_batch`` materializes token strings for the exact / ft
-        paths.
-        """
-        key = tuple(texts)
-        cached = self._core_cache
-        if cached is not None and cached[0] == key:
-            return cached[1]
-        m = self.model
-        n = len(texts)
-        cjk_pct = np.zeros(n, dtype=np.float32)
-        valid = np.zeros(n, dtype=bool)
-        # P1 fast path: ONE C-level .lower() over the joined buffer instead
-        # of n Python calls (24 → ~3 ms per 10k batch). Safe because '\n' is
-        # neither cased nor case-ignorable, so even the conditional
-        # final-sigma mapping sees the same context at text boundaries as it
-        # would per-text; boundaries are recovered from the actual separator
-        # positions AFTER lowering (length-changing mappings like 'İ'→'i̇'
-        # shift offsets, never create or destroy '\n'). Texts that embed a
-        # newline (or non-str rows) fall back to the per-text path.
-        joined = None
-        text_start = None
-        try:
-            raw = "\n".join(texts)
-        except TypeError:
-            raw = None
-        if raw is not None and raw.count("\n") == n - 1:
-            joined = raw.lower()
-            if joined:
-                cp = np.frombuffer(joined.encode("utf-32-le"), dtype="<u4")
-                text_start = np.empty(n + 1, dtype=np.int64)
-                text_start[0] = 0
-                text_start[1:n] = np.flatnonzero(cp == 0x0A) + 1
-                text_start[n] = len(cp) + 1
-        if text_start is None:
-            lowered = [t.lower() if isinstance(t, str) else "" for t in texts]
-            # char offsets of each text inside the joined buffer
-            lens = np.fromiter((len(t) for t in lowered), dtype=np.int64, count=n)
-            text_start = np.zeros(n + 1, dtype=np.int64)
-            np.cumsum(lens + 1, out=text_start[1:])  # +1 for the separator
-            joined = "\n".join(lowered)
-            if joined:
-                cp = np.frombuffer(joined.encode("utf-32-le"), dtype="<u4")
-        if not joined:
-            z = np.empty(0, np.int64)
-            return (np.empty(0, np.uint32), z, z, z,
-                    np.zeros(n + 1, np.int64), cjk_pct, valid)
-        cp = np.where(m.keep_table[cp], cp, np.uint32(0x20))
-        # CJK fast path: the lowest CJK block starts at 0x2E80 (chartables
-        # CJK_BLOCK_RANGES), so a batch whose max cleaned codepoint is below
-        # it — or whose cjk-table gather comes back all-False (e.g. Hangul
-        # syllables sit above 0x2E80 but outside the 17 blocks) — skips the
-        # cjk prefix sum and both transition terms. Outputs are identical:
-        # with iscjk all-False every cjk-derived term is False/0 and
-        # cjk_pct keeps its +0.0 initialization (= 0/mystery bit-for-bit).
-        iscjk = None
-        if int(cp.max()) >= 0x2E80:
-            iscjk = m.cjk_table[cp]
-            if not iscjk.any():
-                iscjk = None
-        nonspace = cp != 0x20
-        # per-text counts via prefix sums (robust to empty texts); int32 is
-        # plenty (counts ≤ buffer length < 2^31 per Arrow batch) and halves
-        # the traffic of the buffer-wide cumsums
-        cs_ns = np.zeros(len(cp) + 1, dtype=np.int32)
-        np.cumsum(nonspace, out=cs_ns[1:])
-        t0 = text_start[:-1]
-        t1 = np.minimum(text_start[1:] - 1, len(cp))  # exclude separator
-        mystery = cs_ns[t1] - cs_ns[t0]
-        nz = mystery > 0
-        if iscjk is not None:
-            cs_cjk = np.zeros(len(cp) + 1, dtype=np.int32)
-            np.cumsum(iscjk, out=cs_cjk[1:])
-            cjk_n = cs_cjk[t1] - cs_cjk[t0]
-            cjk_pct[nz] = cjk_n[nz] / mystery[nz]
-        # token boundaries: break at spaces and CJK↔non-CJK transitions (P3)
-        prev_ns = np.empty_like(nonspace)
-        prev_ns[0] = False
-        prev_ns[1:] = nonspace[:-1]
-        next_ns = np.empty_like(nonspace)
-        next_ns[-1] = False
-        next_ns[:-1] = nonspace[1:]
-        if iscjk is not None:
-            prev_cjk = np.empty_like(iscjk)
-            prev_cjk[0] = False
-            prev_cjk[1:] = iscjk[:-1]
-            starts = nonspace & (~prev_ns | (iscjk != prev_cjk))
-            next_cjk = np.empty_like(iscjk)
-            next_cjk[-1] = False
-            next_cjk[:-1] = iscjk[1:]
-            ends = nonspace & (~next_ns | (iscjk != next_cjk))
-        else:
-            starts = nonspace & ~prev_ns
-            ends = nonspace & ~next_ns
-        s_idx = np.flatnonzero(starts)
-        e_idx = np.flatnonzero(ends)
-        tok_text = np.searchsorted(text_start[1:], s_idx, side="right")
-        bounds = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(np.bincount(tok_text, minlength=n), out=bounds[1:])
-        valid = bounds[1:] > bounds[:-1]
-        result = (cp, s_idx, e_idx, tok_text, bounds, cjk_pct, valid)
-        self._core_cache = (key, result)
-        return result
-
     def preprocess_batch(self, texts: "list[str]"):
-        """P1-P4 with materialized token strings (exact / ft paths).
+        """P1-P4 with materialized token strings, one entry per input row.
 
         Returns (tokens, tok_text, bounds, cjk_pct, valid) — see
-        ``_preprocess_core`` for the string-free variant the fast path uses.
+        ``_preprocess`` for the string-free variant the scorer uses.
         """
-        cp, s_idx, e_idx, tok_text, bounds, cjk_pct, valid = \
-            self._preprocess_core(texts)
-        cleaned = cp.tobytes().decode("utf-32-le")
-        tokens = [cleaned[a : b + 1] for a, b in zip(s_idx, e_idx)]
-        return tokens, tok_text, bounds, cjk_pct, valid
+        tl = [t if isinstance(t, str) else "" for t in texts]
+        _, _, (cp, s_idx, e_idx, tok_text, bounds, cjk_pct, valid) = \
+            _preprocess(self.model, tl)
+        return _token_strings(cp, s_idx, e_idx), tok_text, bounds, cjk_pct, valid
 
     def preprocess(self, text: str) -> "tuple[list[str], float]":
         """Single-text P1-P4 → (tokens, cjk_pct)."""
@@ -449,8 +538,6 @@ class Scorer:
         total = int(pl.sum())
         bnd = np.zeros(len(fi) + 1, dtype=np.int64)
         np.cumsum(pl, out=bnd[1:])
-        if total == 0:
-            return np.empty(0, np.int64), _EMPTY_F32, bnd
         pos = np.repeat(st - bnd[:-1], pl) + np.arange(total)
         return (
             order_table.plang[pos].astype(np.int64),
@@ -464,9 +551,12 @@ class Scorer:
         the hash-keyed memo. Fully numpy: order-0 is looked up directly on
         the word hashes (they ARE the model keys); the back-off cascade
         hashes n-gram windows straight out of a padded codepoint buffer —
-        no substring/shingle string objects anywhere (ROADMAP item 4)."""
+        no substring/shingle string objects anywhere (ROADMAP item 4).
+        Words enter the bank in groups; ``done`` keeps their hashes in bank
+        order for the one memo update at the end."""
         m = self.model
-        hl = hashes.tolist()  # python ints for dict keys
+        n0 = self._vb_n
+        done = []
         # order 0: whole-word model — word hash == model key hash
         idx = m.orders[0].lookup(hashes)
         found0 = idx >= 0
@@ -474,45 +564,22 @@ class Scorer:
             rows0 = np.flatnonzero(found0)
             plang_f, padj_f, bnd = self._flat_gather(m.orders[0], idx[rows0])
             self._bank_append(
-                [hl[wi] for wi in rows0.tolist()],
-                PENALTY, plang_f.astype(np.int16), padj_f, bnd,
+                rows0.size, PENALTY, plang_f.astype(np.int16), padj_f, bnd,
             )
-        remaining = ~found0
-        if not remaining.any():
-            return
-        # padded buffer ' w ' for every remaining word, built by one scatter
-        act = np.flatnonzero(remaining)
-        L = lens[act]
-        lenp = L + 2
-        pstart = np.zeros(len(act) + 1, dtype=np.int64)
-        np.cumsum(lenp, out=pstart[1:])
-        pbuf = np.full(int(pstart[-1]), 0x20, dtype=np.uint32)
-        sumL = int(L.sum())
-        if sumL:
-            cum0 = np.zeros(len(act), dtype=np.int64)
-            np.cumsum(L[:-1], out=cum0[1:])
-            ar = np.arange(sumL)
-            pbuf[np.repeat(pstart[:-1] + 1 - cum0, L) + ar] = \
-                cp[np.repeat(starts[act] - cum0, L) + ar]
+            done.append(rows0)
+        act = np.flatnonzero(~found0)
+        pbuf, pstart, lenp = _pad_spans(cp, starts[act], lens[act])
         # back-off cascade t = 6 .. 1 (identifier.rs:246)
         rem_local = np.ones(len(act), dtype=bool)
         for t in range(MAX_NGRAM, 0, -1):
             rows = np.flatnonzero(rem_local)
             if rows.size == 0:
                 break
-            nwin = lenp[rows] - t + 1
-            rows = rows[nwin > 0]
-            nwin = nwin[nwin > 0]
-            if rows.size == 0:
+            wh, gw, _ = _padded_windows(pbuf, pstart, lenp, rows, t)
+            if wh.size == 0:
                 continue
-            W = int(nwin.sum())
-            cumw = np.zeros(rows.size, dtype=np.int64)
-            np.cumsum(nwin[:-1], out=cumw[1:])
-            arw = np.arange(W)
-            wstart = np.repeat(pstart[rows] - cumw, nwin) + arw
-            gw = np.repeat(np.arange(rows.size), nwin)
             ot = m.orders[t]
-            gidx = ot.lookup(_hash_windows(pbuf, wstart, t))
+            gidx = ot.lookup(wh)
             fmask = gidx >= 0
             k_found = np.bincount(gw[fmask], minlength=rows.size)
             hit = np.flatnonzero(k_found)
@@ -530,20 +597,20 @@ class Scorer:
             nzr, nzc = np.nonzero(M)
             bnd = np.zeros(hit.size + 1, dtype=np.int64)
             np.cumsum(np.bincount(nzr, minlength=hit.size), out=bnd[1:])
-            glob = act[rows[hit]]
             self._bank_append(
-                [hl[wi] for wi in glob.tolist()],
-                PENALTY, nzc.astype(np.int16), M[nzr, nzc], bnd,
+                hit.size, PENALTY, nzc.astype(np.int16), M[nzr, nzc], bnd,
             )
+            done.append(act[rows[hit]])
             rem_local[rows[hit]] = False
         left = np.flatnonzero(rem_local)
         if left.size:
             # never found at any order: contributes zeros
             self._bank_append(
-                [hl[act[li]] for li in left.tolist()],
-                0.0, _EMPTY_I16, _EMPTY_F32,
+                left.size, 0.0, _EMPTY_I16, _EMPTY_F32,
                 np.zeros(left.size + 1, dtype=np.int64),
             )
+            done.append(act[left])
+        self._memo.add(hashes[np.concatenate(done)], np.arange(n0, self._vb_n))
 
     def _score_word_exact(self, word: str) -> np.ndarray:
         """Reference-order f32 accumulation for one word (parity mode)."""
@@ -579,161 +646,111 @@ class Scorer:
 
     # ---------------------------------------------------------- text scoring
 
+    def score(self, ctx: BatchContext):
+        """C1-C3 over the context's distinct texts → (points (u,242) f32,
+        valid bool[u], cjk_pct f32[u]).
+
+        Invalid rows (no tokens) have undefined points; callers must apply C7.
+        """
+        points = np.zeros((len(ctx.texts), N_LANGS), dtype=np.float32)
+        if self.exact:
+            self._score_exact(ctx, points)
+        else:
+            self._score_fast(ctx, points)
+        # C3: CJK mass penalty after normalization (identifier.rs:291-298)
+        cjk_rows = ctx.valid & (ctx.cjk_pct > 0.5)
+        if cjk_rows.any():
+            points[np.ix_(cjk_rows, ~CJK_LANG_MASK)] = CJK_OVERRIDE
+        return points, ctx.valid, ctx.cjk_pct
+
+    def _score_exact(self, ctx: BatchContext, points: np.ndarray) -> None:
+        tokens = _token_strings(ctx.cp, ctx.s_idx, ctx.e_idx)
+        bounds = ctx.bounds
+        memo = self._memo_exact
+        if len(memo) > self.cache_cap:
+            for k in list(memo.keys())[: self.cache_cap // 4]:
+                del memo[k]
+        for i in range(len(points)):
+            lo, hi = bounds[i], bounds[i + 1]
+            if lo == hi:
+                continue
+            lp = np.zeros(N_LANGS, dtype=np.float32)
+            for w in tokens[lo:hi]:
+                v = memo.get(w)
+                if v is None:
+                    v = self._score_word_exact(w)
+                    memo[w] = v
+                lp += v  # sequential word order (identifier.rs:270)
+            lp /= np.float32(hi - lo)
+            points[i] = lp
+
+    def _score_fast(self, ctx: BatchContext, points: np.ndarray) -> None:
+        n = len(points)
+        flat_ids, uniq_h, tok_text = ctx.flat_ids, ctx.uniq_h, ctx.tok_text
+        if self._vb_n > self.cache_cap:
+            self._bank_reset()  # full reset beats per-entry eviction here
+        u = len(uniq_h)
+        slots = self._memo.lookup(uniq_h)
+        miss = np.flatnonzero(slots < 0)
+        if miss.size:
+            fi = ctx.first_idx[miss]
+            self._score_spans_fast(ctx.cp, ctx.s_idx[fi], ctx.tok_len[fi],
+                                   uniq_h[miss])
+            slots[miss] = self._memo.lookup(uniq_h[miss])
+        # batch word vectors = one CSR-style gather out of the vocab bank
+        base = self._vb_base[slots]
+        nnz = self._vb_nnz[slots]
+        vstart = self._vb_start[slots]
+        off = np.zeros(u + 1, dtype=np.int64)
+        np.cumsum(nnz, out=off[1:])
+        pos = np.repeat(vstart - off[:-1], nnz) + np.arange(int(off[-1]))
+        # narrow dtypes: lang indexes fit int32, values stay the bank's f32
+        # (bincount casts per-element to f64 internally — bit-identical to
+        # gathering pre-cast f64, half the traffic)
+        idx_cat = self._vb_idx[pos].astype(np.int32)
+        val_cat = self._vb_val[pos]
+        nwords = np.diff(ctx.bounds).astype(np.float32)
+        C = ctx.counts
+        if C is not None:
+            # small batch vocabulary: dense counts × word-matrix sgemm —
+            # O(n·u·242) BLAS beats per-occurrence scatter by ~10-100×
+            # when words repeat heavily
+            W = np.repeat(base[:, None], N_LANGS, axis=1)
+            np.add.at(W, (np.repeat(np.arange(u), nnz), idx_cat), val_cat)
+            # same sgemm, written straight into points (no n×242 temp
+            # + copy; bit-identical — identical BLAS call)
+            np.matmul(C, W, out=points)
+        else:
+            # large vocabulary: per-occurrence sparse expansion with
+            # bincount on combined (text, lang) keys — bounded memory,
+            # no dense (occurrences × 242) gather
+            text_base = np.bincount(
+                tok_text, weights=base[flat_ids].astype(np.float64), minlength=n
+            ).astype(np.float32)
+            occ_nnz = nnz[flat_ids]
+            cum = np.cumsum(occ_nnz)
+            # int32 keys halve the traffic of the two big per-posting passes
+            # (n·242 < 2^31 always: n ≤ Arrow batch, 242 langs); measured
+            # 133 → 106 ms on a 4.8M-posting batch
+            pos = np.repeat(off[flat_ids] - cum + occ_nnz, occ_nnz) + \
+                np.arange(int(occ_nnz.sum()))
+            keys = np.repeat(
+                tok_text.astype(np.int32) * np.int32(N_LANGS), occ_nnz
+            ) + idx_cat[pos]
+            points[:] = np.bincount(
+                keys, weights=val_cat[pos], minlength=n * N_LANGS
+            ).reshape(n, N_LANGS)
+            points += text_base[:, None]
+        nw_safe = np.where(ctx.valid, nwords, np.float32(1.0))
+        points /= nw_safe[:, None]
+
     def score_batch(self, texts: "list[str]"):
         """C1-C3 for a batch → (points (n,242) f32, valid bool[n], cjk_pct f32[n]).
 
         Invalid rows (no tokens) have undefined points; callers must apply C7.
         """
-        n = len(texts)
-        points = np.zeros((n, N_LANGS), dtype=np.float32)
-
-        if self.exact:
-            tokens, tok_text, bounds, cjk_pct, valid = self.preprocess_batch(texts)
-            memo = self._memo_exact
-            if len(memo) > self.cache_cap:
-                for k in list(memo.keys())[: self.cache_cap // 4]:
-                    del memo[k]
-            for i in range(n):
-                lo, hi = bounds[i], bounds[i + 1]
-                if lo == hi:
-                    continue
-                lp = np.zeros(N_LANGS, dtype=np.float32)
-                for w in tokens[lo:hi]:
-                    v = memo.get(w)
-                    if v is None:
-                        v = self._score_word_exact(w)
-                        memo[w] = v
-                    lp += v  # sequential word order (identifier.rs:270)
-                lp /= np.float32(hi - lo)
-                points[i] = lp
-        else:
-            # exact-duplicate shortcut: raw web crawls are 20-30% byte-equal
-            # texts; score each distinct text once and scatter the rows back
-            # (bit-identical by construction). Factorize costs ~ms per 10k
-            # batch; only recurse when it at least halves the work.
-            if n > 16 and not _dup_probe_rules_out(texts):
-                codes, uniq = _factorize_texts(texts)
-                if 2 * len(uniq) <= n:
-                    pts_u, valid_u, cjk_u = self.score_batch(list(uniq))
-                    # set AFTER the recursion (which overwrites the cache
-                    # with its own no-shortcut entry for the uniq list)
-                    self._dup_cache = (tuple(texts), codes, uniq)
-                    return pts_u[codes], valid_u[codes], cjk_u[codes]
-                self._dup_cache = (tuple(texts), None, None)
-            elif n > 16:
-                self._dup_cache = (tuple(texts), None, None)
-            cp, s_idx, e_idx, tok_text, bounds, cjk_pct, valid = \
-                self._preprocess_core(texts)
-            if len(s_idx) == 0:
-                return points, valid, cjk_pct
-            # distinct tokens by 64-bit span hash — the SAME hash the model
-            # keys use (so order-0 lookup consumes it directly) and the memo
-            # key (no token strings on this path; a 64-bit collision merging
-            # two words is ~(d²/2)·2⁻⁶⁴, far below the model's own hash-
-            # collision tolerance)
-            lens_tok = e_idx - s_idx + 1
-            tok_hash = _hash_spans(cp, s_idx, lens_tok)
-            # hash-based factorize instead of np.unique: no 450k argsort
-            # (63 → 9 ms per 10k×45-word batch); uniq order becomes
-            # first-appearance, which every consumer is agnostic to (model
-            # lookup is a hash probe, bincount keys are order-free, and
-            # word_nll_batch re-derives everything from (uniq_h, flat_ids))
-            import pandas as pd
-
-            flat_ids, uniq_h = pd.factorize(tok_hash)
-            flat_ids = flat_ids.astype(np.int64, copy=False)
-            uniq_h = np.asarray(uniq_h, dtype=np.uint64)
-            # first occurrence of each unique: reversed scatter — the last
-            # write per slot is the smallest occurrence index
-            first_idx = np.empty(len(uniq_h), dtype=np.int64)
-            first_idx[flat_ids[::-1]] = np.arange(
-                len(flat_ids) - 1, -1, -1, dtype=np.int64
-            )
-            self._tok_cache = (
-                tuple(texts), (uniq_h, flat_ids, tok_text, bounds)
-            )
-            if self._vb_n > self.cache_cap:
-                self._bank_reset()  # full reset beats per-entry eviction here
-            u = len(uniq_h)
-            slots = self._memo_lookup(uniq_h)
-            missm = slots < 0
-            if missm.any():
-                memo = self._memo
-                fi = first_idx[missm]
-                self._score_spans_fast(cp, s_idx[fi], lens_tok[fi], uniq_h[missm])
-                miss_rows = np.flatnonzero(missm)
-                for li, h in zip(miss_rows.tolist(), uniq_h[miss_rows].tolist()):
-                    slots[li] = memo[h]
-                self._memo_merge()
-            # batch word vectors = one CSR-style gather out of the vocab bank
-            base = self._vb_base[slots]
-            nnz = self._vb_nnz[slots]
-            vstart = self._vb_start[slots]
-            off = np.zeros(u + 1, dtype=np.int64)
-            np.cumsum(nnz, out=off[1:])
-            total_nz = int(off[-1])
-            if total_nz:
-                pos = np.repeat(vstart - off[:-1], nnz) + np.arange(total_nz)
-                # narrow dtypes: lang indexes fit int32, values stay the
-                # bank's f32 (bincount casts per-element to f64 internally —
-                # bit-identical to gathering pre-cast f64, half the traffic)
-                idx_cat = self._vb_idx[pos].astype(np.int32)
-                val_cat = self._vb_val[pos]
-            else:
-                idx_cat = np.empty(0, np.int32)
-                val_cat = np.empty(0, np.float32)
-            nwords = np.diff(bounds).astype(np.float32)
-            if n * u <= 12_000_000 and u <= 20_000:
-                # small batch vocabulary: dense counts × word-matrix sgemm —
-                # O(n·u·242) BLAS beats per-occurrence scatter by ~10-100×
-                # when words repeat heavily
-                key = tok_text * u + flat_ids
-                C = (
-                    np.bincount(key, minlength=n * u)
-                    .reshape(n, u)
-                    .astype(np.float32)
-                )
-                W = np.repeat(base[:, None], N_LANGS, axis=1)
-                if len(idx_cat):
-                    rows = np.repeat(np.arange(u), nnz)
-                    np.add.at(W, (rows, idx_cat), val_cat)
-                # same sgemm, written straight into points (no n×242 temp
-                # + copy; bit-identical — identical BLAS call)
-                np.matmul(C, W, out=points)
-            else:
-                # large vocabulary: per-occurrence sparse expansion with
-                # bincount on combined (text, lang) keys — bounded memory,
-                # no dense (occurrences × 242) gather
-                text_base = np.bincount(
-                    tok_text, weights=base[flat_ids].astype(np.float64), minlength=n
-                ).astype(np.float32)
-                occ_nnz = nnz[flat_ids]
-                total = int(occ_nnz.sum())
-                if total:
-                    starts = off[flat_ids]
-                    cum = np.cumsum(occ_nnz)
-                    # int32 keys halve the traffic of the two big per-posting
-                    # passes (n·242 < 2^31 always: n ≤ Arrow batch, 242
-                    # langs); measured 133 → 106 ms on a 4.8M-posting batch
-                    pos = np.repeat(starts - cum + occ_nnz, occ_nnz) + np.arange(
-                        total
-                    )
-                    keys = np.repeat(
-                        tok_text.astype(np.int32) * np.int32(N_LANGS), occ_nnz
-                    ) + idx_cat[pos]
-                    sparse = np.bincount(
-                        keys, weights=val_cat[pos], minlength=n * N_LANGS
-                    ).reshape(n, N_LANGS)
-                    points[:] = sparse
-                points += text_base[:, None]
-            nw_safe = np.where(valid, nwords, np.float32(1.0))
-            points /= nw_safe[:, None]
-
-        # C3: CJK mass penalty after normalization (identifier.rs:291-298)
-        cjk_rows = valid & (cjk_pct > 0.5)
-        if cjk_rows.any():
-            points[np.ix_(cjk_rows, ~CJK_LANG_MASK)] = CJK_OVERRIDE
-        return points, valid, cjk_pct
+        ctx = self.context(texts)
+        return tuple(ctx.scatter(a) for a in self.score(ctx))
 
     # ---------------------------------------------------------- decisions
 
@@ -771,11 +788,12 @@ class Scorer:
 
     # ------------------------------------------------- independent word LM
 
-    def word_nll_batch(self, texts: "list[str]", winner_idx: np.ndarray) -> np.ndarray:
+    def word_nll(self, ctx: BatchContext, winner_idx: np.ndarray) -> np.ndarray:
         """Independent word-level LM score (the distinct D4 perplexity
-        signal — VERDICT r03 #6): mean −log10 P(word | winner language) over
-        the ORDER-0 (whole-word) model table only, OOV words at the 7.0
-        penalty, no character back-off.
+        signal — VERDICT r03 #6) over the context's distinct texts: mean
+        −log10 P(word | winner language) over the ORDER-0 (whole-word)
+        model table only, OOV words at the 7.0 penalty, no character
+        back-off.
 
         Why it is independent of the langid score: the identify score is the
         argmin over the char-backoff mixture, so ``10^raw`` was a monotone
@@ -787,109 +805,78 @@ class Scorer:
         tests/test_pipeline.py::test_word_ppl_is_independent_of_langid_score).
 
         Rows with no tokens return PENALTY (C7 semantics). ``winner_idx``
-        is the PRE-collapse model language id (the argmin index) — exactly
-        the id space of the posting lists."""
-        n = len(texts)
+        (one per distinct text) is the PRE-collapse model language id (the
+        argmin index) — exactly the id space of the posting lists.
+
+        Lookup: a dense (distinct word × distinct winner lang) value matrix
+        turns the per-occurrence probe into one 2-D gather. It is built in
+        blocks of winner columns, ``_WNLL_BLOCK_CELLS`` cells at a time, so
+        memory stays bounded on any batch. Values are gathered, never
+        summed; the reversed scatter makes the FIRST posting win on a
+        (word, lang) duplicate, and a word with an empty posting list keeps
+        its PENALTY row."""
+        n = len(ctx.texts)
         out = np.full(n, np.float32(PENALTY), dtype=np.float32)
-        # exact-duplicate shortcut, mirroring score_batch: score each
-        # distinct text once and scatter (the winner of a text is a function
-        # of the text, so winner_idx at the first occurrence is THE winner)
-        if n > 16:
-            dc = self._dup_cache
-            if dc is not None and dc[0] == tuple(texts):
-                codes, uniq = dc[1], dc[2]  # score_batch's verdict, reused
-            elif _dup_probe_rules_out(texts):
-                codes = uniq = None
-            else:
-                codes, uniq = _factorize_texts(texts)
-                if 2 * len(uniq) > n:
-                    codes = None
-            if codes is not None:
-                _, fidx = np.unique(codes, return_index=True)
-                return self.word_nll_batch(list(uniq), winner_idx[fidx])[codes]
-        # token hashes: reuse score_batch's per-batch artifacts when this is
-        # the same batch (the identify_batch flow — re-hashing every token
-        # span measured ~18% of whole-pipeline time); fall back to the
-        # cached preprocessing + a fresh hash pass otherwise (exact mode)
-        tc = self._tok_cache
-        if tc is not None and tc[0] == tuple(texts):
-            uniq_h, flat_ids, tok_text, bounds = tc[1]
-        else:
-            cp, s_idx, e_idx, tok_text, bounds, _cjk, _valid = \
-                self._preprocess_core(texts)
-            if len(s_idx) == 0:
-                return out
-            tok_hash = _hash_spans(cp, s_idx, e_idx - s_idx + 1)
-            uniq_h, flat_ids = np.unique(tok_hash, return_inverse=True)
-            flat_ids = flat_ids.astype(np.int64, copy=False)
-        if len(uniq_h) == 0:
-            return out
+        flat_ids, u = ctx.flat_ids, len(ctx.uniq_h)
         table = self.model.orders[0]
-        fi = table.lookup(uniq_h.astype(np.uint64, copy=False))
-        found = fi >= 0
-        wl = winner_idx[tok_text]  # per-occurrence winner lang id
-        # distinct winner langs in this batch (≤ min(n, N_LANGS), usually a
-        # handful): the occurrence lookup only ever probes (word, winner)
-        # cells, so a dense (uniq word × distinct winner) value matrix turns
-        # the per-occurrence sorted-key binary search into ONE 2-D gather —
-        # all linear passes, no per-query binary search (measured 16 ms of
-        # searchsorted alone on a 556k-occurrence batch). Values are
-        # gathered, never summed, so the result is bit-identical; the
-        # reversed scatter makes the FIRST posting win on a (word, lang)
-        # duplicate, matching the stable-argsort + left-searchsorted it
-        # replaces. Size-capped: pathological batches (huge vocab × many
-        # winners) fall back to the original sorted-key probe.
+        fi = table.lookup(ctx.uniq_h)
+        fu = np.flatnonzero(fi >= 0)
+        plang, padj, bnd = self._flat_gather(table, fi[fu])
+        word_of_posting = np.repeat(fu, np.diff(bnd))
+        vals = padj.astype(np.float32) + np.float32(PENALTY)  # = pprob
         uw = np.unique(winner_idx)
-        dense_cells = len(uniq_h) * len(uw)
-        if found.any():
-            plang, padj, bnd = self._flat_gather(table, fi[found])
-            fu = np.flatnonzero(found)
-            word_of_posting = np.repeat(fu, np.diff(bnd))
-            vals = padj.astype(np.float32) + np.float32(PENALTY)  # = pprob
-            if dense_cells <= _WNLL_DENSE_CELL_CAP:
-                col = np.full(N_LANGS, -1, dtype=np.int32)
-                col[uw] = np.arange(len(uw), dtype=np.int32)
-                M = np.full(
-                    (len(uniq_h), len(uw)), np.float32(PENALTY),
-                    dtype=np.float32,
-                )
-                pc = col[plang]
-                pm = pc >= 0
-                M[word_of_posting[pm][::-1], pc[pm][::-1]] = vals[pm][::-1]
-                occ_val = M[flat_ids, col[wl]]
-            else:
-                keys = word_of_posting * N_LANGS + plang
-                order = np.argsort(keys, kind="stable")
-                keys = keys[order]
-                vals = vals[order]
-                occ_keys = flat_ids.astype(np.int64) * N_LANGS + wl
-                pos = np.minimum(np.searchsorted(keys, occ_keys), len(keys) - 1)
-                hit = keys[pos] == occ_keys
-                occ_val = np.where(hit, vals[pos], np.float32(PENALTY))
-        else:
-            occ_val = np.full(len(flat_ids), np.float32(PENALTY))
-        sums = np.bincount(tok_text, weights=occ_val.astype(np.float64), minlength=n)
-        cnt = np.diff(bounds)
+        col = np.full(N_LANGS, -1, dtype=np.int64)
+        col[uw] = np.arange(len(uw))
+        pc = col[plang]
+        oc = col[winner_idx[ctx.tok_text]]  # per-occurrence winner column
+        occ_val = np.empty(len(flat_ids), dtype=np.float32)
+        bw = max(1, _WNLL_BLOCK_CELLS // max(u, 1))
+        for lo in range(0, len(uw), bw):
+            hi = min(lo + bw, len(uw))
+            pm = (pc >= lo) & (pc < hi)  # never a non-winner posting (-1)
+            om = slice(None) if hi - lo == len(uw) else (oc >= lo) & (oc < hi)
+            M = np.full((u, hi - lo), np.float32(PENALTY), dtype=np.float32)
+            M[word_of_posting[pm][::-1], pc[pm][::-1] - lo] = vals[pm][::-1]
+            occ_val[om] = M[flat_ids[om], oc[om] - lo]
+        sums = np.bincount(ctx.tok_text, weights=occ_val.astype(np.float64),
+                           minlength=n)
+        cnt = np.diff(ctx.bounds)
         nz = cnt > 0
         out[nz] = (sums[nz] / cnt[nz]).astype(np.float32)
         return out
 
+    def word_nll_batch(self, texts: "list[str]", winner_idx: np.ndarray) -> np.ndarray:
+        """``word_nll`` for a batch; ``winner_idx`` has one entry per row
+        (the winner of a text is a function of the text, so its first
+        occurrence carries it)."""
+        ctx = self.context(texts)
+        wi = np.asarray(winner_idx)
+        if ctx.codes is not None:  # first row of each distinct text
+            wi = wi[np.unique(ctx.codes, return_index=True)[1]]
+        return ctx.scatter(self.word_nll(ctx, wi))
+
     # ---------------------------------------------------------- public API
+
+    def identify_context(self, ctx: BatchContext, ignore_confidence: bool = False,
+                         with_word_nll: bool = False) -> list:
+        """C1-C5 (+ word-NLL) over the context's distinct texts → [lang codes
+        object[u], score f32[u], raw f32[u], cjk_pct f32[u] (, word_nll)]."""
+        points, valid, cjk_pct = self.score(ctx)
+        lang, score, raw, wi = self.pick_winner_batch(
+            points, valid, self.model.confidence, ignore_confidence
+        )
+        out = [LANGS_ARR[lang], score, raw, cjk_pct]
+        if with_word_nll:
+            out.append(self.word_nll(ctx, wi))
+        return out
 
     def identify_batch(self, texts, ignore_confidence: bool = False,
                        with_word_nll: bool = False):
         """→ (lang codes object[n], score f32[n], raw f32[n], cjk_pct f32[n]
         [, word_nll f32[n] when ``with_word_nll``])."""
-        texts = list(texts)
-        points, valid, cjk_pct = self.score_batch(texts)
-        lang, score, raw, wi = self.pick_winner_batch(
-            points, valid, self.model.confidence, ignore_confidence
-        )
-        if not with_word_nll:
-            return LANGS_ARR[lang], score, raw, cjk_pct
-        wnll = self.word_nll_batch(texts, wi)
-        wnll = np.where(valid, wnll, np.float32(PENALTY)).astype(np.float32)
-        return LANGS_ARR[lang], score, raw, cjk_pct, wnll
+        ctx = self.context(texts)
+        res = self.identify_context(ctx, ignore_confidence, with_word_nll)
+        return tuple(ctx.scatter(a) for a in res)
 
     def identify(self, text: str, ignore_confidence: bool = False):
         """Single-text (lang, score) — mirrors Identifier::identify."""
@@ -898,97 +885,73 @@ class Scorer:
 
     def _ft_params(self):
         """Lazy-load the trained fastText-style artifact (ft_train.py):
-        (M (B,242) f32, bias (242,) f32, B) or None when not compiled."""
-        if not hasattr(self, "_ft_loaded"):
-            import os
-
+        (M (B,242) f32 mmap, bias (242,) f32)."""
+        if self._ft is None:
             d = self.model.dir
             mp, bp = d / "ft_M.npy", d / "ft_b.npy"
-            if os.path.exists(mp) and os.path.exists(bp):
-                M = np.load(mp, mmap_mode="r")
-                bias = np.load(bp)
-                self._ft_loaded = (M, bias, M.shape[0])
-            else:
-                self._ft_loaded = None
-        return self._ft_loaded
+            if not (mp.exists() and bp.exists()):
+                raise FileNotFoundError(
+                    f"fastText cross-check artifact missing in model dir {d}: "
+                    "ft_M.npy and ft_b.npy are required (build them with "
+                    "heliport_spark.ft_train.train_ft)"
+                )
+            self._ft = (np.load(mp, mmap_mode="r"), np.load(bp))
+        return self._ft
 
-    def ft_identify_batch(self, texts):
-        """fastText-style cross-check (SURVEY.md §2.6 D3).
+    def _ft_rows(self, ctx: BatchContext, M: np.ndarray) -> np.ndarray:
+        """Row of each distinct batch word in the fastText word bank; memo
+        misses get their bucket sums from the span path (_ft_word_sums)."""
+        uniq_h = ctx.uniq_h
+        if len(self._ft_index) > self.cache_cap:
+            # same bound as the HeLI memos: reused workers on a
+            # crawl-scale vocabulary must not grow without limit
+            self._ft_index = _WordIndex()
+        rows = self._ft_index.lookup(uniq_h)
+        miss = np.flatnonzero(rows < 0)
+        if miss.size:
+            fi = ctx.first_idx[miss]
+            V, K = _ft_word_sums(M, ctx.cp, ctx.s_idx[fi], ctx.tok_len[fi])
+            n0 = len(self._ft_index)
+            rows[miss] = np.arange(n0, n0 + miss.size)
+            self._ft_V = _grow(self._ft_V, n0 + miss.size)
+            self._ft_K = _grow(self._ft_K, n0 + miss.size)
+            self._ft_V[rows[miss]] = V
+            self._ft_K[rows[miss]] = K
+            self._ft_index.add(uniq_h[miss], rows[miss])
+        return rows
 
-        Primary path: the *trained* classifier from ft_train.py — hashed
-        char 2-5-gram buckets, mean-pooled bucket weights, softmax (numpy
-        full-batch GD on corpus synthesized from the word models; no
-        fasttext binary exists in this sandbox). Falls back to the
-        quadgram-table linear scorer when the ft artifact is absent (e.g.
-        freshly trained mini-models).
+    def ft_identify(self, ctx: BatchContext):
+        """fastText-style cross-check (SURVEY.md §2.6 D3) over the context's
+        distinct texts → (ft_lang object[u], ft_prob f32[u]).
+
+        The *trained* classifier from ft_train.py: hashed char 2-5-gram
+        buckets, mean-pooled bucket weights, softmax (numpy full-batch GD
+        on a corpus synthesized from the word models; no fasttext binary
+        is needed). Accumulated word-wise: per distinct word
+        the bank holds Σ M[buckets(word)] and its bucket count; a text's
+        logits = (Σ_w vec_w) / (Σ_w k_w) + bias, through the same counts
+        matrix sgemm as the HeLI fast path. A model dir without the ft
+        artifact raises FileNotFoundError.
 
         Disagreement with the HeLI label is surfaced as a rule flag only —
         it never overrides the HeLI decision (F1-parity requirement).
-
-        Returns (ft_lang object[n], ft_prob f32[n]).
         """
-        params = self._ft_params()
-        if params is not None:
-            return self._ft_trained_batch(texts, params)
-        return self._ft_fallback_batch(texts)
-
-    def _ft_trained_batch(self, texts, params):
-        """Mean-pooled bucket logits, accumulated word-wise: per distinct
-        word cache Σ M[buckets(word)] (a (242,) vector) and its bucket
-        count; a text's logits = (Σ_w vec_w) / (Σ_w k_w) + bias. Same
-        counts-matrix sgemm structure as the HeLI fast path."""
-        from .ft_train import word_buckets
-
-        M, bias, _B = params
-        memo = getattr(self, "_memo_ftb", None)
-        if memo is None:
-            memo = self._memo_ftb = {}
-        if len(memo) > self.cache_cap:
-            memo.clear()  # same bound as the HeLI memos: reused workers
-            # on a crawl-scale vocabulary must not grow without limit
-        n = len(texts)
-        tokens, tok_text, bounds, _, _ = self.preprocess_batch(list(texts))
-        lang_idx = np.full(n, ZXX, dtype=np.int64)
-        prob = np.zeros(n, dtype=np.float32)
-        if not tokens:
-            return LANGS_ARR[lang_idx], prob
-        import pandas as pd
-
-        flat_ids, uniques = pd.factorize(
-            np.asarray(tokens, dtype=object), use_na_sentinel=False
-        )
-        flat_ids = flat_ids.astype(np.int64, copy=False)
-        u = len(uniques)
-        V = np.empty((u, N_LANGS), dtype=np.float32)
-        K = np.empty(u, dtype=np.float32)
-        for li, w in enumerate(uniques):
-            e = memo.get(w)
-            if e is None:
-                bk = word_buckets(w)
-                e = (
-                    M[bk].sum(axis=0).astype(np.float32)
-                    if len(bk)
-                    else np.zeros(N_LANGS, dtype=np.float32),
-                    np.float32(len(bk)),
-                )
-                memo[w] = e
-            V[li] = e[0]
-            K[li] = e[1]
-        # per-text sums via dense counts matrix (vocab is batch-bounded)
-        if n * u <= 12_000_000 and u <= 20_000:
-            key = tok_text * u + flat_ids
-            C = (
-                np.bincount(key, minlength=n * u)
-                .reshape(n, u)
-                .astype(np.float32)
-            )
+        M, bias = self._ft_params()
+        n = len(ctx.texts)
+        flat_ids = ctx.flat_ids
+        rows = self._ft_rows(ctx, M)
+        V = self._ft_V[rows]
+        K = self._ft_K[rows]
+        C = ctx.counts
+        if C is not None:
             num = C @ V
             den = C @ K
         else:
-            num = np.zeros((n, N_LANGS), dtype=np.float32)
-            np.add.at(num, tok_text, V[flat_ids])
+            num = _seq_row_sums(V, flat_ids, ctx.bounds[:-1],
+                                np.diff(ctx.bounds))
             den = np.bincount(
-                tok_text, weights=K[flat_ids].astype(np.float64), minlength=n
+                ctx.tok_text, weights=K[flat_ids].astype(np.float64),
+                minlength=n,
             ).astype(np.float32)
         has = den > 0
         L = np.where(has[:, None], num / np.where(has, den, 1.0)[:, None], 0.0)
@@ -1001,60 +964,10 @@ class Scorer:
         prob = np.where(has, L[np.arange(n), wi], 0.0).astype(np.float32)
         return LANGS_ARR[lang_idx], prob
 
-    def _ft_fallback_batch(self, texts):
-        t = 4
-        ot = self.model.orders[t]
-        memo = self._memo_ft if hasattr(self, "_memo_ft") else {}
-        self._memo_ft = memo
-        if len(memo) > self.cache_cap:
-            memo.clear()
-        n = len(texts)
-        points = np.zeros((n, N_LANGS), dtype=np.float32)
-        counts = np.zeros(n, dtype=np.int64)
-        tokens, tok_text, bounds, _, _ = self.preprocess_batch(list(texts))
-        for i in range(n):
-            lo, hi = bounds[i], bounds[i + 1]
-            if lo == hi:
-                continue
-            acc = np.zeros(N_LANGS, dtype=np.float32)
-            k_total = 0
-            for w in tokens[lo:hi]:
-                e = memo.get(w)
-                if e is None:
-                    grams = _shingles(f" {w} ", t)
-                    if grams:
-                        gidx = ot.lookup(hash_grams(grams))
-                        fi = gidx[gidx >= 0]
-                        k = len(fi)
-                        if k:
-                            v = np.zeros(N_LANGS, dtype=np.float32)
-                            off = ot.offsets
-                            for j in fi:
-                                s, en = int(off[j]), int(off[j + 1])
-                                np.add.at(v, ot.plang[s:en].astype(np.int64), ot.padj[s:en])
-                            v += PENALTY * np.float32(k)
-                            e = (v, k)
-                        else:
-                            e = (None, 0)
-                    else:
-                        e = (None, 0)
-                    memo[w] = e
-                if e[1]:
-                    acc += e[0]
-                    k_total += e[1]
-            if k_total:
-                points[i] = acc / np.float32(k_total)
-                counts[i] = k_total
-        valid = counts > 0
-        wi = np.argmin(points, axis=1)
-        # softmax over 10^(-points): p = 10^-x_w / Σ 10^-x
-        with np.errstate(over="ignore", under="ignore"):
-            expd = np.power(np.float64(10.0), -points.astype(np.float64))
-            denom = expd.sum(axis=1)
-            prob = expd[np.arange(n), wi] / np.where(denom > 0, denom, 1.0)
-        lang_idx = np.where(valid, _COLLAPSE_I[wi], ZXX)
-        prob = np.where(valid, prob, 0.0).astype(np.float32)
-        return LANGS_ARR[lang_idx], prob
+    def ft_identify_batch(self, texts):
+        """``ft_identify`` for a batch → (ft_lang object[n], ft_prob f32[n])."""
+        ctx = self.context(texts)
+        return tuple(ctx.scatter(a) for a in self.ft_identify(ctx))
 
     def identify_topk_batch(self, texts, k: int):
         """C6 batched: per text, top-k (collapsed lang, raw score) — one

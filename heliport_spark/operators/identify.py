@@ -19,7 +19,14 @@ Design notes for 100 TB:
   the JVM would copy it per-worker; instead every Python worker mmaps the
   same artifact files (``HELIPORT_MODEL_DIR`` or a cluster-shared path /
   ``SparkFiles`` archive), so resident cost is one page-cached copy per host.
-* ``spark.python.worker.reuse=true`` keeps the word memo warm across tasks.
+* ``spark.python.worker.reuse=true`` keeps the word memos warm across tasks.
+* one context per Arrow batch (``heli.BatchContext``): the UDF dedups the
+  batch's texts once, joins and lowers them once, runs P1-P4 and the token
+  span hashing once, and scoring, word-NLL, the fastText cross-check and
+  textstats all read that context over the distinct texts; the outputs are
+  scattered back to the batch rows once. Nothing keyed on batch contents
+  outlives the call — the only cross-call state is the per-worker word
+  memos.
 """
 
 from __future__ import annotations
@@ -52,6 +59,28 @@ def _get_worker_scorer(model_dir: str, exact: bool,
         )
         _WORKER_SCORERS[key] = sc
     return sc
+
+
+def identify_columns(scorer, texts, ignore_confidence: bool = False,
+                     with_ft: bool = False, with_word_nll: bool = False,
+                     with_text_stats: bool = False) -> pd.DataFrame:
+    """The body of ``identify_df``'s UDF for one batch of texts (str or
+    None): every output column, computed from one ``BatchContext``."""
+    ctx = scorer.context(texts)
+    res = scorer.identify_context(ctx, ignore_confidence, with_word_nll)
+    cols = dict(zip(("lang", "score", "raw_score", "cjk_pct"), res))
+    if with_ft:
+        cols["ft_lang"], cols["ft_prob"] = scorer.ft_identify(ctx)
+    if with_word_nll:
+        cols["word_nll"] = res[4]
+    if with_text_stats:
+        from ..textstats import text_stats_joined
+
+        stats = text_stats_joined(ctx.texts, ctx.raw, ctx.low)
+        cols.update(zip(
+            ("digit_ratio", "alpha_ratio", "rep_cand", "scrub_cand"), stats
+        ))
+    return pd.DataFrame({k: ctx.scatter(v) for k, v in cols.items()})
 
 
 def resolve_model_dir(model_dir: "str | None" = None) -> str:
@@ -126,30 +155,10 @@ def identify_df(
 
     @F.pandas_udf(returnType=struct_type)
     def heli_udf(texts: pd.Series) -> pd.DataFrame:
-        scorer = _get_worker_scorer(mdir, exact, langs_key)
-        tl = ["" if t is None else str(t) for t in texts]
-        res = scorer.identify_batch(
-            tl, ignore_confidence, with_word_nll=with_word_nll
+        return identify_columns(
+            _get_worker_scorer(mdir, exact, langs_key), texts.tolist(),
+            ignore_confidence, with_ft, with_word_nll, with_text_stats,
         )
-        labels, score, raw, cjk = res[:4]
-        out = pd.DataFrame(
-            {"lang": labels, "score": score, "raw_score": raw, "cjk_pct": cjk}
-        )
-        if with_ft:
-            ft_lang, ft_prob = scorer.ft_identify_batch(tl)
-            out["ft_lang"] = ft_lang
-            out["ft_prob"] = ft_prob
-        if with_word_nll:
-            out["word_nll"] = res[4]
-        if with_text_stats:
-            from ..textstats import text_stats_batch
-
-            dr, ar, rc, sc = text_stats_batch(tl)
-            out["digit_ratio"] = dr
-            out["alpha_ratio"] = ar
-            out["rep_cand"] = rc
-            out["scrub_cand"] = sc
-        return out
 
     # Non-deterministic marking (guide §4.4): a downstream filter on a
     # UDF-derived column (the pipeline's `keep`, the LID gate's lang

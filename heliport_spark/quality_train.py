@@ -344,8 +344,8 @@ def quality_scores(
     """Serve-side scoring (float64 (n,), sigmoid in [0,1]) — the ONE
     scoring implementation; the Spark UDF calls this per Arrow batch. Per
     DISTINCT word the bucket-weight sum and bucket count are memoized (the
-    same per-word structure as Scorer._ft_trained_batch), so a batch costs
-    one hash+gather per new vocabulary word, not per token.
+    same per-word structure as Scorer.ft_identify's word bank), so a batch
+    costs one hash+gather per new vocabulary word, not per token.
     Empty/whitespace text scores 0.0 (no evidence of fluency — gate-safe
     default)."""
     if memo is None:

@@ -204,19 +204,29 @@ def text_stats_batch(texts: "list") -> "tuple[np.ndarray, np.ndarray, np.ndarray
     scrub_cand bool[n]) for a batch of raw texts (None/non-str → as empty:
     ratios 0.0, candidates False — matching the NULL behavior of the
     Catalyst expressions each output replaces, see module docstring)."""
+    tl = [t if isinstance(t, str) else "" for t in texts]
+    return text_stats_joined(tl, "\n".join(tl))
+
+
+def text_stats_joined(texts: "list[str]", raw: str, low: "str | None" = None):
+    """``text_stats_batch`` over str ``texts`` given their ``'\\n'`` join
+    ``raw`` and, optionally, ``raw.lower()`` — the identify UDF passes the
+    scorer's per-batch join so the text is joined and lowered once.
+
+    ``'\\n'`` is ASCII whitespace and outside the phone class, so tokens
+    and phone/ssn runs never cross a text boundary; every output is a
+    function of its own text alone."""
     n = len(texts)
     digit_ratio = np.zeros(n, dtype=np.float64)
     alpha_ratio = np.zeros(n, dtype=np.float64)
     rep_cand = np.zeros(n, dtype=bool)
     scrub_cand = np.zeros(n, dtype=bool)
-    tl = [t if isinstance(t, str) else "" for t in texts]
-    lens = np.fromiter((len(t) for t in tl), dtype=np.int64, count=n)
-    joined = "".join(tl)
-    if not joined:
+    if not raw:
         return digit_ratio, alpha_ratio, rep_cand, scrub_cand
-    cp = np.frombuffer(joined.encode("utf-32-le"), dtype="<u4")
+    lens = np.fromiter((len(t) for t in texts), dtype=np.int64, count=n)
+    cp = np.frombuffer(raw.encode("utf-32-le"), dtype="<u4")
     text_start = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(lens, out=text_start[1:])
+    np.cumsum(lens + 1, out=text_start[1:])  # +1 for the separator
     t0, t1 = text_start[:-1], text_start[1:]
     code = class_table()[cp]  # one gather; bit tests below are int8-cheap
 
@@ -224,12 +234,10 @@ def text_stats_batch(texts: "list") -> "tuple[np.ndarray, np.ndarray, np.ndarray
     # per-text counts via two int8-masked reduceats accumulated in int64 —
     # no packed-table gather (the int64[0x110000] table is 8.5 MB of cache
     # pressure; two 3 MB flag masks + reduceats measured 9.7 → 6.3 ms per
-    # 10k batch) and no len(cp)-sized prefix-sum array. Trailing empty
-    # texts have t0 == len(cp) (invalid reduceat index): they are dropped
-    # — the last valid segment correctly sums to the buffer end — and
-    # interior empty texts (t0[i] == t0[i+1]) get a one-element value from
-    # reduceat, masked out below (only rows with lens > 0 are read).
-    # Integer adds: exact in any order.
+    # 10k batch) and no len(cp)-sized prefix-sum array. Each segment runs
+    # to the next text's start, so it includes the '\n' separator (counted
+    # as neither class); a trailing empty text has t0 == len(cp) (invalid
+    # reduceat index) and is dropped. Integer adds: exact in any order.
     dign = np.zeros(n, dtype=np.int64)
     letn = np.zeros(n, dtype=np.int64)
     valid = t0 < len(cp)
@@ -250,12 +258,6 @@ def text_stats_batch(texts: "list") -> "tuple[np.ndarray, np.ndarray, np.ndarray
     next_ns = np.empty_like(nonspace)
     next_ns[-1] = False
     next_ns[:-1] = nonspace[1:]
-    # texts are joined with NO separator: force token breaks at text edges
-    sb = t0[t0 < len(cp)]
-    prev_ns[sb] = False
-    eb = t1 - 1
-    eb = eb[(eb >= 0) & (eb < len(cp))]
-    next_ns[eb] = False
     s_idx = np.flatnonzero(nonspace & ~prev_ns)
     if len(s_idx) >= 4:  # a match spans >= 4 consecutive tokens
         e_idx = np.flatnonzero(nonspace & ~next_ns)
@@ -299,19 +301,16 @@ def text_stats_batch(texts: "list") -> "tuple[np.ndarray, np.ndarray, np.ndarray
         a4 = a2[:-2] & a2[2:]
         win_full = a4[:-4] & a4[4:]  # cp[i..i+7] all in class
         # full windows are rare on clean text: list their start positions
-        # and resolve owners directly instead of a second full prefix sum.
-        # Owner of the window START — runs touching a text boundary
-        # over-mark the earlier text (harmless over-approximation).
+        # and resolve owners directly instead of a second full prefix sum
         w_idx = np.flatnonzero(win_full)
         if len(w_idx):
             scrub_cand[
                 np.unique(np.searchsorted(t1, w_idx, side="right"))
             ] = True
-    low = joined.lower()
-    if any(w in low for w in _TOX_WORDS):
+    if any(w in (raw.lower() if low is None else low) for w in _TOX_WORDS):
         # rare branch: only entered when a batch globally contains a word
         tox = np.fromiter(
-            (any(w in t.lower() for w in _TOX_WORDS) for t in tl),
+            (any(w in t.lower() for w in _TOX_WORDS) for t in texts),
             dtype=bool, count=n,
         )
         scrub_cand |= tox

@@ -4,14 +4,14 @@ for gate time). Run manually after touching heli.py hot paths:
 
     python scripts/fuzz_scorer.py [n_examples]
 
-Targets the invariants the round-5 fast lanes rely on:
+Targets the invariants the fast lanes rely on:
   * fast ≡ exact (label bit-equal, score within 5e-4) on arbitrary unicode;
-  * batch-shape invariance through the exact-duplicate factorize shortcut
-    (n > 16, heavy duplication — the regime where the pandas NUL C-string
-    bug hid) and through the joined-lowercase fast path (embedded newlines
-    force the per-text fallback; case-expanding chars like 'İ' shift
-    separator offsets);
-  * word_nll batch invariance under the same stress;
+  * batch-shape invariance of everything the identify UDF computes from one
+    per-batch context — HeLI scores, word_nll, the fastText cross-check and
+    textstats — under heavy duplication (every batch is deduplicated
+    before scoring; NUL bytes must not merge texts) and through the
+    joined-lowercase fast path (embedded newlines force per-text lowering;
+    case-expanding chars like 'İ' shift separator offsets);
   * identify_topk_batch ≡ the per-row reference scan.
 Exit code 0 = all invariants held; first counterexample is printed and
 re-raised.
@@ -26,6 +26,7 @@ import numpy as np
 from hypothesis import given, settings, strategies as st
 
 from heliport_spark.heli import COLLAPSE, LANGS_ARR, PENALTY, Scorer
+from heliport_spark.textstats import text_stats_batch
 
 _FAST = Scorer()
 _EXACT = Scorer(exact=True)
@@ -42,13 +43,26 @@ text_strategy = st.one_of(
 
 
 def big_batches():
-    """Batches big enough (n > 16) with duplication heavy enough (2·uniq ≤ n)
-    to force the factorize shortcut."""
+    """Batches of more than 16 rows where every distinct text repeats."""
     return st.lists(text_strategy, min_size=2, max_size=12).flatmap(
         lambda base: st.integers(min_value=3, max_value=6).map(
             lambda k: base * k + base[:1] * max(0, 17 - len(base) * k)
         )
     )
+
+
+def ft_margin(text) -> float:
+    """Top-2 margin of the fastText softmax for one text (1.0 if no words)."""
+    ctx = _FAST.context([text])
+    M, bias = _FAST._ft_params()
+    rows = _FAST._ft_rows(ctx, M)
+    den = float(_FAST._ft_K[rows].sum())
+    if den == 0:
+        return 1.0
+    L = _FAST._ft_V[rows][ctx.flat_ids].sum(axis=0) / den + bias
+    p = np.exp(L - L.max())
+    p = np.sort(p / p.sum())
+    return float(p[-1] - p[-2])
 
 
 def run(n_examples: int) -> None:
@@ -67,17 +81,31 @@ def run(n_examples: int) -> None:
         f32 band (CLAUDE.md: < 5e-5): the dense branch is a BLAS sgemm whose
         blocking — and so f32 summation order — depends on the batch's row
         count, so bit-equality across widths is deliberately not promised
-        (the dedup shortcut makes equal texts bit-equal WITHIN a batch; the
+        (per-batch dedup makes equal texts bit-equal WITHIN a batch; the
         exact mode is the bit-stable reference order). Labels may only flip
         when the top-2 margin sits inside that band; word_nll follows the
-        pre-collapse winner id, so it is only pinned away from near-ties."""
+        pre-collapse winner id, so it is only pinned away from near-ties.
+        The fastText label and probability follow the same rule around
+        their own top-2 probability margin; textstats are per-text
+        functions, so they must be bit-equal."""
         tol = 5e-5
         l1, s1, r1, c1, w1 = _FAST.identify_batch(texts, with_word_nll=True)
+        fl1, fp1 = _FAST.ft_identify_batch(texts)
+        ts1 = text_stats_batch(texts)
         ref = Scorer(_FAST.model)
         for i in (0, len(texts) // 2, len(texts) - 1):
             l0, s0, r0, c0, w0 = ref.identify_batch(
                 [texts[i]], with_word_nll=True
             )
+            fl0, fp0 = ref.ft_identify_batch([texts[i]])
+            assert abs(float(fp1[i]) - float(fp0[0])) < tol, (
+                repr(texts[i]), fp1[i], fp0[0],
+            )
+            if fl1[i] != fl0[0]:
+                assert ft_margin(texts[i]) < tol, (repr(texts[i]), fl1[i], fl0[0])
+            ts0 = text_stats_batch([texts[i]])
+            for a, b in zip(ts1, ts0):
+                assert a[i] == b[0], (repr(texts[i]), a[i], b[0])
             assert abs(float(s1[i]) - float(s0[0])) < tol, (
                 repr(texts[i]), s1[i], s0[0],
             )

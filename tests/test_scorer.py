@@ -122,19 +122,20 @@ def test_duplicate_shortcut_nul_bytes_not_merged(fast_scorer):
     """pandas 2.x hashes str objects as C strings — everything after an
     embedded NUL is invisible to pd.factorize, so '\\x00A' used to merge
     with '' in the exact-duplicate shortcut and scatter the WRONG rows'
-    scores (hypothesis-found, pinned here deterministically). The NUL
-    fallback must keep such texts distinct AND stay batch-shape invariant."""
-    from heliport_spark.heli import Scorer, _factorize_texts
+    scores (hypothesis-found, pinned here deterministically). The per-batch
+    dedup is length-delimited: NUL texts stay distinct AND the results stay
+    batch-shape invariant."""
+    from heliport_spark.heli import Scorer, _dedup
 
     import numpy as np
 
-    # the factorize helper itself: NUL texts stay distinct
-    codes, uniq = _factorize_texts(["", "\x00A", "A\x00", "A", "\x00"] * 4)
+    # the dedup itself: NUL texts stay distinct
+    codes, uniq = _dedup(["", "\x00A", "A\x00", "A", "\x00"] * 4)
     assert len(uniq) == 5
     assert len(set(codes[:5])) == 5
 
     base = ["", "", "", "\x00A"]
-    big = base * 5  # n > 16 and 2·uniq ≤ n → shortcut fires
+    big = base * 5  # 20 rows, 2 distinct texts
     l1, s1, r1, c1, w1 = fast_scorer.identify_batch(big, with_word_nll=True)
     ref = Scorer(fast_scorer.model)
     l0, s0, r0, c0, w0 = ref.identify_batch(base, with_word_nll=True)
@@ -166,32 +167,100 @@ def test_hash_spans_long_token_matches_hash_grams():
     assert _hash_spans(cp, starts, lens).tolist() == hash_grams(words).tolist()
 
 
-def test_word_nll_dense_gather_matches_sorted_probe(fast_scorer, monkeypatch):
-    """word_nll_batch has two bit-identical lookup paths: the dense
-    (uniq word × distinct winner) gather and the sorted-key binary-search
-    fallback it replaced (engaged above _WNLL_DENSE_CELL_CAP). Pin their
-    equality on a mixed batch (known words, OOV, empty, CJK, duplicates)."""
+def test_word_nll_multi_block_matches_single_block(fast_scorer, monkeypatch):
+    """word_nll gathers from a dense (distinct word × winner lang) matrix
+    built in blocks of winner columns. A one-cell budget (one column per
+    block) must equal the single-block default on a mixed batch (known
+    words, OOV, empty, CJK, duplicates)."""
     import heliport_spark.heli as H
 
     texts = _mixed_corpus() + ["", "zzqqxx unknownword9", "你好世界 " * 4]
-    texts = texts * 3  # exercise the duplicate shortcut too
-    res_dense = fast_scorer.identify_batch(texts, with_word_nll=True)
+    texts = texts * 3
+    res_one = fast_scorer.identify_batch(texts, with_word_nll=True)
 
-    monkeypatch.setattr(H, "_WNLL_DENSE_CELL_CAP", -1)
-    fallback_scorer = Scorer()
-    res_fb = fallback_scorer.identify_batch(texts, with_word_nll=True)
-    assert list(res_dense[0]) == list(res_fb[0])
-    np.testing.assert_array_equal(res_dense[4], res_fb[4])
+    monkeypatch.setattr(H, "_WNLL_BLOCK_CELLS", 1)
+    res_many = Scorer().identify_batch(texts, with_word_nll=True)
+    assert len(set(res_one[0])) > 3  # several winner columns → many blocks
+    assert list(res_one[0]) == list(res_many[0])
+    np.testing.assert_array_equal(res_one[4], res_many[4])
 
 
-def test_dup_probe_soundness():
-    """_dup_probe_rules_out may only return True when the shortcut truly
-    cannot fire (2*uniq > n) — never on duplicate-heavy batches."""
-    from heliport_spark.heli import _dup_probe_rules_out
+def test_word_nll_empty_posting_list_is_penalty(fast_scorer):
+    """A hand-built order-0 table whose stored word has an EMPTY posting
+    list (model_compile never writes one) scores that word as OOV
+    (PENALTY) instead of raising IndexError."""
+    import copy
 
-    distinct = [f"text number {i}" for i in range(100)]
-    assert _dup_probe_rules_out(distinct)          # all unique: ruled out
-    dup = [distinct[i % 10] for i in range(100)]
-    assert not _dup_probe_rules_out(dup)           # 10 uniques: must probe
-    # non-str rows coerce to '' (matching _factorize_texts)
-    assert not _dup_probe_rules_out([None] * 50 + distinct[:10])
+    from heliport_spark.heli import PENALTY
+    from heliport_spark.model import OrderTable
+
+    h = np.sort(hash_grams(["hello", "world"]))
+    w_hello = int(np.flatnonzero(h == hash_grams(["hello"])[0])[0])
+    offsets = np.array([0, 0, 0], dtype=np.int64)
+    offsets[w_hello + 1:] = 1  # 'hello' has one posting, 'world' none
+    lang = 17
+    table = OrderTable(h, offsets, np.array([lang], np.int16),
+                       np.array([2.5], np.float32))
+    model = copy.copy(fast_scorer.model)
+    model.orders = [table] + list(fast_scorer.model.orders[1:])
+    sc = Scorer(model)
+    winners = np.array([lang, lang, lang])
+    got = sc.word_nll_batch(["world", "hello world", "world world"], winners)
+    assert got.tolist() == [PENALTY, (2.5 + PENALTY) / 2, PENALTY]
+
+
+def test_ft_span_path_matches_word_buckets(fast_scorer):
+    """Per-word fastText vectors and bucket counts from the span path are
+    bit-identical to the training-side definition
+    ``M[word_buckets(w)].sum(axis=0)`` / ``len(word_buckets(w))``."""
+    from heliport_spark.ft_train import word_buckets
+    from heliport_spark.heli import _ft_word_sums
+
+    M, _ = fast_scorer._ft_params()
+    words = ["a", "q" * 5000, "日本語", "é", "é́x", "ab" * 3, "i̇"]
+    cp = np.frombuffer(" ".join(words).encode("utf-32-le"), dtype="<u4")
+    lens = np.array([len(w) for w in words], dtype=np.int64)
+    starts = np.zeros(len(words), dtype=np.int64)
+    np.cumsum(lens[:-1] + 1, out=starts[1:])
+    V, K = _ft_word_sums(M, cp, starts, lens)
+    for i, w in enumerate(words):
+        bk = word_buckets(w)
+        ref = M[bk].sum(axis=0)
+        assert np.array_equal(V[i].view(np.uint32), ref.view(np.uint32)), w
+        assert K[i] == len(bk), w
+
+
+def test_ft_missing_artifact_is_explicit_error(fast_scorer, tmp_path):
+    """A model dir without ft_M.npy makes the fastText cross-check raise an
+    error naming the model dir (no silent fallback scorer)."""
+    import pytest
+
+    from heliport_spark.model import HeliModel
+
+    src = fast_scorer.model.dir
+    for f in src.iterdir():
+        if f.name != "ft_M.npy":
+            (tmp_path / f.name).symlink_to(f)
+    sc = Scorer(HeliModel(tmp_path))
+    assert sc.identify("hello world")[0]  # HeLI itself still works
+    with pytest.raises(FileNotFoundError, match=str(tmp_path)):
+        sc.ft_identify_batch(["hello world"])
+
+
+def test_seq_row_sums_matches_add_at():
+    """The shrinking-tail per-segment sum (ft text logits above the dense
+    cap, ft word bucket sums) is bit-identical to the np.add.at loop it
+    replaces, including empty segments and one long segment that finishes
+    in chunks."""
+    from heliport_spark.heli import _seq_row_sums
+
+    rng = np.random.default_rng(3)
+    V = rng.standard_normal((50, 242)).astype(np.float32)
+    lens = np.array([3, 0, 7, 1, 9000, 0, 2], dtype=np.int64)
+    start = np.zeros(len(lens), dtype=np.int64)
+    np.cumsum(lens[:-1], out=start[1:])
+    idx = rng.integers(0, 50, int(lens.sum()))
+    ref = np.zeros((len(lens), 242), dtype=np.float32)
+    np.add.at(ref, np.repeat(np.arange(len(lens)), lens), V[idx])
+    got = _seq_row_sums(V, idx, start, lens)
+    assert np.array_equal(got.view(np.uint32), ref.view(np.uint32))
