@@ -1127,6 +1127,20 @@ def simhash_pairs(df: DataFrame, text_col: str = "text",
     )
 
 
+def _release_cut(df: DataFrame) -> None:
+    """Free a superseded (local)checkpointed frame's blocks now instead of
+    at driver GC + ContextCleaner. A checkpointed Dataset's logical plan is
+    the ``LogicalRDD`` over the checkpointed RDD, so that RDD is the one to
+    unpersist (``queryExecution().toRdd()`` is a fresh scan RDD above it, so
+    unpersisting that freed nothing). Only call it once every frame still
+    in use reads a LATER cut. Best-effort: a reliable ``checkpoint()`` RDD
+    is not persisted and unpersist is a no-op."""
+    try:
+        df._jdf.queryExecution().logical().rdd().unpersist(False)
+    except Exception:
+        pass
+
+
 def _star_components(edges: DataFrame, _cut, max_iters: int) -> DataFrame:
     """Large-star/small-star connected components (Kiveris et al. 2014
     §3) over a SYMMETRIC, distinct, self-loop-free edge list — the
@@ -1182,10 +1196,7 @@ def _star_components(edges: DataFrame, _cut, max_iters: int) -> DataFrame:
             new_E.exceptAll(E).limit(1).count()
             + E.exceptAll(new_E).limit(1).count()
         )
-        try:
-            E._jdf.queryExecution().toRdd().unpersist(False)
-        except Exception:
-            pass
+        _release_cut(E)
         E = new_E
         if changed == 0:
             converged = True
@@ -1336,7 +1347,9 @@ def dup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
         par = pairs.sparkSession.sparkContext.defaultParallelism
         n_part = int(max(1, min(par, n_edges // 20_000 + 1)))
         if edges.rdd.getNumPartitions() > n_part:
+            wide = edges
             edges = _cut(edges.coalesce(n_part))
+            _release_cut(wide)
         labels = _cut(
             edges.select(F.col("src").alias("id"))
             .distinct()
@@ -1403,13 +1416,9 @@ def dup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
             # free the superseded round's checkpoint blocks now instead of
             # waiting for driver GC + ContextCleaner (otherwise up to
             # max_iters copies of the label table stay pinned in executor
-            # storage); toRdd() is the checkpointed RDD for a
-            # localCheckpoint'd frame — best-effort, semantics don't
-            # depend on it
-            try:
-                ckpt._jdf.queryExecution().toRdd().unpersist(False)
-            except Exception:
-                pass
+            # storage); the count above truncated new_labels' lineage, so
+            # nothing reads ckpt any more
+            _release_cut(ckpt)
             ckpt = new_labels
             # projection over the checkpointed frame (free) — drops the
             # convergence bookkeeping columns before the next round
