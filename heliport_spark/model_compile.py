@@ -93,6 +93,15 @@ def compile_model(
     verbose: bool = True,
     strict_confidence: bool = True,
 ) -> Path:
+    if langs is not None:
+        # fail loudly on unknown codes (typos would otherwise produce a
+        # valid-looking but empty artifact that scores pure penalty) BEFORE
+        # any I/O: a bad code must not create out_dir or need src_dir; the
+        # loader twin validates the same way (model.py T8 path)
+        langs = [l.strip() for l in langs]
+        bad = sorted(set(langs) - set(LANGS))
+        if bad:
+            raise ValueError(f"Language code(s) do not exist: {bad}")
     src = Path(src_dir)
     if out_dir is None:
         from .model import DEFAULT_MODEL_DIR
@@ -102,14 +111,6 @@ def compile_model(
     out.mkdir(parents=True, exist_ok=True)
 
     lang_list = {l.strip() for l in (src / "languagelist").read_text().splitlines() if l.strip()}
-    if langs is not None:
-        # fail loudly on unknown codes (typos would otherwise produce a
-        # valid-looking but empty artifact that scores pure penalty); the
-        # loader twin validates the same way (model.py T8 path)
-        langs = [l.strip() for l in langs]
-        bad = sorted(set(langs) - set(LANGS))
-        if bad:
-            raise ValueError(f"Language code(s) do not exist: {bad}")
     use_langs: list[str] = []
     for i, lang in enumerate(LANGS):
         if SPECIAL_MASK[i]:

@@ -53,6 +53,50 @@ def release_stages(stages: "dict[str, DataFrame]") -> None:
             pass  # best-effort: releasing cache must never fail the caller
 
 
+class _StageBook:
+    """Stage bookkeeping shared by :func:`curate_documents` and
+    :func:`curate_clips`: ``note`` exposes a frame under its stage name
+    (``stages=``), ``persist`` caches it (filled NOW when ``eager``), and
+    ``finish`` applies the ``eager`` lifecycle to the chain's result."""
+
+    def __init__(self, stages: "dict[str, DataFrame] | None", eager: bool):
+        self.stages = stages
+        self.eager = eager
+        self.persisted: "list[DataFrame]" = []
+
+    def note(self, name: str, frame: DataFrame) -> DataFrame:
+        if self.stages is not None:
+            self.stages[name] = frame
+        return frame
+
+    def persist(self, frame: DataFrame) -> DataFrame:
+        frame = frame.persist()
+        self.persisted.append(frame)
+        if self.eager:
+            # fill the cache NOW (code-review r7): the next stage reads
+            # this frame from 2-4 subtrees of one job (e.g. kept ⋈
+            # exact_dedup(kept)), and Spark's cache has no cross-task
+            # compute dedup — a cold cache re-runs the expensive upstream
+            # (the LID scorer UDF; decode+mel+langid for clips, measured
+            # 107 s → ~65 s at sf0.01) once per subtree. At 100 TB this
+            # count IS the parquet materialization between macro-stages.
+            frame.count()
+        return frame
+
+    def finish(self, out: DataFrame) -> DataFrame:
+        if not self.eager:
+            return out
+        # eager lifecycle: ONE action materializes the final curated table
+        # (filling the stage persists exactly once on the way), then every
+        # chain-owned intermediate is released — nothing this call pinned
+        # outlives it except the returned frame's own blocks, which the
+        # ContextCleaner frees when the caller drops the reference
+        out = out.localCheckpoint(eager=True)
+        for frame in self.persisted:
+            frame.unpersist()
+        return out
+
+
 def curate_documents(
     df: DataFrame,
     *,
@@ -140,32 +184,14 @@ def curate_documents(
     if decon not in ("exact", "bloom"):
         raise ValueError(f"unknown decon mode {decon!r}")
 
-    _persisted: "list[DataFrame]" = []
-
-    def _note(name: str, frame: DataFrame) -> DataFrame:
-        if stages is not None:
-            stages[name] = frame
-        return frame
-
-    def _persist(frame: DataFrame) -> DataFrame:
-        frame = frame.persist()
-        _persisted.append(frame)
-        if eager:
-            # fill the cache NOW (the curate_clips discipline, code-review
-            # r7): the next stage reads this frame from 2-4 subtrees of one
-            # job, and Spark's cache has no cross-task compute dedup — a
-            # cold cache re-runs the expensive upstream (the LID scorer
-            # UDF) once per subtree. At 100 TB this count IS the parquet
-            # materialization between macro-stages.
-            frame.count()
-        return frame
+    book = _StageBook(stages, eager)
 
     # 0a: source gate (source-level only; the per-doc Gopher predicate is
     # stage 4 so the stages stay orthogonal)
     reputable = source_reputation_filter(
         df, text_col=text_col, id_col=id_col, require_doc_keep=False
     ).select(id_col)
-    d = _note("source_gate", df.join(reputable, id_col, "left_semi"))
+    d = book.note("source_gate", df.join(reputable, id_col, "left_semi"))
 
     if lid:
         from .identify import identify_df
@@ -182,7 +208,7 @@ def curate_documents(
         )
         # several downstream branches re-read this frame; persist so the
         # scorer UDF runs ONCE (at 100 TB: materialize to parquet instead)
-        d = _note("lid_gate", _persist(d))
+        d = book.note("lid_gate", book.persist(d))
 
     if classifier:
         from .quality import classifier_score_df
@@ -190,9 +216,9 @@ def curate_documents(
         qd = classifier_score_df(
             d, text_col=text_col, threshold=classifier_threshold
         )
-        d = _note(
+        d = book.note(
             "classifier",
-            _persist(
+            book.persist(
                 qd.filter(F.col("qc_keep")).drop("qc_score", "qc_keep")
             ),
         )
@@ -202,7 +228,7 @@ def curate_documents(
     # regressed the chain 11.9 → 14.2 s — the eager fill of a text-bearing
     # frame costs more than the one extra fingerprint-agg + semi-join
     # recompute it would save).
-    ex = _note(
+    ex = book.note(
         "exact",
         d.join(
             exact_dedup(d, text_col=text_col, id_col=id_col).select(id_col),
@@ -227,11 +253,13 @@ def curate_documents(
     # bit-exactness is re-checked by the driver). At 100 TB the same
     # contract is a parquet materialization between macro-stages; persist
     # (MEMORY_AND_DISK default) is the single-session twin of that.
-    surv = _note("neardup", _persist(ex.join(losers, id_col, "left_anti")))
+    surv = book.note(
+        "neardup", book.persist(ex.join(losers, id_col, "left_anti"))
+    )
 
     # 3: decontamination against the held-out benchmark split
     bench = surv.filter(F.col(id_col) % decon_mod == 0)
-    corpus = _note("corpus", surv.filter(F.col(id_col) % decon_mod != 0))
+    corpus = book.note("corpus", surv.filter(F.col(id_col) % decon_mod != 0))
     if decon == "exact":
         contaminated = decontaminate(
             corpus, bench, n=decon_n, text_col=text_col, id_col=id_col
@@ -241,25 +269,27 @@ def curate_documents(
             corpus, bench, n=decon_n, m_bits=bloom_m_bits, k=bloom_k,
             text_col=text_col, id_col=id_col,
         ).select(F.col("id").alias(id_col))
-    decon_ok = _note(
+    decon_ok = book.note(
         "decon", corpus.join(contaminated, id_col, "left_anti")
     )
 
     # 4: Gopher per-doc quality gate
-    clean = _note(
+    clean = book.note(
         "gopher",
-        _persist(decon_ok.filter(gopher_keep_expr(F.col(text_col)))),
+        book.persist(decon_ok.filter(gopher_keep_expr(F.col(text_col)))),
     )
 
     # 5: per-language temperature resampling
     kept = temperature_resample(clean, id_col=id_col, group_col=lang_col)
-    scored = _note(
+    scored = book.note(
         "resampled",
-        _persist(clean.join(kept.select(id_col), id_col, "left_semi").select(
-            id_col,
-            lang_col,
-            F.round(T.stopword_ratio(F.col(text_col)), 6).alias("sw_ratio"),
-        )),
+        book.persist(
+            clean.join(kept.select(id_col), id_col, "left_semi").select(
+                id_col,
+                lang_col,
+                F.round(T.stopword_ratio(F.col(text_col)), 6).alias("sw_ratio"),
+            )
+        ),
     )
 
     # 6: CCNet head/middle/tail bucketing (labels, not drops)
@@ -267,17 +297,7 @@ def curate_documents(
         scored, "sw_ratio", group_col=lang_col, id_col=id_col,
         ascending=False, mode=bucket_mode,
     ).select(lang_col, id_col, "sw_ratio", "bucket", "bucket_label")
-    if not eager:
-        return out
-    # eager lifecycle: ONE action materializes the final curated table
-    # (filling the stage persists exactly once on the way), then every
-    # chain-owned intermediate is released — nothing this call pinned
-    # outlives it except the returned frame's own text-free blocks, which
-    # the ContextCleaner frees when the caller drops the reference
-    out = out.localCheckpoint(eager=True)
-    for frame in _persisted:
-        frame.unpersist()
-    return out
+    return book.finish(out)
 
 
 def curate_clips(
@@ -344,25 +364,7 @@ def curate_clips(
     from .corpus import decontaminate_bloom, temperature_resample
     from .dedup import dup_clusters, exact_dedup, simhash_pairs
 
-    _persisted: "list[DataFrame]" = []
-
-    def _note(name: str, frame: DataFrame) -> DataFrame:
-        if stages is not None:
-            stages[name] = frame
-        return frame
-
-    def _persist(frame: DataFrame) -> DataFrame:
-        frame = frame.persist()
-        _persisted.append(frame)
-        if eager:
-            # fill the cache NOW: the next stage references this frame from
-            # TWO subtrees of one job (e.g. kept ⋈ exact_dedup(kept)), and
-            # computing both concurrently against a cold cache re-runs the
-            # expensive upstream (decode+mel+langid) once per subtree —
-            # measured 107 s → ~65 s at sf0.01. At 100 TB this count IS the
-            # parquet materialization between macro-stages.
-            frame.count()
-        return frame
+    book = _StageBook(stages, eager)
 
     # 1: the flagship gate — langid + ppl + rules + scrub, one Arrow pass
     # (+ the trained-classifier DROP rule when ``classifier=True`` — the
@@ -406,10 +408,10 @@ def curate_clips(
         cols.append("aemb")
     # several downstream branches re-read the gate's survivors; persist the
     # text(+embedding) projection — bytes are gone from here on
-    kept = _note("filtered", _persist(kept0.select(*cols)))
+    kept = book.note("filtered", book.persist(kept0.select(*cols)))
 
     # 2: exact dedup of scrubbed transcripts
-    ex = _note(
+    ex = book.note(
         "exact",
         kept.join(
             exact_dedup(kept, text_col="scrubbed_text", id_col=id_col)
@@ -425,18 +427,20 @@ def curate_clips(
         .filter(F.col("is_canonical") == 0)
         .select(F.col("id").alias(id_col))
     )
-    surv = _note("neardup", _persist(ex.join(losers, id_col, "left_anti")))
+    surv = book.note(
+        "neardup", book.persist(ex.join(losers, id_col, "left_anti"))
+    )
 
     # 4: Bloom decontamination against the hash-held-out benchmark split
     is_bench = F.pmod(F.xxhash64(F.col(id_col)), F.lit(decon_mod)) == 0
     bench = surv.filter(is_bench)
-    corpus = _note("corpus", surv.filter(~is_bench))
+    corpus = book.note("corpus", surv.filter(~is_bench))
     contaminated = decontaminate_bloom(
         corpus, bench, n=decon_n, m_bits=bloom_m_bits, k=bloom_k,
         text_col="scrubbed_text", id_col=id_col,
     ).select(F.col("id").alias(id_col))
-    clean = _note(
-        "decon", _persist(corpus.join(contaminated, id_col, "left_anti"))
+    clean = book.note(
+        "decon", book.persist(corpus.join(contaminated, id_col, "left_anti"))
     )
 
     # 5: acoustic near-dup over what's left (optional)
@@ -453,9 +457,9 @@ def curate_clips(
             .filter(F.col("is_canonical") == 0)
             .select(F.col("id").alias(id_col))
         )
-        clean = _note(
+        clean = book.note(
             "audio_neardup",
-            _persist(clean.join(alosers, id_col, "left_anti")),
+            book.persist(clean.join(alosers, id_col, "left_anti")),
         )
 
     # 6: per-predicted-language temperature resampling
@@ -463,15 +467,10 @@ def curate_clips(
     keep_ids = temperature_resample(
         clean, id_col=id_col, group_col="lang", **kwargs
     )
-    out = _note(
+    out = book.note(
         "resampled",
         clean.join(keep_ids.select(id_col), id_col, "left_semi").select(
             "lang", id_col, F.round(F.col("confidence"), 4).alias("confidence")
         ),
     )
-    if not eager:
-        return out
-    out = out.localCheckpoint(eager=True)
-    for frame in _persisted:
-        frame.unpersist()
-    return out
+    return book.finish(out)

@@ -716,6 +716,30 @@ wf AS (SELECT DISTINCT id, ({pmax} - (mkey % {pmod}))::BIGINT AS pos,
        FROM mk WHERE i >= {w} OR i = ng)"""
 
 
+def _capped_overlap_pairs(fps: DataFrame, min_shared: int,
+                          max_bucket: "int | None") -> DataFrame:
+    """(id_a, id_b, n_shared) over an (id, fp[, ...]) fingerprint frame:
+    pairs sharing >= min_shared distinct fingerprint values, through the
+    MAX_BUCKET-capped banded self-join — the one pair builder behind
+    winnow_overlap_pairs and winnow_shared_spans."""
+    # Explicit fp-keyed repartition before the banded self-join: the rank
+    # window's planner exchange is AQE-coalesced to the PRE-join size (the
+    # (id, fp) table is tiny next to its C(min(n,cap),2) pair fan-out), so
+    # the join + partial count ran on a handful of fat tasks (guide §2.5 —
+    # explode-after-coalesce; measured 5 partitions carrying 26M pair rows
+    # at sf0.1). An explicit repartition is not coalesced, satisfies the
+    # window's clustering requirement (no extra exchange), and is derived
+    # from defaultParallelism, not a constant.
+    par = fps.sparkSession.sparkContext.defaultParallelism
+    fp = fps.select("id", "fp").distinct().repartition(par * 2, "fp")
+    return (
+        capped_bucket_pairs(fp, ["fp"], max_bucket)
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("n_shared"))
+        .filter(F.col("n_shared") >= min_shared)
+    )
+
+
 def winnow_overlap_pairs(df: DataFrame, text_col: str = "text",
                          id_col: str = "doc_id", k: int = WINNOW_K,
                          w: int = WINNOW_W, min_shared: int = 2,
@@ -728,33 +752,16 @@ def winnow_overlap_pairs(df: DataFrame, text_col: str = "text",
     through the same MAX_BUCKET cap as every other banded self-join —
     overflow members keep only their representative link, so n_shared
     undercounts inside capped buckets (see MAX_BUCKET)."""
-    # Explicit fp-keyed repartition before the banded self-join: the rank
-    # window's planner exchange is AQE-coalesced to the PRE-join size (the
-    # (id, fp) table is tiny next to its C(min(n,cap),2) pair fan-out), so
-    # the join + partial count ran on a handful of fat tasks (guide §2.5 —
-    # explode-after-coalesce; measured 5 partitions carrying 26M pair rows
-    # at sf0.1). An explicit repartition is not coalesced, satisfies the
-    # window's clustering requirement (no extra exchange), and is derived
-    # from defaultParallelism, not a constant.
-    par = df.sparkSession.sparkContext.defaultParallelism
-    fp = (
-        winnow_fingerprints(df, text_col, id_col, k, w)
-        .select("id", "fp")
-        .distinct()
-        .repartition(par * 2, "fp")
-    )
-    return (
-        capped_bucket_pairs(fp, ["fp"], max_bucket)
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+    return _capped_overlap_pairs(
+        winnow_fingerprints(df, text_col, id_col, k, w), min_shared,
+        max_bucket,
     )
 
 
-def winnow_shared_spans(df: DataFrame, pairs: "DataFrame | None" = None,
-                        text_col: str = "text", id_col: str = "doc_id",
-                        k: int = WINNOW_K, w: int = WINNOW_W,
-                        min_fps: int = 2, min_shared: int = 2,
+def winnow_shared_spans(df: DataFrame, text_col: str = "text",
+                        id_col: str = "doc_id", k: int = WINNOW_K,
+                        w: int = WINNOW_W, min_fps: int = 2,
+                        min_shared: int = 2,
                         max_bucket: "int | None" = MAX_BUCKET) -> DataFrame:
     """WHERE two documents share content, not just THAT they do (VERDICT r6
     next #7): per overlap pair, the shared spans as
@@ -776,10 +783,8 @@ def winnow_shared_spans(df: DataFrame, pairs: "DataFrame | None" = None,
     40-bit hash match is (rarely) a collision, and a one-fp span carries no
     alignment evidence.
 
-    ``pairs``: optional (id_a, id_b) candidate list — the pair-list-driven
-    contract of jaccard_verify_pairs (drive it from winnow_overlap_pairs'
-    output, reusing work you already paid for); default recomputes the
-    capped overlap pairs at ``min_shared``.
+    Candidate pairs are winnow_overlap_pairs' capped overlap pairs at
+    ``min_shared``, built from the same materialized fingerprints.
 
     Scale shape: fingerprints (the only corpus-wide work) computed ONCE and
     self-joined per-pair through two equi-joins keyed (id, fp) — candidate
@@ -795,28 +800,13 @@ def winnow_shared_spans(df: DataFrame, pairs: "DataFrame | None" = None,
     # materialized (id, pos, fp) blocks (~1/w of gram count — the same
     # "fingerprint table materializes once" contract the minhash scale
     # notes document; ContextCleaner frees the blocks when the result is
-    # dropped). Callers wanting full laziness pass `pairs=` and their own
-    # staged fps.
+    # dropped).
     fps = winnow_fingerprints(df, text_col, id_col, k, w).localCheckpoint(
         eager=True
     )
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if pairs is None:
-        # winnow_overlap_pairs' computation verbatim over the shared frame
-        # (including its explicit fp-keyed repartition — see the comment
-        # there: the rank window's exchange is otherwise AQE-coalesced to
-        # the PRE-fan-out size and the banded self-join + count run on a
-        # handful of fat tasks)
-        fpd = fps.select("id", "fp").distinct().repartition(par * 2, "fp")
-        pairs = (
-            capped_bucket_pairs(fpd, ["fp"], max_bucket)
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("n_shared"))
-            .filter(F.col("n_shared") >= min_shared)
-            .select("id_a", "id_b")
-        )
-    else:
-        pairs = pairs.select("id_a", "id_b")
+    pairs = _capped_overlap_pairs(fps, min_shared, max_bucket).select(
+        "id_a", "id_b"
+    )
     a = fps.select(F.col("id").alias("id_a"), F.col("fp"),
                    F.col("pos").alias("a_pos"))
     b = fps.select(F.col("id").alias("id_b"), F.col("fp"),
@@ -1141,120 +1131,24 @@ def _release_cut(df: DataFrame) -> None:
         pass
 
 
-def _star_components(edges: DataFrame, _cut, max_iters: int) -> DataFrame:
-    """Large-star/small-star connected components (Kiveris et al. 2014
-    §3) over a SYMMETRIC, distinct, self-loop-free edge list — the
-    edge-contracting twin of min-label propagation, shared return shape
-    (id, cluster_id, is_canonical).
-
-    Per round (both halves keep every edge pointing big → small):
-
-    * LARGE-star: for every node u with neighbourhood Γ(u), attach each
-      strictly-larger neighbour v to m = min(Γ(u) ∪ {u}): emit (v, m).
-      Long tails re-root onto local minima in parallel.
-    * SMALL-star: group the resulting pointer edges by their LARGER
-      endpoint v; with m* = min of v's (all-smaller) parents, re-attach
-      each parent p to m* and v itself to m*: emit (p, m*) ∪ {(v, m*)}.
-      Multi-parent nodes collapse their parent set onto one root.
-
-    Fixpoint: the directed edge set stops changing — then it is a forest
-    of depth-1 stars rooted at each component's MINIMUM node (the paper's
-    invariant), reached in O(log² n) rounds regardless of diameter. The
-    convergence check is a subtract+count over the (shrinking,
-    checkpointed) edge set. Raises on non-convergence like the label
-    mode — partial pointers are silently wrong cluster ids."""
-    # directed big → small pointer edges; the symmetric input already has
-    # both orientations, so keeping dst < src loses nothing
-    E = _cut(edges.filter(F.col("dst") < F.col("src")))
-    nodes = edges.select(F.col("src").alias("id")).distinct()
-    converged = False
-    for _ in range(max_iters):
-        sym = E.unionByName(
-            E.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        mn = sym.groupBy("src").agg(F.min("dst").alias("_mn"))
-        m = F.least(F.col("src"), F.col("_mn"))
-        large = (
-            sym.join(mn, "src")
-            .filter(F.col("dst") > F.col("src"))
-            .select(F.col("dst").alias("src"), m.alias("dst"))
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-        )
-        mn2 = large.groupBy("src").agg(F.min("dst").alias("_mn"))
-        small = (
-            large.join(mn2, "src")
-            .select(F.col("dst").alias("src"), F.col("_mn").alias("dst"))
-            .unionByName(
-                mn2.select("src", F.col("_mn").alias("dst"))
-            )
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-        )
-        new_E = _cut(small)
-        changed = (
-            new_E.exceptAll(E).limit(1).count()
-            + E.exceptAll(new_E).limit(1).count()
-        )
-        _release_cut(E)
-        E = new_E
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"star components did not converge in {max_iters} rounds"
-        )
-    # stars: every non-root appears as src with its root as dst (min over
-    # parents is a no-op at fixpoint but keeps the read side defensive);
-    # roots never appear as src and label themselves
-    child = E.groupBy("src").agg(F.min("dst").alias("lab")).select(
-        F.col("src").alias("id"), "lab"
-    )
-    return (
-        nodes.join(child, "id", "left")
-        .withColumn("lab", F.coalesce(F.col("lab"), F.col("id")))
-        .select(
-            "id",
-            F.col("lab").alias("cluster_id"),
-            (F.col("id") == F.col("lab")).cast("int").alias("is_canonical"),
-        )
-    )
-
-
 def dup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
                  max_iters: int = 50,
-                 checkpoint_dir: "str | None" = None,
-                 algorithm: str = "label") -> DataFrame:
+                 checkpoint_dir: "str | None" = None) -> DataFrame:
     """Connected components over near-duplicate PAIRS → one row per node:
     (id, cluster_id = min id in its component, is_canonical ∈ {0,1}).
     The missing last step of every dedup path: candidate pairs (MinHash /
     SimHash / Jaccard verify) become clusters, and dedup keeps exactly the
     canonical row per cluster.
 
-    ``algorithm="label"`` (default, the oracle-checked path): iterative
-    min-label propagation — each round every node takes the min label among
-    itself and its neighbours, so labels spread one hop per round and the
-    loop converges in ≤ diameter rounds (near-dup components are short
-    chains in practice), with pointer jumping engaging after 3 rounds
-    (O(log diameter) on deep components). Each round is one equi-join over
-    the FULL edge list + one map-side-combinable min aggregate; the
-    convergence check is a filter-count over the freshly checkpointed
-    label table.
-
-    ``algorithm="star"``: alternating large-star/small-star (Kiveris et
-    al. 2014 §3) — each round rewires strictly-larger neighbours (then
-    smaller neighbours) onto the neighbourhood minimum, so the edge set
-    itself CONTRACTS toward rooted stars: O(log² n) rounds regardless of
-    component shape, and — unlike label propagation — the per-round join
-    input SHRINKS as components collapse (the 100 TB argument: a
-    pathological web-mirror component with millions of near-identical
-    pages costs label propagation the full edge list every round; star
-    rounds collapse it geometrically). Output is IDENTICAL (component min
-    as the label — equality with the default mode is pinned in tests);
-    rows-only at the driver because the default mode carries the oracle.
-
-    ``localCheckpoint`` cuts lineage growth per round in both modes.
+    Iterative min-label propagation: each round every node takes the min
+    label among itself and its neighbours, so labels spread one hop per
+    round and the loop converges in ≤ diameter rounds (near-dup components
+    are short chains in practice), with pointer jumping engaging after 3
+    rounds (O(log diameter) on deep components). Each round is one
+    equi-join over the FULL edge list + one map-side-combinable min
+    aggregate; the convergence check is a filter-count over the freshly
+    checkpointed label table. ``localCheckpoint`` cuts lineage growth per
+    round.
 
     Fault tolerance (VERDICT r03 #3): the default per-round lineage cut is
     ``localCheckpoint`` — truncated lineage into NON-RELIABLE executor-local
@@ -1270,13 +1164,6 @@ def dup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     them with spark.cleaner.referenceTracking.cleanCheckpoints=true).
 
     Oracle-portable: min-reachable-label is a recursive CTE in DuckDB."""
-    # validate BEFORE any global-state mutation: the setCheckpointDir call
-    # below mutates SparkContext state that is only restored by the
-    # try/finally around the propagation loop — raising between the two
-    # would leave the caller's checkpoint dir permanently redirected
-    # (ADVICE r6 #1)
-    if algorithm not in ("label", "star"):
-        raise ValueError(f"unknown algorithm {algorithm!r}")
     prev_ckpt_dir = None
     if checkpoint_dir is not None:
         sc = pairs.sparkSession.sparkContext
@@ -1311,19 +1198,14 @@ def dup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
             )
         sc.setCheckpointDir(checkpoint_dir)
 
-    def _cut(df: DataFrame) -> DataFrame:
-        if checkpoint_dir is not None:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
-    def _cut_lazy(df: DataFrame) -> DataFrame:
-        # lazy variant for frames whose first action immediately follows:
+    def _cut(df: DataFrame, eager: bool = True) -> DataFrame:
+        # eager=False for frames whose first action immediately follows:
         # the action materializes the checkpoint, so eager=True's separate
         # materialization job would be pure per-round latency (the loop
         # below counts the fresh frame right after cutting it)
         if checkpoint_dir is not None:
-            return df.checkpoint(eager=False)
-        return df.localCheckpoint(eager=False)
+            return df.checkpoint(eager=eager)
+        return df.localCheckpoint(eager=eager)
 
     edges = pairs.select(
         F.col(id_a).alias("src"), F.col(id_b).alias("dst")
@@ -1335,8 +1217,6 @@ def dup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     # generation (LSH banding etc.) through the lazy lineage
     try:
         edges = _cut(edges)
-        if algorithm == "star":
-            return _star_components(edges, _cut, max_iters)
         # size the loop's frames from the MATERIALIZED edge count (cheap —
         # cached blocks), not spark.sql.shuffle.partitions: a small pair
         # graph otherwise drags 32+ near-empty tasks through every round's
@@ -1403,10 +1283,11 @@ def dup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
             u = parts[0]
             for extra in parts[1:]:
                 u = u.union(extra)
-            new_labels = _cut_lazy(
+            new_labels = _cut(
                 u.groupBy("id")
                 .agg(F.min("lab").alias("lab"), F.max("old").alias("old"))
-                .withColumn("_chg", F.col("lab") != F.col("old"))
+                .withColumn("_chg", F.col("lab") != F.col("old")),
+                eager=False,
             )
             # this count is the round's ONE action: it materializes the
             # lazy checkpoint (every partition is scanned, so all blocks
@@ -1428,8 +1309,7 @@ def dup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
         if changed != 0:
             # partially-propagated labels are silently WRONG cluster ids —
             # fail loudly instead (a component with diameter > max_iters
-            # means the pair graph is not near-dup-shaped; raise max_iters
-            # or switch to a large-star/small-star O(log n) scheme)
+            # means the pair graph is not near-dup-shaped; raise max_iters)
             raise RuntimeError(
                 f"dup_clusters did not converge in {max_iters} rounds "
                 f"({changed} labels still changing)"

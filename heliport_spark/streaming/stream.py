@@ -227,31 +227,6 @@ def streaming_exact_dedup(
     )
 
 
-def minhash_band_keys_expr(text, bands: "int | None" = None):
-    """Per-row MinHash band keys as a PURE PROJECTION (no shuffle): the
-    stream-safe twin of ``operators/dedup.minhash_lsh_candidates``'s
-    explode→aggregate signature computation. SAME constants
-    (MINHASH_PARAMS / LSH_BANDS / 5-char shingles / h60), so a row gets the
-    identical band signature in batch and streaming.
-
-    Returns array<struct<band:int, sig:string>>. Uses higher-order
-    functions (interpreted per element) — fine for stream rates; the batch
-    path keeps the faster hash-aggregate form."""
-    from ..operators.dedup import (
-        LSH_BANDS,
-        MERSENNE_P,
-        MINHASH_PARAMS,
-        h60,
-        shingles_expr,
-    )
-
-    bands = bands or LSH_BANDS
-    hs = F.transform(
-        shingles_expr(text, 5), lambda s: h60(s) % F.lit(MERSENNE_P)
-    )
-    return band_keys_from_hashes(hs, bands)
-
-
 def shingle_hashes_expr(text):
     """array<bigint> of h60-mod-p shingle hashes — project this ONCE as a
     named column before ``band_keys_from_hashes``: higher-order functions
@@ -304,7 +279,9 @@ def streaming_minhash_candidates(
 ):
     """Streaming near-duplicate CANDIDATE detection: the stateful twin of
     the batch MinHash-LSH operator. Each row projects to its LSH band keys
-    (``minhash_band_keys_expr`` — no shuffle before the stateful stage);
+    (``shingle_hashes_expr`` → ``band_keys_from_hashes``: a pure projection
+    with the batch operator's constants, no shuffle before the stateful
+    stage);
     state is keyed by (band, sig) and holds the first
     ``max_ids_per_bucket`` ids seen in that bucket, so a new arrival emits
     one candidate pair per stored same-bucket id — across micro-batches,
@@ -465,15 +442,6 @@ def salted_minhash_sig_from(sh):
     )
 
 
-def salted_minhash_sig_expr(text):
-    """Convenience wrapper of ``salted_minhash_sig_from`` taking raw text —
-    use ONLY in one-off projections; hot paths should share a pre-projected
-    shingle column (see streaming_minhash_verified)."""
-    from ..operators.dedup import shingles_expr
-
-    return salted_minhash_sig_from(shingles_expr(text, 5))
-
-
 # memo bound for the UDF path: distinct 5-char shingles seen per worker
 # (boilerplate streams repeat shingles heavily — that repetition is the
 # whole speedup; a full reset beats per-entry eviction, same policy as the
@@ -486,7 +454,7 @@ def minhash_features_udf():
     near-dup stages: text → struct<hs: array<bigint>, sig: array<bigint>>
     where ``hs`` are the h60-mod-p DISTINCT-shingle hashes (the affine band
     family's input) and ``sig`` the H salted minhashes — BIT-IDENTICAL to
-    ``shingle_hashes_expr`` / ``salted_minhash_sig_expr`` (pinned by
+    ``shingle_hashes_expr`` / ``salted_minhash_sig_from`` (pinned by
     tests/test_streaming.py + a hypothesis sweep).
 
     Why a UDF beats the expression here (measured, see BENCH.md): the
@@ -577,7 +545,6 @@ def streaming_minhash_verified(
     max_ids_per_bucket: int = 8,
     threshold: float = 0.5,
     ttl_ms: "int | None" = None,
-    use_arrow: bool = True,
     event_time_col: "str | None" = None,
     watermark_delay: "str | None" = None,
 ):
@@ -585,8 +552,8 @@ def streaming_minhash_verified(
     in — the streaming twin of batch ``minhash_jaccard_estimate`` (VERDICT
     r03 #4: candidates-only forced streaming users to drop to batch for
     confirmed dups). Same shape as ``streaming_minhash_candidates``, but
-    each row also projects its SALTED signature (``salted_minhash_sig_expr``
-    — shared constants with the batch estimator), the bucket state stores
+    each row also projects its SALTED signature (``minhash_features_udf`` —
+    shared constants with the batch estimator), the bucket state stores
     (id, signature) instead of id alone, and a pair is emitted only when the
     Broder estimate clears ``threshold``: est = matching-function fraction,
     thresholded as an exact integer count (⌈threshold·H⌉, no float compare —
@@ -707,43 +674,20 @@ def streaming_minhash_verified(
             F.unix_millis(F.col(event_time_col).cast("timestamp")).alias("_evt")
         ]
     evt_cols = ["_evt"] if event_mode else []
-    # NULL transcripts are scored as '' in BOTH implementations (the UDF
-    # maps None→'' internally; the expression path would otherwise emit
-    # NULL-propagated signatures that differ representationally)
+    # NULL transcripts are scored as ''
     txt = F.coalesce(F.col(text_col), F.lit(""))
-    if use_arrow:
-        # Arrow-batched hash features with a per-worker shingle memo —
-        # measured 3.4× the interpreted-HOF expression path end-to-end
-        # (~6k → ~20k rows/s; the residual is the stateful stage itself,
-        # BENCH.md); bit-identical values (parity pinned in tests)
-        fcol = minhash_features_udf()(txt)
-        base = rows.select(
-            F.col(id_col).cast("string").alias("id"), fcol.alias("_f"), *extra
-        ).select(
-            "id",
-            F.col("_f.hs").alias("_hs"),
-            F.col("_f.sig").alias("sig"),
-            *evt_cols,
-        )
-    else:
-        from ..operators.dedup import MERSENNE_P as _P
-        from ..operators.dedup import h60 as _h60
-        from ..operators.dedup import shingles_expr as _shingles
-
-        # the shingle ARRAY is projected once as a named column and BOTH
-        # hash families derive from it (HOFs are CodegenFallback)
-        base = rows.select(
-            F.col(id_col).cast("string").alias("id"),
-            _shingles(txt, 5).alias("_sh"),
-            *extra,
-        ).select(
-            "id",
-            F.transform(
-                F.col("_sh"), lambda s: _h60(s) % F.lit(_P)
-            ).alias("_hs"),
-            salted_minhash_sig_from(F.col("_sh")).alias("sig"),
-            *evt_cols,
-        )
+    # Arrow-batched hash features with a per-worker shingle memo — measured
+    # 3.4× the interpreted-HOF expression path end-to-end (~6k → ~20k
+    # rows/s; the residual is the stateful stage itself, BENCH.md)
+    fcol = minhash_features_udf()(txt)
+    base = rows.select(
+        F.col(id_col).cast("string").alias("id"), fcol.alias("_f"), *extra
+    ).select(
+        "id",
+        F.col("_f.hs").alias("_hs"),
+        F.col("_f.sig").alias("sig"),
+        *evt_cols,
+    )
     keyed = (
         base.select(
             "id", "sig",

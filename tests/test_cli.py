@@ -58,19 +58,29 @@ def test_identify_not_strict_confidence():
     """-n/--not-strict parity (reference identify -n, src/cli/identify.rs:
     47-51): a confidenceThresholds override file missing one language fails
     the strict default load and passes under -n (missing lang → threshold 0,
-    languagemodel.rs:214+)."""
+    languagemodel.rs:214+). The override is written from the committed
+    model's thresholds, so no reference model directory is needed."""
     import os
     import tempfile
 
-    src = "/root/repo/models/heli"
+    import numpy as np
+
+    from heliport_spark.langs import LANGS, SPECIAL_MASK
+    from heliport_spark.model import DEFAULT_MODEL_DIR
+
+    src = str(DEFAULT_MODEL_DIR)
     with tempfile.TemporaryDirectory(prefix="hs_notstrict_") as d:
         for f in os.listdir(src):
             os.symlink(os.path.join(src, f), os.path.join(d, f))
-        # thresholds copied from the reference model, minus one language
-        ref = "/root/reference/LanguageModels/confidenceThresholds"
-        lines = open(ref, encoding="utf-8").read().splitlines()
-        kept = [ln for ln in lines if not ln.startswith("spa\t")]
-        assert len(kept) == len(lines) - 1
+        # the committed thresholds as a plain override file, minus one
+        # language (repr of the f32 value parses back to the same f32)
+        conf = np.load(os.path.join(src, "confidence.npy"))
+        kept = [
+            f"{lang}\t{float(conf[i])!r}"
+            for i, lang in enumerate(LANGS)
+            if not SPECIAL_MASK[i] and lang != "spa"
+        ]
+        assert len(kept) == int((~SPECIAL_MASK).sum()) - 1
         with open(os.path.join(d, "confidenceThresholds"), "w") as fh:
             fh.write("\n".join(kept) + "\n")
         strict = run_cli(["identify", "-m", d], stdin="Hola, ¿qué tal?\n")

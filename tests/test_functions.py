@@ -684,7 +684,8 @@ def test_minhash_estimate_brackets_exact_jaccard(spark):
 
 def test_dup_clusters_components(spark):
     """Chains and cycles collapse to min-id components; exactly one
-    canonical per cluster; partitioning-invariant."""
+    canonical per cluster; partitioning-invariant; string ids label by
+    their string minimum; non-convergence raises."""
     from heliport_spark.operators.dedup import dup_clusters
 
     pairs = spark.createDataFrame(
@@ -710,52 +711,30 @@ def test_dup_clusters_components(spark):
     )
     deep = {r["id"]: r["cluster_id"] for r in dup_clusters(chain).collect()}
     assert len(deep) == 200 and all(v == 0 for v in deep.values())
+    # an exhausted round budget raises instead of returning partial labels
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dup_clusters(chain, max_iters=1)
+    # string ids whose lexical order differs from their numeric order
+    # ("10" < "11" < "9"): same components as the bigint run, labelled by
+    # the STRING minimum
+    num = [(9, 10), (10, 11), (99, 100), (7, 8)]
+    by_num = dup_clusters(spark.createDataFrame(num, "id_a bigint, id_b bigint"))
+    by_str = dup_clusters(spark.createDataFrame(
+        [(str(a), str(b)) for a, b in num], "id_a string, id_b string"
+    ))
 
+    def parts(rows):
+        comp = {}
+        for r in rows:
+            comp.setdefault(r["cluster_id"], set()).add(str(r["id"]))
+        return comp
 
-def test_dup_clusters_star_equals_label(spark):
-    """algorithm="star" (large-star/small-star, the edge-contracting
-    O(log² n) mode) must return EXACTLY the default label-propagation
-    mode's output: on chains/cycles/pairs, on a 200-node path (deep
-    component — star must converge in far fewer than 199 rounds), and on
-    the real sf0.01 simhash pair graph. Bad algorithms fail loudly:
-    max_iters exhaustion raises in both modes."""
-    from pyspark.sql import functions as F
-
-    from heliport_spark.operators.dedup import dup_clusters, simhash_pairs
-
-    def as_map(df):
-        return {r["id"]: (r["cluster_id"], r["is_canonical"])
-                for r in df.collect()}
-
-    shapes = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11),
-         (20, 21), (21, 22), (22, 20),
-         (30, 33), (31, 33), (32, 33)],          # star already (big hub)
-        "id_a bigint, id_b bigint",
+    str_comp = parts(by_str.collect())
+    assert sorted(map(sorted, str_comp.values())) == sorted(
+        map(sorted, parts(by_num.collect()).values())
     )
-    assert as_map(dup_clusters(shapes, algorithm="star")) == as_map(
-        dup_clusters(shapes)
-    )
-    # deep path: the star alternation contracts geometrically — cap the
-    # round budget far below the 199 plain label rounds the path needs
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(199)], "id_a bigint, id_b bigint"
-    )
-    star_deep = as_map(dup_clusters(chain, algorithm="star", max_iters=12))
-    assert star_deep == as_map(dup_clusters(chain))
-    # real near-dup graph (string ids exercise non-numeric ordering)
-    d = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    p = simhash_pairs(d).select(
-        F.col("id_a").cast("string").alias("id_a"),
-        F.col("id_b").cast("string").alias("id_b"),
-    )
-    assert as_map(dup_clusters(p, algorithm="star")) == as_map(
-        dup_clusters(p)
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        dup_clusters(chain, algorithm="star", max_iters=1)
+    assert all(lab == min(ids) for lab, ids in str_comp.items())
+    assert set(str_comp) == {"10", "100", "7"}
 
 
 def test_dup_clusters_reliable_checkpoint(spark, tmp_path):
@@ -795,26 +774,6 @@ def test_dup_clusters_reliable_checkpoint(spark, tmp_path):
         os.path.join(dp, f) for dp, _, fs in os.walk(ckpt) for f in fs
     ]
     assert written, "reliable checkpoint dir received no files"
-
-
-def test_dup_clusters_bad_algorithm_no_ckpt_mutation(spark, tmp_path):
-    """ADVICE r6 #1: an invalid algorithm name must raise BEFORE the
-    checkpoint-dir mutation — dup_clusters(..., algorithm='typo') used to
-    permanently redirect the app's global checkpoint dir (the validation
-    sat between setCheckpointDir and the try/finally that restores it)."""
-    import pytest as _pytest
-
-    from heliport_spark.operators.dedup import dup_clusters
-
-    pairs = spark.createDataFrame([(1, 2)], "id_a bigint, id_b bigint")
-    caller_dir = str(tmp_path / "caller_ckpt")
-    spark.sparkContext.setCheckpointDir(caller_dir)
-    before = spark.sparkContext._jsc.sc().getCheckpointDir().get()
-    with _pytest.raises(ValueError, match="unknown algorithm"):
-        dup_clusters(pairs, checkpoint_dir=str(tmp_path / "bad"),
-                     algorithm="typo")
-    after = spark.sparkContext._jsc.sc().getCheckpointDir().get()
-    assert after == before  # untouched, not even a fresh UUID under caller
 
 
 def test_ngram_repetition_per_doc(spark):

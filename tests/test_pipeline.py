@@ -335,11 +335,14 @@ def test_no_resume_resets_stale_manifest(spark):
         shutil.rmtree(out, ignore_errors=True)
 
 
-def test_compile_model_rejects_unknown_lang():
+def test_compile_model_rejects_unknown_lang(tmp_path):
     from heliport_spark.model_compile import compile_model
 
+    out_dir = tmp_path / "never_written_model"
     with pytest.raises(ValueError, match="egn"):
-        compile_model(langs=["egn"], out_dir="/tmp/never_written_model")
+        compile_model(langs=["egn"], out_dir=out_dir)
+    # validated before any I/O: the output dir is never created
+    assert not out_dir.exists()
 
 
 def test_lang_stats_salted(spark, filtered):
