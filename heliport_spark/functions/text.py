@@ -17,10 +17,6 @@ STOPWORDS: "tuple[str, ...]" = (
     "for", "on", "as", "with", "was", "are", "be", "this", "at", "by",
 )
 
-# BPE-ish token regex: word pieces, numbers, or single non-space symbols.
-BPE_TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-
-
 def n_chars(c: Column) -> Column:
     return F.length(c)
 
@@ -38,11 +34,6 @@ def n_tokens(c: Column) -> Column:
     """Whitespace token count (0 for empty/blank; tab/newline-safe)."""
     t = ws_strip(c)
     return F.when(t == "", F.lit(0)).otherwise(F.size(F.split(t, r"\s+")))
-
-
-def n_bpe_tokens(c: Column) -> Column:
-    """BPE-ish subword-proxy count via the token regex."""
-    return F.regexp_count(c, F.lit(BPE_TOKEN_PATTERN))
 
 
 def _ratio(num: Column, den: Column) -> Column:
@@ -65,14 +56,6 @@ def alpha_ratio(c: Column) -> Column:
 
 def digit_ratio(c: Column) -> Column:
     return _ratio(F.regexp_count(c, F.lit(r"[0-9]")), F.length(c))
-
-
-def punct_ratio(c: Column) -> Column:
-    return _ratio(F.regexp_count(c, F.lit(r"[\.,;:!\?\-'\"()\[\]{}]")), F.length(c))
-
-
-def upper_ratio(c: Column) -> Column:
-    return _ratio(F.regexp_count(c, F.lit(r"[A-Z]")), F.length(c))
 
 
 def stopword_hits(c: Column) -> Column:
@@ -172,16 +155,3 @@ def fingerprint_sql(col: str) -> str:
     oracle that fingerprints text."""
     stripped = f"regexp_replace({col}, '^\\\\s+|\\\\s+$', '', 'g')"
     return f"md5(lower(regexp_replace({stripped}, '\\\\s+', ' ', 'g')))"
-
-
-def quality_struct(c: Column) -> Column:
-    """Bundle the scalar quality signals into one struct column."""
-    return F.struct(
-        n_chars(c).alias("n_chars"),
-        n_tokens(c).alias("n_tokens"),
-        alpha_ratio(c).alias("alpha_ratio"),
-        digit_ratio(c).alias("digit_ratio"),
-        punct_ratio(c).alias("punct_ratio"),
-        stopword_ratio(c).alias("stopword_ratio"),
-        mean_word_len(c).alias("mean_word_len"),
-    )

@@ -67,11 +67,6 @@ def h60(col):
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
 
 
-def h60_sql(expr: str) -> str:
-    """The same hash in DuckDB SQL."""
-    return f"('0x' || substr(md5({expr}), 1, 15))::BIGINT"
-
-
 def shingles_expr(text, n: int = 5):
     """Distinct char n-gram shingles of the whitespace-normalized text."""
     from ..functions.text import ws_strip

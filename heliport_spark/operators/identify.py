@@ -199,22 +199,3 @@ def identify_topk_df(
         return pd.Series(scorer.identify_topk_batch(tl, k))
 
     return df.withColumn("topk", topk_udf(F.col(text_col)))
-
-
-def format_cli_output(df: DataFrame, precision: int = 4,
-                      print_scores: bool = True) -> DataFrame:
-    """CLI-parity line formatting: ``lang\\tscore`` at fixed precision
-    (print_result, /root/reference/src/cli/identify.rs:217-226)."""
-    if print_scores:
-        # bround first: JVM %f rounds HALF_UP while the reference's Rust
-        # (and Python's %.4f) round half-to-even on exact decimal ties
-        # (e.g. f32 0.03125 → '0.0312', not '0.0313'); formatting the
-        # already-half-even-rounded value is then tie-free
-        return df.select(
-            F.format_string(
-                f"%s\t%.{precision}f",
-                F.col("lang"),
-                F.bround(F.col("score"), precision),
-            ).alias("value")
-        )
-    return df.select(F.col("lang").alias("value"))

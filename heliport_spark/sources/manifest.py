@@ -8,6 +8,7 @@ resume-by-anti-join of already-committed buckets.
 Layout:
     table_root/
       data/bucket=<k>/*.parquet     (one commit per bucket)
+      _staging/_bucket=<k>/         (a run's one write, before its commits)
       _manifest/snapshot-<n>.json   (committed buckets, counts, lineage)
       _manifest/CURRENT             (points at the latest snapshot)
 
@@ -49,7 +50,7 @@ class TableManifest:
                       lineage: "dict | None" = None) -> dict:
         """Append-commit one bucket: new snapshot = previous ∪ {bucket}.
 
-        Single-writer (the pipeline driver loop); snapshot files are written
+        Single-writer (the pipeline's commit loop); snapshot files are written
         whole-then-renamed so readers never see a torn manifest.
         """
         self.mdir.mkdir(parents=True, exist_ok=True)

@@ -7,6 +7,7 @@
 * checkpoint/resume: no duplicate/missing clip_ids, counter continuity
 """
 
+import os
 import shutil
 import tempfile
 
@@ -364,6 +365,128 @@ def test_counters_match_data(spark):
         assert counters["scrubbed_spans"] == (
             res.agg(F.sum("quality.scrub_spans")).collect()[0][0]
         )
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
+def _jobs_started(spark, group, fn):
+    """Number of Spark jobs ``fn()`` starts, counted under a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_one_job_per_run_whatever_n_buckets(spark):
+    """run_pipeline scores and writes every bucket in one job: the job
+    count does not grow with n_buckets, and no staging directory is left
+    behind after a successful run."""
+    clips = clips_from_documents(spark, SF_TINY, with_golden=False).cache()
+    clips.count()  # build the cache outside the counted jobs
+    out = tempfile.mkdtemp(prefix="qf_one_job_")
+    try:
+        jobs = {}
+        for n in (2, 8):
+            root = os.path.join(out, f"n{n}")
+            jobs[n] = _jobs_started(
+                spark, f"qf-one-job-{n}",
+                lambda: run_pipeline(spark, clips, root, n_buckets=n,
+                                     with_ft=False))
+            rows = TableManifest(root).committed_buckets()
+            assert set(rows) == set(range(n))
+            assert all(m["rows"] > 0 for m in rows.values())  # none empty
+            assert sorted(os.listdir(root)) == ["_manifest", "data"]
+        assert jobs[2] == jobs[8] >= 1
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+        clips.unpersist()
+
+
+def _listing(path):
+    return sorted((e.name, e.inode(), e.stat().st_mtime_ns, e.stat().st_size)
+                  for e in os.scandir(path))
+
+
+def test_resume_scores_only_uncommitted_buckets(spark):
+    """After an injected failure, the resumed run never reads a committed
+    bucket's rows into scoring (a guard on the input raises for them), and
+    the committed buckets' files and manifest entries stay untouched."""
+    n = 4
+    clips = clips_from_documents(spark, SF_TINY, with_golden=False).cache()
+    out = tempfile.mkdtemp(prefix="qf_resume_only_")
+    try:
+        with pytest.raises(RuntimeError, match="injected failure"):
+            run_pipeline(spark, clips, out, n_buckets=n, fail_after_buckets=2,
+                         with_ft=False)
+        mf = TableManifest(out)
+        before = mf.committed_buckets()
+        done = sorted(before)
+        files = {b: _listing(mf.bucket_path(b)) for b in done}
+
+        @F.udf("string")
+        def guard(text, b):
+            if b in done:
+                raise ValueError(f"row of committed bucket {b} re-scored")
+            return text
+
+        bucket = F.pmod(F.xxhash64(F.col("clip_id")), F.lit(n))
+        guarded = clips.withColumn("transcript",
+                                   guard(F.col("transcript"), bucket))
+        run_pipeline(spark, guarded, out, n_buckets=n, with_ft=False)
+        after = mf.committed_buckets()
+        assert set(after) == set(range(n))
+        for b in done:
+            assert after[b] == before[b]
+            assert _listing(mf.bucket_path(b)) == files[b]
+        res = read_pipeline_output(spark, out)
+        assert res.count() == clips.count()
+        assert res.select("clip_id").distinct().count() == clips.count()
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+        clips.unpersist()
+
+
+@pytest.mark.parametrize("n_buckets", [2, 64])
+def test_golden_round_trip_every_bucket(spark, n_buckets):
+    """Every golden_clips row comes back through the partitioned (sorted)
+    write with every input column, ``bytes`` and ``transcript`` included,
+    byte-identical; every bucket id is committed, an empty one too (at
+    n_buckets=64 most are), and each bucket's manifest counters match the
+    rows in its own directory."""
+    clips = golden_clips(spark)
+    src = {r["clip_id"]: r for r in clips.collect()}
+    out = tempfile.mkdtemp(prefix="qf_golden_rt_")
+    try:
+        run_pipeline(spark, clips, out, n_buckets=n_buckets, with_ft=False)
+        committed = TableManifest(out).committed_buckets()
+        assert set(committed) == set(range(n_buckets))
+        rows = read_pipeline_output(spark, out).select(
+            "*",
+            F.regexp_extract("_metadata.file_path", r"bucket=(\d+)", 1)
+            .cast("int").alias("dir_bucket"),
+            F.pmod(F.xxhash64("clip_id"), F.lit(n_buckets)).alias("hash_bucket"),
+        ).collect()
+        assert sorted(r["clip_id"] for r in rows) == sorted(src)
+        for r in rows:
+            assert r["dir_bucket"] == r["hash_bucket"]
+            for c in clips.columns:
+                assert r[c] == src[r["clip_id"]][c], (r["clip_id"], c)
+        want = {b: {"clips_seen": 0, "dropped_by_rule": 0, "scrubbed_spans": 0}
+                for b in range(n_buckets)}
+        for r in rows:
+            w = want[r["dir_bucket"]]
+            w["clips_seen"] += 1
+            w["dropped_by_rule"] += not r["keep"]
+            w["scrubbed_spans"] += r["quality"]["scrub_spans"] or 0
+        for b, meta in committed.items():
+            assert meta["counters"] == want[b], b
+            assert meta["rows"] == want[b]["clips_seen"]
+        if n_buckets > len(src):
+            assert any(w["clips_seen"] == 0 for w in want.values())
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
