@@ -21,11 +21,11 @@ From-scratch reimplementation of the reference's scoring dataflow
 
 One batch, one context: ``BatchContext`` holds everything the consumers of
 a batch share — the exact-duplicate factorize of the raw texts, the raw
-``'\\n'`` join and its lowered copy, P1-P4 over the distinct texts, the
-token span hashes and the counts matrix. HeLI scoring, the word-NLL signal,
-the fastText cross-check and (in the identify UDF) textstats are functions
-of it, computed once per distinct text and scattered back by the dedup
-codes. The public ``*_batch`` calls each build their own context.
+``'\\n'`` join and its lowered copy, P1-P4 over the distinct texts and the
+token span hashes. HeLI scoring, the word-NLL signal, the fastText
+cross-check and (in the identify UDF) textstats are functions of it,
+computed once per distinct text and scattered back by the dedup codes. The
+public ``*_batch`` calls each build their own context.
 
 Two accumulation modes:
 
@@ -37,15 +37,15 @@ Two accumulation modes:
   order-0 model key; cascade n-grams are hashed straight out of a padded
   codepoint buffer (no substring objects anywhere); scored words live in a
   CSR-style cross-batch vocab bank so per-batch assembly is one vectorized
-  gather. Same labels as exact except in pathological float ties; this is
-  the 100 TB path (~78k short texts/s/core, see BENCH.md).
+  gather. A text's score is the f64 sum of its words' vectors
+  (``_row_sums``), rounded to f32 once, so it does not depend on which
+  texts share its batch. Same labels as exact except in pathological float
+  ties; this is the 100 TB path (~78k short texts/s/core, see BENCH.md).
 
 No Spark imports here — this module runs inside Arrow-batch UDFs.
 """
 
 from __future__ import annotations
-
-from functools import cached_property
 
 import numpy as np
 
@@ -169,16 +169,17 @@ def _padded_windows(pbuf: np.ndarray, pstart: np.ndarray, lenp: np.ndarray,
 
 
 def _seq_row_sums(M: np.ndarray, idx: np.ndarray, seg_start: np.ndarray,
-                  seg_len: np.ndarray) -> np.ndarray:
+                  seg_len: np.ndarray, dtype=None) -> np.ndarray:
     """Per segment s: Σ_j M[idx[seg_start[s] + j]] over j < seg_len[s],
-    added sequentially from +0.0 in j order — bit-identical to numpy's
-    axis-0 sum of the segment's rows and to ``np.add.at`` over them
-    (``np.add.reduceat`` is not). A shrinking-tail loop over j: segments
-    sorted by length, so the live ones at step j are a contiguous tail.
-    A segment left alone in the tail (one long word or text) finishes in
-    sequential chunks instead of one numpy call per row."""
+    added sequentially from +0.0 in j order into a ``dtype`` accumulator
+    (default ``M.dtype``) — bit-identical to numpy's axis-0 sum of the
+    segment's rows and to ``np.add.at`` over them (``np.add.reduceat`` is
+    not). A shrinking-tail loop over j: segments sorted by length, so the
+    live ones at step j are a contiguous tail. A segment left alone in the
+    tail (one long word or text) finishes in sequential chunks instead of
+    one numpy call per row."""
     k = len(seg_len)
-    acc = np.zeros((k, M.shape[1]), dtype=M.dtype)
+    acc = np.zeros((k, M.shape[1]), dtype=dtype or M.dtype)
     order = np.argsort(seg_len, kind="stable")
     ls = seg_len[order]
     base = seg_start[order]
@@ -399,7 +400,6 @@ class BatchContext:
       cp … valid  P1-P4 over ``texts`` (see ``_preprocess``)
       flat_ids, uniq_h, first_idx  token span hashes, first-appearance
                 factorized, and each distinct token's first occurrence
-      counts    dense (row × distinct word) f32 counts matrix (lazy)
     """
 
     def __init__(self, model: HeliModel, texts):
@@ -414,8 +414,7 @@ class BatchContext:
         # use (order-0 lookup consumes it directly) and the word memos' key
         # (a 64-bit collision merging two words is ~(d²/2)·2⁻⁶⁴, far below
         # the model's own hash-collision tolerance). Hash factorize, not
-        # np.unique: no argsort (63 → 9 ms per 10k×45-word batch), and the
-        # counts matrix columns follow its first-appearance order.
+        # np.unique: no argsort (63 → 9 ms per 10k×45-word batch).
         import pandas as pd
 
         flat_ids, uniq_h = pd.factorize(
@@ -430,19 +429,28 @@ class BatchContext:
             len(self.flat_ids) - 1, -1, -1, dtype=np.int64
         )
 
-    @cached_property
-    def counts(self):
-        """f32 (row × distinct word) occurrence counts for the HeLI and ft
-        sgemms, or None above the dense cap (the callers then scatter per
-        occurrence)."""
-        n, u = len(self.texts), len(self.uniq_h)
-        if n * u > 12_000_000 or u > 20_000:
-            return None
-        key = self.tok_text * u + self.flat_ids
-        return np.bincount(key, minlength=n * u).reshape(n, u).astype(np.float32)
-
     def scatter(self, a: np.ndarray) -> np.ndarray:
         return a if self.codes is None else a[self.codes]
+
+
+def _row_sums(ctx: BatchContext, X: np.ndarray) -> np.ndarray:
+    """Per distinct text of ``ctx``: Σ X[word] over its tokens, accumulated
+    in float64 → (n, m) f64, for a (distinct word × m) matrix ``X``. The
+    one accumulation behind the HeLI and fastText text scores; callers
+    round to f32 once.
+
+    The method follows the batch's cost: the dense (text × distinct word)
+    counts matrix times ``X`` in one BLAS dgemm when it has no more cells
+    than the batch has tokens (repeated vocabularies), else the sequential
+    per-text sum in token order. Both add the same f32 terms in f64, so
+    they differ by f64 rounding only, which the one rounding to f32 hides:
+    a text's sums do not depend on which texts share its batch."""
+    n, u = len(ctx.texts), len(ctx.uniq_h)
+    if n * u <= len(ctx.flat_ids):
+        C = np.bincount(ctx.tok_text * u + ctx.flat_ids, minlength=n * u)
+        return C.reshape(n, u).astype(np.float64) @ X.astype(np.float64)
+    return _seq_row_sums(X, ctx.flat_ids, ctx.bounds[:-1],
+                         np.diff(ctx.bounds), np.float64)
 
 
 class Scorer:
@@ -464,10 +472,10 @@ class Scorer:
         self._bank_reset()
         # exact memo: word -> dense (N_LANGS,) f32 word-score vector
         self._memo_exact: dict = {}
-        # fastText word bank: word-hash -> row of (_ft_V, _ft_K)
+        # fastText word bank: word-hash -> row of _ft_VK, each row a word's
+        # Σ M[buckets] (N_LANGS columns) then its bucket count
         self._ft_index = _WordIndex()
-        self._ft_V = np.empty((0, N_LANGS), np.float32)
-        self._ft_K = _EMPTY_F32
+        self._ft_VK = np.empty((0, N_LANGS + 1), np.float32)
         self._ft: "tuple | None" = None
 
     def context(self, texts) -> BatchContext:
@@ -685,8 +693,7 @@ class Scorer:
             points[i] = lp
 
     def _score_fast(self, ctx: BatchContext, points: np.ndarray) -> None:
-        n = len(points)
-        flat_ids, uniq_h, tok_text = ctx.flat_ids, ctx.uniq_h, ctx.tok_text
+        uniq_h = ctx.uniq_h
         if self._vb_n > self.cache_cap:
             self._bank_reset()  # full reset beats per-entry eviction here
         u = len(uniq_h)
@@ -697,52 +704,17 @@ class Scorer:
             self._score_spans_fast(ctx.cp, ctx.s_idx[fi], ctx.tok_len[fi],
                                    uniq_h[miss])
             slots[miss] = self._memo.lookup(uniq_h[miss])
-        # batch word vectors = one CSR-style gather out of the vocab bank
-        base = self._vb_base[slots]
+        # dense batch word matrix = one CSR-style gather out of the vocab bank
         nnz = self._vb_nnz[slots]
-        vstart = self._vb_start[slots]
         off = np.zeros(u + 1, dtype=np.int64)
         np.cumsum(nnz, out=off[1:])
-        pos = np.repeat(vstart - off[:-1], nnz) + np.arange(int(off[-1]))
-        # narrow dtypes: lang indexes fit int32, values stay the bank's f32
-        # (bincount casts per-element to f64 internally — bit-identical to
-        # gathering pre-cast f64, half the traffic)
-        idx_cat = self._vb_idx[pos].astype(np.int32)
-        val_cat = self._vb_val[pos]
-        nwords = np.diff(ctx.bounds).astype(np.float32)
-        C = ctx.counts
-        if C is not None:
-            # small batch vocabulary: dense counts × word-matrix sgemm —
-            # O(n·u·242) BLAS beats per-occurrence scatter by ~10-100×
-            # when words repeat heavily
-            W = np.repeat(base[:, None], N_LANGS, axis=1)
-            np.add.at(W, (np.repeat(np.arange(u), nnz), idx_cat), val_cat)
-            # same sgemm, written straight into points (no n×242 temp
-            # + copy; bit-identical — identical BLAS call)
-            np.matmul(C, W, out=points)
-        else:
-            # large vocabulary: per-occurrence sparse expansion with
-            # bincount on combined (text, lang) keys — bounded memory,
-            # no dense (occurrences × 242) gather
-            text_base = np.bincount(
-                tok_text, weights=base[flat_ids].astype(np.float64), minlength=n
-            ).astype(np.float32)
-            occ_nnz = nnz[flat_ids]
-            cum = np.cumsum(occ_nnz)
-            # int32 keys halve the traffic of the two big per-posting passes
-            # (n·242 < 2^31 always: n ≤ Arrow batch, 242 langs); measured
-            # 133 → 106 ms on a 4.8M-posting batch
-            pos = np.repeat(off[flat_ids] - cum + occ_nnz, occ_nnz) + \
-                np.arange(int(occ_nnz.sum()))
-            keys = np.repeat(
-                tok_text.astype(np.int32) * np.int32(N_LANGS), occ_nnz
-            ) + idx_cat[pos]
-            points[:] = np.bincount(
-                keys, weights=val_cat[pos], minlength=n * N_LANGS
-            ).reshape(n, N_LANGS)
-            points += text_base[:, None]
-        nw_safe = np.where(ctx.valid, nwords, np.float32(1.0))
-        points /= nw_safe[:, None]
+        pos = np.repeat(self._vb_start[slots] - off[:-1], nnz) + \
+            np.arange(int(off[-1]))
+        W = np.repeat(self._vb_base[slots][:, None], N_LANGS, axis=1)
+        np.add.at(W, (np.repeat(np.arange(u), nnz), self._vb_idx[pos]),
+                  self._vb_val[pos])
+        nwords = np.maximum(np.diff(ctx.bounds), 1)  # invalid rows: 0 / 1
+        points[:] = _row_sums(ctx, W) / nwords[:, None]
 
     def score_batch(self, texts: "list[str]"):
         """C1-C3 for a batch → (points (n,242) f32, valid bool[n], cjk_pct f32[n]).
@@ -913,10 +885,9 @@ class Scorer:
             V, K = _ft_word_sums(M, ctx.cp, ctx.s_idx[fi], ctx.tok_len[fi])
             n0 = len(self._ft_index)
             rows[miss] = np.arange(n0, n0 + miss.size)
-            self._ft_V = _grow(self._ft_V, n0 + miss.size)
-            self._ft_K = _grow(self._ft_K, n0 + miss.size)
-            self._ft_V[rows[miss]] = V
-            self._ft_K[rows[miss]] = K
+            self._ft_VK = _grow(self._ft_VK, n0 + miss.size)
+            self._ft_VK[rows[miss], :N_LANGS] = V
+            self._ft_VK[rows[miss], N_LANGS] = K
             self._ft_index.add(uniq_h[miss], rows[miss])
         return rows
 
@@ -929,8 +900,8 @@ class Scorer:
         on a corpus synthesized from the word models; no fasttext binary
         is needed). Accumulated word-wise: per distinct word
         the bank holds Σ M[buckets(word)] and its bucket count; a text's
-        logits = (Σ_w vec_w) / (Σ_w k_w) + bias, through the same counts
-        matrix sgemm as the HeLI fast path. A model dir without the ft
+        logits = (Σ_w vec_w) / (Σ_w k_w) + bias, both sums through the same
+        ``_row_sums`` as the HeLI fast path. A model dir without the ft
         artifact raises FileNotFoundError.
 
         Disagreement with the HeLI label is surfaced as a rule flag only —
@@ -938,24 +909,12 @@ class Scorer:
         """
         M, bias = self._ft_params()
         n = len(ctx.texts)
-        flat_ids = ctx.flat_ids
-        rows = self._ft_rows(ctx, M)
-        V = self._ft_V[rows]
-        K = self._ft_K[rows]
-        C = ctx.counts
-        if C is not None:
-            num = C @ V
-            den = C @ K
-        else:
-            num = _seq_row_sums(V, flat_ids, ctx.bounds[:-1],
-                                np.diff(ctx.bounds))
-            den = np.bincount(
-                ctx.tok_text, weights=K[flat_ids].astype(np.float64),
-                minlength=n,
-            ).astype(np.float32)
+        rows = self._ft_rows(ctx, M)  # may grow the bank: index after
+        S = _row_sums(ctx, self._ft_VK[rows])
+        den = S[:, N_LANGS]
         has = den > 0
-        L = np.where(has[:, None], num / np.where(has, den, 1.0)[:, None], 0.0)
-        L = L + bias
+        L = (S[:, :N_LANGS] / np.where(has, den, 1.0)[:, None]).astype(
+            np.float32) + bias
         L -= L.max(axis=1, keepdims=True)
         np.exp(L, out=L)
         L /= L.sum(axis=1, keepdims=True)

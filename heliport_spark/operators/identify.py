@@ -12,9 +12,13 @@ Design notes for 100 TB:
   upstream filters and column pruning stay pushed down to the scan, and only
   the text column crosses into Python (passthrough columns ride along
   JVM-side).
-* partitions must carry at least one full Arrow batch (10k rows): the
-  scorer's per-batch fixed costs amortize over the batch — sub-sized
-  partitions measured 2× slower end-to-end (BENCH.md, docs/SCALE.md).
+* the scorer's per-batch fixed cost is small: replaying this UDF's body
+  over the filter_default benchmark input (four ~3,000-row files, a fresh
+  scorer per file, ft + word-NLL + textstats, min of 5 on a 4-core host)
+  took 3.36 s in 750-row batches against 3.24 s in one batch per file
+  (1.04×; 2.2× while text sums depended on the batch). The older "2×
+  slower below 10k-row partitions" figure (BENCH.md, docs/SCALE.md)
+  predates that and also counts Spark's per-task cost.
 * the model is NOT a Spark broadcast variable: broadcasting 158 MB through
   the JVM would copy it per-worker; instead every Python worker mmaps the
   same artifact files (``HELIPORT_MODEL_DIR`` or a cluster-shared path /
@@ -44,19 +48,16 @@ from ..model import DEFAULT_MODEL_DIR
 _WORKER_SCORERS: dict = {}
 
 
-def _get_worker_scorer(model_dir: str, exact: bool,
+def _get_worker_scorer(model_dir: str,
                        langs: "tuple[str, ...] | None" = None):
     """Per-process scorer singleton (survives across tasks via worker reuse)."""
-    key = (model_dir, exact, langs)
+    key = (model_dir, langs)
     sc = _WORKER_SCORERS.get(key)
     if sc is None:
         from ..heli import Scorer
         from ..model import get_model
 
-        sc = Scorer(
-            get_model(model_dir, langs=list(langs) if langs else None),
-            exact=exact,
-        )
+        sc = Scorer(get_model(model_dir, langs=list(langs) if langs else None))
         _WORKER_SCORERS[key] = sc
     return sc
 
@@ -92,7 +93,6 @@ def identify_df(
     text_col: str = "transcript",
     ignore_confidence: bool = False,
     model_dir: "str | None" = None,
-    exact: bool = False,
     with_ft: bool = False,
     prefix: str = "",
     langs: "list[str] | None" = None,
@@ -156,7 +156,7 @@ def identify_df(
     @F.pandas_udf(returnType=struct_type)
     def heli_udf(texts: pd.Series) -> pd.DataFrame:
         return identify_columns(
-            _get_worker_scorer(mdir, exact, langs_key), texts.tolist(),
+            _get_worker_scorer(mdir, langs_key), texts.tolist(),
             ignore_confidence, with_ft, with_word_nll, with_text_stats,
         )
 
@@ -194,7 +194,7 @@ def identify_topk_df(
 
     @F.pandas_udf(returnType=ArrayType(elem))
     def topk_udf(texts: pd.Series) -> pd.Series:
-        scorer = _get_worker_scorer(mdir, False)
+        scorer = _get_worker_scorer(mdir)
         tl = ["" if t is None else str(t) for t in texts]
         return pd.Series(scorer.identify_topk_batch(tl, k))
 

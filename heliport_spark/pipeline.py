@@ -59,7 +59,6 @@ def quality_filter(
     text_col: str = "transcript",
     model_dir: "str | None" = None,
     with_ft: bool = True,
-    exact: bool = False,
     with_signal_gate: bool = False,
     with_denoise: bool = False,
     with_classifier: bool = False,
@@ -100,7 +99,7 @@ def quality_filter(
     # guide §4.2). Bit-compatible by the textstats exactness contract.
     scored = identify_df(
         df, text_col=text_col, model_dir=model_dir, with_ft=with_ft,
-        exact=exact, with_word_nll=True, with_text_stats=True,
+        with_word_nll=True, with_text_stats=True,
     )
     if with_classifier:
         from .operators.quality import classifier_score_df

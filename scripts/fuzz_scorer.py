@@ -6,12 +6,13 @@ for gate time). Run manually after touching heli.py hot paths:
 
 Targets the invariants the fast lanes rely on:
   * fast ≡ exact (label bit-equal, score within 5e-4) on arbitrary unicode;
-  * batch-shape invariance of everything the identify UDF computes from one
-    per-batch context — HeLI scores, word_nll, the fastText cross-check and
-    textstats — under heavy duplication (every batch is deduplicated
-    before scoring; NUL bytes must not merge texts) and through the
-    joined-lowercase fast path (embedded newlines force per-text lowering;
-    case-expanding chars like 'İ' shift separator offsets);
+  * bit-exact batch-shape invariance of everything the identify UDF
+    computes from one per-batch context — HeLI scores, word_nll, the
+    fastText cross-check and textstats — under heavy duplication (every
+    batch is deduplicated before scoring; NUL bytes must not merge texts)
+    and through the joined-lowercase fast path (embedded newlines force
+    per-text lowering; case-expanding chars like 'İ' shift separator
+    offsets);
   * identify_topk_batch ≡ the per-row reference scan.
 Exit code 0 = all invariants held; first counterexample is printed and
 re-raised.
@@ -51,20 +52,6 @@ def big_batches():
     )
 
 
-def ft_margin(text) -> float:
-    """Top-2 margin of the fastText softmax for one text (1.0 if no words)."""
-    ctx = _FAST.context([text])
-    M, bias = _FAST._ft_params()
-    rows = _FAST._ft_rows(ctx, M)
-    den = float(_FAST._ft_K[rows].sum())
-    if den == 0:
-        return 1.0
-    L = _FAST._ft_V[rows][ctx.flat_ids].sum(axis=0) / den + bias
-    p = np.exp(L - L.max())
-    p = np.sort(p / p.sum())
-    return float(p[-1] - p[-2])
-
-
 def run(n_examples: int) -> None:
     @settings(max_examples=n_examples, deadline=None)
     @given(text_strategy)
@@ -77,18 +64,13 @@ def run(n_examples: int) -> None:
     @settings(max_examples=n_examples, deadline=None)
     @given(big_batches())
     def batch_invariant(texts):
-        """Fast-path scores are batch-shape invariant WITHIN the documented
-        f32 band (CLAUDE.md: < 5e-5): the dense branch is a BLAS sgemm whose
-        blocking — and so f32 summation order — depends on the batch's row
-        count, so bit-equality across widths is deliberately not promised
-        (per-batch dedup makes equal texts bit-equal WITHIN a batch; the
-        exact mode is the bit-stable reference order). Labels may only flip
-        when the top-2 margin sits inside that band; word_nll follows the
-        pre-collapse winner id, so it is only pinned away from near-ties.
-        The fastText label and probability follow the same rule around
-        their own top-2 probability margin; textstats are per-text
-        functions, so they must be bit-equal."""
-        tol = 5e-5
+        """Everything the identify UDF computes is a function of the row
+        alone, bit for bit: labels, HeLI scores, word_nll, the fastText
+        label and probability, and textstats are equal whether a text is
+        scored inside a duplicate-heavy batch or on its own. Text scores
+        are summed in f64 and rounded to f32 once (heli._row_sums), so
+        neither the dense counts dgemm — which a single row always takes —
+        nor the sequential per-text sum depends on the batch's shape."""
         l1, s1, r1, c1, w1 = _FAST.identify_batch(texts, with_word_nll=True)
         fl1, fp1 = _FAST.ft_identify_batch(texts)
         ts1 = text_stats_batch(texts)
@@ -98,25 +80,12 @@ def run(n_examples: int) -> None:
                 [texts[i]], with_word_nll=True
             )
             fl0, fp0 = ref.ft_identify_batch([texts[i]])
-            assert abs(float(fp1[i]) - float(fp0[0])) < tol, (
-                repr(texts[i]), fp1[i], fp0[0],
-            )
-            if fl1[i] != fl0[0]:
-                assert ft_margin(texts[i]) < tol, (repr(texts[i]), fl1[i], fl0[0])
             ts0 = text_stats_batch([texts[i]])
-            for a, b in zip(ts1, ts0):
-                assert a[i] == b[0], (repr(texts[i]), a[i], b[0])
-            assert abs(float(s1[i]) - float(s0[0])) < tol, (
-                repr(texts[i]), s1[i], s0[0],
-            )
-            top2 = ref.identify_topk_batch([texts[i]], 2)[0]
-            margin = top2[1][1] - top2[0][1] if len(top2) > 1 else 1.0
-            if l1[i] != l0[0]:
-                assert margin < tol, (repr(texts[i]), l1[i], l0[0], margin)
-            elif margin > 1e-4:
-                assert abs(float(w1[i]) - float(w0[0])) < tol, (
-                    repr(texts[i]), w1[i], w0[0],
-                )
+            got = [l1[i], s1[i], r1[i], c1[i], w1[i], fl1[i], fp1[i]]
+            got += [a[i] for a in ts1]
+            want = [l0[0], s0[0], r0[0], c0[0], w0[0], fl0[0], fp0[0]]
+            want += [b[0] for b in ts0]
+            assert got == want, (repr(texts[i]), got, want)
 
     @settings(max_examples=max(20, n_examples // 4), deadline=None)
     @given(st.lists(text_strategy, min_size=1, max_size=24), st.integers(0, 5))

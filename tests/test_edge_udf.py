@@ -6,9 +6,12 @@ as computed by the tree before the per-batch context (see
 
 * ``lang``, ``ft_lang``, ``word_nll``, ``cjk_pct``, ``digit_ratio`` and
   ``alpha_ratio`` bit-equal on every row;
-* ``score``, ``raw_score`` and ``ft_prob`` bit-equal on duplicate-free
-  batches, within the documented 5e-5 band otherwise: scoring only the
-  distinct rows changes the sgemm row count, and with it the f32 bits;
+* ``score``, ``raw_score`` and ``ft_prob`` within the 5e-5 band on every
+  batch. The pinned bits come from an f32 sgemm whose summation order
+  followed the batch's shape; the scorer now sums every text in f64 and
+  rounds once (``heli._row_sums``), which is batch-invariant but does not
+  reproduce those f32 bits (largest absolute deviation on this corpus:
+  9.5e-7 in ``score``, 4.8e-7 in ``raw_score``, 1.2e-7 in ``ft_prob``);
 * ``rep_cand`` / ``scrub_cand`` equal, or a subset that still covers every
   exact JVM-regex match.
 """
@@ -52,16 +55,12 @@ def test_edge_corpus_matches_pinned_outputs(request):
     for name, texts in zip(corpus.NAMES, corpus.batches()):
         df, exp = got[name], expected[name]
         tl = ["" if t is None else t for t in texts]
-        distinct = len(set(tl)) == len(tl)
         for f in BIT_EQUAL:
             assert df[f].tolist() == exp[f], (name, f)
         for f in BANDED:
             g = df[f].to_numpy(np.float64)
             w = np.asarray(exp[f], np.float64)
-            if distinct:
-                assert np.array_equal(g, w), (name, f)
-            else:
-                assert np.abs(g - w).max() < TOL, (name, f)
+            assert np.abs(g - w).max() < TOL, (name, f)
         for f in ("rep_cand", "scrub_cand"):
             g = np.asarray(df[f].tolist(), bool)
             w = np.asarray(exp[f], bool)

@@ -248,9 +248,10 @@ def test_ft_missing_artifact_is_explicit_error(fast_scorer, tmp_path):
 
 
 def test_seq_row_sums_matches_add_at():
-    """The shrinking-tail per-segment sum (ft text logits above the dense
-    cap, ft word bucket sums) is bit-identical to the np.add.at loop it
-    replaces, including empty segments and one long segment that finishes
+    """The shrinking-tail per-segment sum (the sequential method of the
+    text-score sums in f64, the ft word bucket sums in f32) is
+    bit-identical to an np.add.at loop into an accumulator of the same
+    dtype, including empty segments and one long segment that finishes
     in chunks."""
     from heliport_spark.heli import _seq_row_sums
 
@@ -260,7 +261,59 @@ def test_seq_row_sums_matches_add_at():
     start = np.zeros(len(lens), dtype=np.int64)
     np.cumsum(lens[:-1], out=start[1:])
     idx = rng.integers(0, 50, int(lens.sum()))
-    ref = np.zeros((len(lens), 242), dtype=np.float32)
-    np.add.at(ref, np.repeat(np.arange(len(lens)), lens), V[idx])
-    got = _seq_row_sums(V, idx, start, lens)
-    assert np.array_equal(got.view(np.uint32), ref.view(np.uint32))
+    for dtype in (np.float32, np.float64):
+        ref = np.zeros((len(lens), 242), dtype=dtype)
+        np.add.at(ref, np.repeat(np.arange(len(lens)), lens), V[idx])
+        got = _seq_row_sums(V, idx, start, lens, dtype)
+        assert got.dtype == dtype
+        assert np.array_equal(got, ref)
+
+
+def _edge_corpus():
+    import importlib.util
+    import os
+
+    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data",
+                        "edge_udf", "corpus.py")
+    spec = importlib.util.spec_from_file_location("edge_udf_corpus", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_identify_columns_batch_invariant():
+    """Every identify-UDF output of a row is a function of that row alone:
+    one multilingual mix (goldens, the edge corpus, a repeated-vocabulary
+    block) scored as one batch, row by row and in 5-row chunks is
+    bit-equal in every scored column. The batchings take both text-sum
+    methods for the same rows: the whole mix has more (text × distinct
+    word) cells than tokens (sequential), a single row or a chunk of the
+    repeated block has fewer (dense counts dgemm)."""
+    from heliport_spark.operators.identify import identify_columns
+
+    edge = _edge_corpus()
+    rng = np.random.default_rng(11)
+    common = "the of and to in is was for on that".split()
+    block = [" ".join(rng.choice(common, 40)) for _ in range(20)]
+    mix = list(GOLDEN_SENTS) + edge.SENTENCES + edge.EDGE + block
+    sc = Scorer()
+
+    def dense(texts):
+        ctx = sc.context(texts)
+        return len(ctx.texts) * len(ctx.uniq_h) <= len(ctx.flat_ids)
+
+    assert not dense(mix) and dense(block[:5])
+
+    def run(chunks):
+        parts = [identify_columns(sc, c, False, True, True, False)
+                 for c in chunks]
+        return {f: sum((p[f].tolist() for p in parts), [])
+                for f in parts[0].columns}
+
+    whole = run([mix])
+    for chunks in ([[t] for t in mix],
+                   [mix[i : i + 5] for i in range(0, len(mix), 5)]):
+        got = run(chunks)
+        for f in ("lang", "score", "raw_score", "cjk_pct", "word_nll",
+                  "ft_lang", "ft_prob"):
+            assert got[f] == whole[f], f
