@@ -12,8 +12,10 @@ learn) PLUS three dense type-level features the bucket means are blind to
 (mean pooling makes a word repeated 12× feature-identical to the word
 said once): distinct-token ratio, top-token share, mean word length.
 
-Training corpus (deterministic, synthesized from the reference's PUBLIC
-word-model vocabularies — the only text source in this sandbox):
+Training corpus (deterministic, synthesized from each language's
+frequency-ranked vocabulary, read through ``vocab.top_words``: the
+reference's public word models where they exist, else the ``models/vocab``
+lists recovered from the committed artifact):
 
 * positives — Zipf-weighted sentences: tokens drawn with p(rank r) ∝
   1/(r+1) over each language's top-2000 frequency-ranked vocabulary
@@ -43,16 +45,15 @@ the Spark pass.
 from __future__ import annotations
 
 import json
-import os
 import sys
 import time
 from pathlib import Path
 
 import numpy as np
 
-from .ft_train import MODEL_SRC
 from .langs import LANGS, SPECIAL_MASK
 from .model import DEFAULT_MODEL_DIR, hash_grams
+from .vocab import top_words, word_list_roots
 
 QC_BUCKETS = 1 << 18
 QC_NGRAMS = (2, 3, 4, 5)
@@ -97,12 +98,6 @@ def dense_features(tokens: "list[str]") -> "tuple[float, float, float]":
     )
 
 
-def _model_root(model_src) -> Path:
-    if model_src is not None:
-        return Path(model_src)
-    return Path(os.environ.get("HELIPORT_SPARK_WORD_MODELS", MODEL_SRC))
-
-
 def _synth_quality_corpus(
     rng: np.random.Generator,
     per_lang: int = 96,
@@ -110,22 +105,20 @@ def _synth_quality_corpus(
 ):
     """(texts, y, family) with y=1 fluent / y=0 salad, balanced per
     language; family tags ('pos','tail','shuf','rep') feed the per-family
-    held-out accuracies in the meta."""
+    held-out accuracies in the meta. ``model_src`` is the first root
+    ``vocab.top_words`` searches; a language without a word list of
+    ``2 * QC_TAIL_FROM`` words is left out, and a corpus left empty
+    raises ``FileNotFoundError`` naming every root searched."""
     texts: "list[str]" = []
     y: "list[int]" = []
     fam: "list[str]" = []
-    root = _model_root(model_src)
     for li, lang in enumerate(LANGS):
         if SPECIAL_MASK[li]:
             continue
-        path = root / f"{lang}.word.model"
-        if not path.exists():
+        try:
+            words = top_words(lang, QC_VOCAB, root=model_src)
+        except FileNotFoundError:
             continue
-        with open(path, encoding="utf-8") as fh:
-            fh.readline()
-            words = [
-                l.split("\t")[0] for _, l in zip(range(QC_VOCAB), fh)
-            ]
         words = [w for w in words if w]
         if len(words) < 2 * QC_TAIL_FROM:
             continue  # too small to have a distinct tail regime
@@ -164,6 +157,12 @@ def _synth_quality_corpus(
             )
             y.append(0)
             fam.append("rep")
+    if not texts:
+        raise FileNotFoundError(
+            f"quality corpus is empty: no language has a word list of at "
+            f"least {2 * QC_TAIL_FROM} words under "
+            f"{', '.join(str(r) for r in word_list_roots(model_src))}"
+        )
     return (
         texts,
         np.asarray(y, dtype=np.float64),

@@ -26,11 +26,13 @@ from pathlib import Path
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
+from ..vocab import REFERENCE_WORD_MODELS, WORD_MODELS_ENV
+
 # default root for the reference's published plain-text word models;
 # overridable (ADVICE r6 #3: a hardcoded absolute path made row counts of
 # the rows-only curate_corpus_lid entry vary silently across environments)
-MODEL_SRC_ENV = "HELIPORT_SPARK_WORD_MODELS"
-MODEL_SRC = Path("/root/reference/LanguageModels")
+MODEL_SRC_ENV = WORD_MODELS_ENV
+MODEL_SRC = REFERENCE_WORD_MODELS
 
 
 def _model_root(model_root: "str | os.PathLike | None") -> Path:

@@ -4,18 +4,20 @@ modes, and (b) overwhelmingly classify as that language (or its macrolang)
 with confidence thresholds off.
 
 This extends the 13-sentence golden anchor to ~40 languages × 30 sentences
-of realistic per-language text (FIXTURES.md F1 generation recipe).
+of realistic per-language text (FIXTURES.md F1 generation recipe). The
+vocabularies come through ``vocab.top_words``: the reference's
+``<lang>.word.model`` files where they exist, else the ``models/vocab``
+lists recovered from the committed artifact (same words and ranking; ties
+in count are ordered by codepoints, so the sampled sentences differ from
+the reference-file corpus).
 """
-
-from pathlib import Path
 
 import numpy as np
 import pytest
 
 from heliport_spark.heli import Scorer
 from heliport_spark.langs import collapse
-
-MODEL_SRC = Path("/root/reference/LanguageModels")
+from heliport_spark.vocab import top_words, vocab_source
 
 LANGS_40 = [
     "eng", "spa", "fra", "deu", "ita", "por", "nld", "swe", "dan", "nob",
@@ -29,12 +31,8 @@ def _corpus():
     rng = np.random.default_rng(42)
     texts, labels = [], []
     for lang in LANGS_40:
-        path = MODEL_SRC / f"{lang}.word.model"
-        if not path.exists():
-            continue
-        with open(path, encoding="utf-8") as fh:
-            fh.readline()
-            words = [line.split("\t")[0] for _, line in zip(range(400), fh)]
+        words = top_words(lang, 400)
+        assert words, f"empty vocabulary for {lang} in {vocab_source(lang)}"
         for _ in range(30):
             n = int(rng.integers(6, 18))
             texts.append(" ".join(rng.choice(words, size=n)))
@@ -44,7 +42,10 @@ def _corpus():
 
 @pytest.fixture(scope="module")
 def corpus():
-    return _corpus()
+    texts, labels = _corpus()
+    sources = sorted({str(vocab_source(l).parent) for l in LANGS_40})
+    assert texts, f"empty multilingual corpus (read from {sources})"
+    return texts, labels
 
 
 def test_fast_equals_exact_wide(corpus):
