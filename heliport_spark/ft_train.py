@@ -32,10 +32,10 @@ import numpy as np
 
 from .langs import LANGS, N_LANGS, SPECIAL_MASK
 from .model import DEFAULT_MODEL_DIR, hash_grams
+from .vocab import REFERENCE_WORD_MODELS, read_words
 
 FT_BUCKETS = 1 << 14
 FT_NGRAMS = (2, 3, 4, 5)
-MODEL_SRC = Path("/root/reference/LanguageModels")
 
 
 def word_buckets(word: str) -> np.ndarray:
@@ -68,12 +68,10 @@ def _synth_corpus(rng, sentences_per_lang: int, words_per_lang: int = 300):
     for li, lang in enumerate(LANGS):
         if SPECIAL_MASK[li]:
             continue
-        path = MODEL_SRC / f"{lang}.word.model"
+        path = REFERENCE_WORD_MODELS / f"{lang}.word.model"
         if not path.exists():
             continue
-        with open(path, encoding="utf-8") as fh:
-            fh.readline()
-            words = [l.split("\t")[0] for _, l in zip(range(words_per_lang), fh)]
+        words = read_words(path, words_per_lang)
         if not words:
             continue
         for _ in range(sentences_per_lang):

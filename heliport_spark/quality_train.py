@@ -15,7 +15,9 @@ said once): distinct-token ratio, top-token share, mean word length.
 Training corpus (deterministic, synthesized from each language's
 frequency-ranked vocabulary, read through ``vocab.top_words``: the
 reference's public word models where they exist, else the ``models/vocab``
-lists recovered from the committed artifact):
+lists recovered from the committed artifact, with a warning naming the
+languages those lists serve; ``qc_meta.json`` records the file each
+language was read from):
 
 * positives — Zipf-weighted sentences: tokens drawn with p(rank r) ∝
   1/(r+1) over each language's top-2000 frequency-ranked vocabulary
@@ -47,13 +49,14 @@ from __future__ import annotations
 import json
 import sys
 import time
+import warnings
 from pathlib import Path
 
 import numpy as np
 
 from .langs import LANGS, SPECIAL_MASK
 from .model import DEFAULT_MODEL_DIR, hash_grams
-from .vocab import top_words, word_list_roots
+from .vocab import is_fixture, read_words, vocab_source, word_list_roots
 
 QC_BUCKETS = 1 << 18
 QC_NGRAMS = (2, 3, 4, 5)
@@ -98,6 +101,20 @@ def dense_features(tokens: "list[str]") -> "tuple[float, float, float]":
     )
 
 
+def quality_vocab_sources(model_src=None) -> "dict[str, Path]":
+    """{language: the word-list file ``_synth_quality_corpus`` reads for
+    it}, over the non-special languages that any source has."""
+    sources = {}
+    for li, lang in enumerate(LANGS):
+        if SPECIAL_MASK[li]:
+            continue
+        try:
+            sources[lang] = vocab_source(lang, model_src)
+        except FileNotFoundError:
+            continue
+    return sources
+
+
 def _synth_quality_corpus(
     rng: np.random.Generator,
     per_lang: int = 96,
@@ -108,19 +125,22 @@ def _synth_quality_corpus(
     held-out accuracies in the meta. ``model_src`` is the first root
     ``vocab.top_words`` searches; a language without a word list of
     ``2 * QC_TAIL_FROM`` words is left out, and a corpus left empty
-    raises ``FileNotFoundError`` naming every root searched."""
+    raises ``FileNotFoundError`` naming every root searched. Languages
+    served by the recovered ``models/vocab`` lists (no word model for them
+    under the roots before it) are named in a warning, with those whose
+    list is shorter than ``QC_VOCAB`` and those left out."""
     texts: "list[str]" = []
     y: "list[int]" = []
     fam: "list[str]" = []
-    for li, lang in enumerate(LANGS):
-        if SPECIAL_MASK[li]:
-            continue
-        try:
-            words = top_words(lang, QC_VOCAB, root=model_src)
-        except FileNotFoundError:
-            continue
-        words = [w for w in words if w]
+    fixture, short, left_out = {}, [], []
+    for lang, path in quality_vocab_sources(model_src).items():
+        words = [w for w in read_words(path, QC_VOCAB) if w]
+        if is_fixture(path):
+            fixture[lang] = path.parent
+            if len(words) < QC_VOCAB:
+                short.append(lang)
         if len(words) < 2 * QC_TAIL_FROM:
+            left_out.append(lang)
             continue  # too small to have a distinct tail regime
         warr = np.asarray(words, dtype=object)
         p_zipf = 1.0 / (np.arange(len(words), dtype=np.float64) + 1.0)
@@ -157,11 +177,24 @@ def _synth_quality_corpus(
             )
             y.append(0)
             fam.append("rep")
+    roots = word_list_roots(model_src)
     if not texts:
         raise FileNotFoundError(
             f"quality corpus is empty: no language has a word list of at "
             f"least {2 * QC_TAIL_FROM} words under "
-            f"{', '.join(str(r) for r in word_list_roots(model_src))}"
+            f"{', '.join(str(r) for r in roots)}"
+        )
+    if fixture:
+        fixture_dirs = set(fixture.values())
+        warnings.warn(
+            f"quality corpus: {len(fixture)} languages read from the word "
+            f"lists recovered from the artifact under "
+            f"{', '.join(sorted(str(d) for d in fixture_dirs))}, not from "
+            f"word models under "
+            f"{', '.join(str(r) for r in roots if r not in fixture_dirs)}: "
+            f"{list(fixture)}; lists shorter than {QC_VOCAB} words: {short}; "
+            f"left out (shorter than {2 * QC_TAIL_FROM}): {left_out}",
+            stacklevel=2,
         )
     return (
         texts,
@@ -309,6 +342,10 @@ def train_quality(
                 "lr": lr,
                 "weight_decay": weight_decay,
                 "seed": seed,
+                "vocab_sources": {
+                    lang: str(path) for lang, path
+                    in quality_vocab_sources(model_src).items()
+                },
             }
         )
     )

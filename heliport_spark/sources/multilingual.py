@@ -26,7 +26,7 @@ from pathlib import Path
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
-from ..vocab import REFERENCE_WORD_MODELS, WORD_MODELS_ENV
+from ..vocab import REFERENCE_WORD_MODELS, WORD_MODELS_ENV, read_words
 
 # default root for the reference's published plain-text word models;
 # overridable (ADVICE r6 #3: a hardcoded absolute path made row counts of
@@ -74,9 +74,7 @@ def multilingual_documents(
         if not path.exists():
             skipped.append(lang)
             continue
-        with open(path, encoding="utf-8") as fh:
-            fh.readline()  # header
-            words = [line.split("\t")[0] for _, line in zip(range(200), fh)]
+        words = read_words(path, 200)
         for _ in range(per_lang):
             n = int(rng.integers(25, 60))
             text = " ".join(rng.choice(words, size=n)) + " the"

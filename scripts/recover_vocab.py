@@ -42,7 +42,7 @@ Deterministic: the output depends only on the artifact, the options and
 the Unicode tables of ``unicodedata``, so a rerun reproduces
 ``models/vocab`` byte for byte (about 7 min with ``--jobs 3``). Usage::
 
-    python scripts/recover_vocab.py                 # all languages, top 2000
+    python scripts/recover_vocab.py                 # all languages
     python scripts/recover_vocab.py --langs eng,fin --out /tmp/vocab
     python scripts/recover_vocab.py --jobs 3        # languages in parallel
 """
@@ -71,10 +71,12 @@ from heliport_spark.model import (  # noqa: E402
     get_model,
     hash_grams,
 )
+from heliport_spark.quality_train import QC_VOCAB  # noqa: E402
 from heliport_spark.vocab import MANIFEST, VOCAB_DIR, lang_postings  # noqa: E402
 
 SPACE = 0x20
 MAX_ORDER = 6
+TOP = QC_VOCAB  # target list length: the longest any consumer reads
 # margin on the bigram estimate of delta; words in the top CALIBRATE of a
 # language pin the exact per-order deltas
 DELTA_MARGIN = 0.3
@@ -354,11 +356,11 @@ def _deltas(model, li: int, uni, k0, p0, p_sorted) -> "list[float]":
     return deltas
 
 
-def recover_lang(model, lang: str, top: int, uni) -> "tuple[list[str], dict]":
+def recover_lang(model, lang: str, uni) -> "tuple[list[str], dict]":
     """(ranked word list, manifest entry) for one language."""
     li = LANG_INDEX[lang]
     k0, p0 = lang_postings(model.orders[0], li)
-    n_req = min(top, len(k0))
+    n_req = min(TOP, len(k0))
     order = np.lexsort((k0, p0))
     p_sorted = p0[order]
     p_max = float(p_sorted[n_req - 1])
@@ -416,14 +418,13 @@ _MODEL = None
 _UNI = None
 
 
-def _work(args):
-    lang, top = args
+def _work(lang):
     global _MODEL, _UNI
     if _MODEL is None:
         _MODEL = get_model()
         _UNI = _unigram_codepoints(_MODEL)
     t0 = time.time()
-    words, entry = recover_lang(_MODEL, lang, top, _UNI)
+    words, entry = recover_lang(_MODEL, lang, _UNI)
     return lang, words, entry, time.time() - t0
 
 
@@ -436,20 +437,22 @@ def default_langs() -> "list[str]":
 
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--top", type=int, default=2000)
     ap.add_argument("--langs", default=None,
                     help="comma-separated codes (default: every language "
                          "with order-0 postings)")
-    ap.add_argument("--out", default=str(VOCAB_DIR))
+    ap.add_argument("--out", default=str(VOCAB_DIR),
+                    help="output directory; with --langs, the entries of "
+                         "other languages in its manifest.json are kept")
     ap.add_argument("--jobs", type=int, default=1)
     a = ap.parse_args(argv)
     langs = a.langs.split(",") if a.langs else default_langs()
     out = Path(a.out)
     out.mkdir(parents=True, exist_ok=True)
     entries = {}
-    work = [(l, a.top) for l in langs]
+    if a.langs and (out / MANIFEST).exists():
+        entries = json.loads((out / MANIFEST).read_text())["langs"]
     pool = Pool(a.jobs) if a.jobs > 1 else None
-    results = pool.imap_unordered(_work, work) if pool else map(_work, work)
+    results = pool.imap_unordered(_work, langs) if pool else map(_work, langs)
     for lang, words, entry, secs in results:
         for w in words:
             if not w or any(ch in w for ch in "\n\r\t"):
@@ -465,7 +468,7 @@ def main(argv=None) -> int:
         pool.join()
     manifest = {
         "source": "models/heli",
-        "top": a.top,
+        "top": TOP,
         "langs": {l: entries[l] for l in sorted(entries)},
     }
     (out / MANIFEST).write_text(

@@ -29,10 +29,11 @@ for v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
 
 def synth_corpus(model, n_texts: int, words_per_text: int) -> "list[str]":
     """Deterministic sentences: for each of 24 well-resourced languages, draw
-    words from that language's top-1500 word-model entries."""
+    words from that language's top-1500 ranked words (``vocab.top_words``)."""
     import numpy as np
 
     from heliport_spark.langs import LANGS
+    from heliport_spark.vocab import top_words
 
     rng = random.Random(1234)
     langs = [
@@ -43,22 +44,14 @@ def synth_corpus(model, n_texts: int, words_per_text: int) -> "list[str]":
     li = {l: i for i, l in enumerate(LANGS)}
     o0 = model.orders[0]
     # invert postings: per target lang, grams whose posting list contains it
-    # (order-0 keys are hashes; we need actual words — reuse ft_train's
-    # approach of reading the source text models instead)
-    src = "/root/reference/LanguageModels"
+    # (order-0 keys are hashes; we need actual words — read the ranked word
+    # lists: the reference's word models, else the recovered models/vocab)
     vocab: dict[str, list[str]] = {}
     for l in langs:
-        path = os.path.join(src, f"{l}.word.model")
-        words = []
-        if os.path.exists(path):
-            with open(path, encoding="utf-8") as fh:
-                next(fh)  # total-count header
-                for k, line in enumerate(fh):
-                    if k >= 1500:
-                        break
-                    w = line.split("\t", 1)[0]
-                    if w:
-                        words.append(w)
+        try:
+            words = [w for w in top_words(l, 1500) if w]
+        except FileNotFoundError:
+            continue
         if words:
             vocab[l] = words
     have = sorted(vocab)

@@ -9,7 +9,11 @@ vocabularies come through ``vocab.top_words``: the reference's
 ``<lang>.word.model`` files where they exist, else the ``models/vocab``
 lists recovered from the committed artifact (same words and ranking; ties
 in count are ordered by codepoints, so the sampled sentences differ from
-the reference-file corpus).
+the reference-file corpus). On the recovered lists two languages hold
+fewer than the 400 words asked for: ``tam`` 92 and ``tha`` 328 (the
+longest prefix of the ranking the recovery proved complete). Their
+sentences draw from that narrower, more frequent head: ranks 92-399 of
+``tam`` and 328-399 of ``tha`` are not exercised.
 """
 
 import numpy as np

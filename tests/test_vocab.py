@@ -11,6 +11,7 @@ list a top-rank prefix of the language's ranking.
 import json
 import subprocess
 import sys
+import warnings
 from pathlib import Path
 
 import numpy as np
@@ -80,6 +81,19 @@ def test_recovery_script_reproduces_fixture(tmp_path):
         assert manifest["langs"][lang] == committed["langs"][lang], lang
 
 
+def test_recovery_of_some_languages_keeps_the_manifest(tmp_path):
+    (tmp_path / MANIFEST).write_bytes((VOCAB_DIR / MANIFEST).read_bytes())
+    subprocess.run(
+        [sys.executable, str(REPO / "scripts" / "recover_vocab.py"),
+         "--langs", "estvro", "--out", str(tmp_path)],
+        check=True, capture_output=True,
+    )
+    assert (tmp_path / MANIFEST).read_bytes() == \
+        (VOCAB_DIR / MANIFEST).read_bytes()
+    assert (tmp_path / "estvro.words").read_bytes() == \
+        (VOCAB_DIR / "estvro.words").read_bytes()
+
+
 def _write_word_model(root: Path, lang: str, words):
     lines = [str(100 * len(words))]
     lines += [f"{w}\t{100 - i}" for i, w in enumerate(words)]
@@ -125,3 +139,24 @@ def test_quality_corpus_without_vocabulary_raises(tmp_path, monkeypatch):
     with pytest.raises(FileNotFoundError) as e:
         _synth_quality_corpus(np.random.default_rng(0), per_lang=3)
     assert str(tmp_path / "vocab") in str(e.value)
+
+
+def test_quality_corpus_names_fixture_languages(tmp_path, monkeypatch):
+    from heliport_spark.quality_train import QC_VOCAB, _synth_quality_corpus
+
+    _write_word_model(tmp_path, "eng", [f"w{i}" for i in range(QC_VOCAB)])
+    monkeypatch.setenv(WORD_MODELS_ENV, str(tmp_path))
+    monkeypatch.setattr(vocab, "REFERENCE_WORD_MODELS", tmp_path / "ref")
+    with pytest.warns(UserWarning, match="recovered from the artifact") as w:
+        _synth_quality_corpus(np.random.default_rng(0), per_lang=3)
+    msg = str(w[0].message)
+    assert "'spa'" in msg and "'eng'" not in msg
+    left_out = msg.split("left out")[1]
+    assert "'tam'" in left_out and "'spa'" not in left_out
+    # a corpus read from word models alone warns of nothing
+    monkeypatch.setattr(vocab, "VOCAB_DIR", tmp_path / "vocab")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        texts, _, _ = _synth_quality_corpus(np.random.default_rng(0),
+                                            per_lang=3)
+    assert len(texts) == 6
