@@ -23,7 +23,11 @@ Design notes for 100 TB:
   the JVM would copy it per-worker; instead every Python worker mmaps the
   same artifact files (``HELIPORT_MODEL_DIR`` or a cluster-shared path /
   ``SparkFiles`` archive), so resident cost is one page-cached copy per host.
-* ``spark.python.worker.reuse=true`` keeps the word memos warm across tasks.
+* ``spark.python.worker.reuse=true`` keeps the word memos warm across tasks,
+  and every worker forks from a daemon that has already imported the
+  engine, built the textstats tables and the default-model scorer
+  (``heliport_spark/worker_daemon.py``), so a fresh worker scores its first
+  row without that start-up.
 * one context per Arrow batch (``heli.BatchContext``): the UDF dedups the
   batch's texts once, joins and lowers them once, runs P1-P4 and the token
   span hashing once, and scoring, word-NLL, the fastText cross-check and

@@ -60,6 +60,9 @@ def get_spark(
         # JIT-compiles. JVM-property-derived, not a cluster-size tunable.
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
         .config("spark.python.worker.reuse", "true")
+        # fork workers from a daemon that has already imported the engine
+        # and built its tables (heliport_spark/worker_daemon.py)
+        .config("spark.python.daemon.module", "heliport_spark.worker_daemon")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )

@@ -129,7 +129,8 @@ _TOX_WORDS = ("badword", "slurword", "expletive")
 
 def java_letter_table() -> np.ndarray:
     """bool[0x110000]: Java-regex ``\\p{L}`` membership (lazy, built once
-    per process; ~1.1 MB)."""
+    per daemon and inherited by the workers it forks, see
+    heliport_spark/worker_daemon.py; ~1.1 MB)."""
     global _LETTER_TABLE
     if _LETTER_TABLE is None:
         t = np.zeros(N_CODEPOINTS, dtype=bool)
