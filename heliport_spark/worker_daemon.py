@@ -5,8 +5,9 @@ Spark forks every Python worker of an executor from one daemon process
 worker forked from the stock ``pyspark.daemon`` imports pandas, pyarrow and
 ``heliport_spark``, builds the textstats tables (a Python loop over 1.1M
 codepoints) and maps the model before it scores its first batch, so every
-fresh worker of a job pays ~1 s before its first row. Here the daemon runs
-those same calls once and the workers inherit the result copy-on-write:
+fresh worker of a job pays ~1 s (4-core host) before its first row. Here the
+daemon runs those same calls once and the workers inherit the result
+copy-on-write:
 
 * the imports every pandas-UDF worker makes;
 * ``textstats.class_table()`` and ``fold_table()``;
@@ -32,20 +33,6 @@ import gc
 import sys
 
 
-def _load() -> None:
-    import pandas  # noqa: F401
-    import pyarrow  # noqa: F401
-    import pyarrow.pandas_compat  # noqa: F401
-    import pyspark.sql.pandas.serializers  # noqa: F401
-
-    from heliport_spark import textstats
-    from heliport_spark.operators import identify
-
-    textstats.class_table()
-    textstats.fold_table()
-    identify._get_worker_scorer(identify.resolve_model_dir(None), None)
-
-
 def preload() -> None:
     """Load the engine into this process and freeze the heap. Never raises
     an ``Exception``: a failure is reported as one stderr line."""
@@ -53,7 +40,17 @@ def preload() -> None:
         # the daemon reports its port to the JVM on stdout: nothing else
         # may be written there
         with contextlib.redirect_stdout(sys.stderr):
-            _load()
+            import pandas  # noqa: F401
+            import pyarrow  # noqa: F401
+            import pyarrow.pandas_compat  # noqa: F401
+            import pyspark.sql.pandas.serializers  # noqa: F401
+
+            from heliport_spark import textstats
+            from heliport_spark.operators import identify
+
+            textstats.class_table()
+            textstats.fold_table()
+            identify._get_worker_scorer(identify.resolve_model_dir(None), None)
     except Exception as e:
         msg = " ".join(f"{type(e).__name__}: {e}".split())
         print(f"heliport_spark.worker_daemon: preload failed, workers load "
