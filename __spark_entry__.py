@@ -155,7 +155,7 @@ def _doc_quality(spark, sf):
 def _word_counts(spark, sf):
     from heliport_spark.operators.train import count_words
 
-    d = _t(spark, sf, "documents")
+    d = _docs_repart(spark, sf)
     return (
         count_words(d, "text")
         .orderBy(F.desc("cnt"), F.asc("gram"))

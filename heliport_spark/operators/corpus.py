@@ -584,19 +584,30 @@ def source_reputation_filter(df: DataFrame, text_col: str = "text",
     rows = df.select(
         F.col(group_col), F.col(id_col), keep.cast("int").alias("_k")
     )
-    good = (
-        rows.groupBy(group_col)
-        .agg(F.count(F.lit(1)).alias("_n"), F.sum("_k").alias("_nk"))
+    good = reputable_sources(df, text_col, group_col, min_keep_num,
+                             min_keep_den)
+    out = rows.join(good, group_col)
+    if require_doc_keep:
+        out = out.filter(F.col("_k") == 1)
+    return out.select(id_col, group_col)
+
+
+def reputable_sources(df: DataFrame, text_col: str = "text",
+                      group_col: str = "source", min_keep_num: int = 9,
+                      min_keep_den: int = 10) -> DataFrame:
+    """The reputable sources of :func:`source_reputation_filter`, one
+    ``group_col`` row each. A source-level gate semi-joins its documents on
+    this directly, with no join back through the doc ids."""
+    keep = gopher_keep_expr(F.col(text_col)).cast("int")
+    return (
+        df.groupBy(group_col)
+        .agg(F.count(F.lit(1)).alias("_n"), F.sum(keep).alias("_nk"))
         .filter(
             F.col("_nk") * F.lit(int(min_keep_den))
             >= F.col("_n") * F.lit(int(min_keep_num))
         )
         .select(group_col)
     )
-    out = rows.join(good, group_col)
-    if require_doc_keep:
-        out = out.filter(F.col("_k") == 1)
-    return out.select(id_col, group_col)
 
 
 BUCKET_LABELS_3 = ("head", "middle", "tail")

@@ -79,8 +79,10 @@ class _StageBook:
             # compute dedup — a cold cache re-runs the expensive upstream
             # (the LID scorer UDF; decode+mel+langid for clips, measured
             # 107 s → ~65 s at sf0.01) once per subtree. At 100 TB this
-            # count IS the parquet materialization between macro-stages.
-            frame.count()
+            # fill IS the parquet materialization between macro-stages.
+            # The noop sink runs the plan in one job (a count adds a
+            # second, single-task job for its final aggregate).
+            frame.write.format("noop").mode("overwrite").save()
         return frame
 
     def finish(self, out: DataFrame) -> DataFrame:
@@ -123,7 +125,8 @@ def curate_documents(
     per-doc work only on survivors):
 
     0a. SOURCE-reputation gate — drop whole junk domains
-        (``source_reputation_filter(require_doc_keep=False)``).
+        (``source_reputation_filter(require_doc_keep=False)``'s sources,
+        semi-joined on the source column).
     0b. LANGUAGE-ID gate (``lid=True``) — HeLI langid over the text column
         (operators/identify.py); rows identified as ``und``/``zxx`` are
         dropped and the PREDICTED language replaces ``lang_col`` for every
@@ -176,7 +179,7 @@ def curate_documents(
         decontaminate_bloom,
         gopher_keep_expr,
         quality_buckets,
-        source_reputation_filter,
+        reputable_sources,
         temperature_resample,
     )
     from .dedup import dup_clusters, exact_dedup, simhash_pairs
@@ -188,10 +191,12 @@ def curate_documents(
 
     # 0a: source gate (source-level only; the per-doc Gopher predicate is
     # stage 4 so the stages stay orthogonal)
-    reputable = source_reputation_filter(
-        df, text_col=text_col, id_col=id_col, require_doc_keep=False
-    ).select(id_col)
-    d = book.note("source_gate", df.join(reputable, id_col, "left_semi"))
+    reputable = reputable_sources(df, text_col=text_col)
+    d = book.note("source_gate", df.join(reputable, "source", "left_semi"))
+    # `rows`: the frame whose rows `d` selects, with no gate of its own to
+    # re-run (the input here, a persisted gate output below); the exact
+    # dedup survivors are semi-joined from it
+    rows = df
 
     if lid:
         from .identify import identify_df
@@ -208,7 +213,7 @@ def curate_documents(
         )
         # several downstream branches re-read this frame; persist so the
         # scorer UDF runs ONCE (at 100 TB: materialize to parquet instead)
-        d = book.note("lid_gate", book.persist(d))
+        d = rows = book.note("lid_gate", book.persist(d))
 
     if classifier:
         from .quality import classifier_score_df
@@ -216,7 +221,7 @@ def curate_documents(
         qd = classifier_score_df(
             d, text_col=text_col, threshold=classifier_threshold
         )
-        d = book.note(
+        d = rows = book.note(
             "classifier",
             book.persist(
                 qd.filter(F.col("qc_keep")).drop("qc_score", "qc_keep")
@@ -224,18 +229,16 @@ def curate_documents(
         )
 
     # 1: exact dedup first — collapses byte-identical piles pre-banding.
-    # Deliberately NOT persisted (measured sf0.1 min-of-3: persisting
-    # regressed the chain 11.9 → 14.2 s — the eager fill of a text-bearing
-    # frame costs more than the one extra fingerprint-agg + semi-join
-    # recompute it would save).
-    ex = book.note(
-        "exact",
-        d.join(
-            exact_dedup(d, text_col=text_col, id_col=id_col).select(id_col),
-            id_col,
-            "left_semi",
-        ),
-    )
+    # The text-bearing survivors are deliberately NOT persisted (measured
+    # sf0.1 min-of-3: an eager persist regressed the chain 11.9 → 14.2 s);
+    # their ids are cut once instead (an eager localCheckpoint of a small
+    # id-only frame, freed by the ContextCleaner with the frames that read
+    # it), so the simhash signatures and the near-dup survivors below each
+    # read `rows` ⋉ ids rather than re-running the source gate and the
+    # fingerprint aggregate.
+    keep = exact_dedup(d, text_col=text_col, id_col=id_col).select(
+        id_col).localCheckpoint(eager=True)
+    ex = book.note("exact", rows.join(keep, id_col, "left_semi"))
     # 2: near-dup clustering over the exact survivors
     losers = (
         dup_clusters(simhash_pairs(ex, text_col=text_col, id_col=id_col))
@@ -410,16 +413,11 @@ def curate_clips(
     # text(+embedding) projection — bytes are gone from here on
     kept = book.note("filtered", book.persist(kept0.select(*cols)))
 
-    # 2: exact dedup of scrubbed transcripts
-    ex = book.note(
-        "exact",
-        kept.join(
-            exact_dedup(kept, text_col="scrubbed_text", id_col=id_col)
-            .select(id_col),
-            id_col,
-            "left_semi",
-        ),
-    )
+    # 2: exact dedup of scrubbed transcripts (survivor ids cut once, as in
+    # curate_documents)
+    keep = exact_dedup(kept, text_col="scrubbed_text", id_col=id_col).select(
+        id_col).localCheckpoint(eager=True)
+    ex = book.note("exact", kept.join(keep, id_col, "left_semi"))
     # 3: transcript near-dup clustering
     losers = (
         dup_clusters(simhash_pairs(ex, text_col="scrubbed_text",

@@ -23,7 +23,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint
@@ -785,7 +785,9 @@ def winnow_shared_spans(df: DataFrame, text_col: str = "text",
     self-joined per-pair through two equi-joins keyed (id, fp) — candidate
     volume is bounded by the capped pair list × per-doc fingerprint density
     (~1/w of grams). The delta grouping is a hash aggregate after one
-    window lag per (pair, delta) partition; no crossJoin, no forced
+    window lag per (pair, delta) partition, which also drops groups of
+    fewer than ``min_fps`` matches; the match rows are spread over
+    defaultParallelism partitions by pair. No crossJoin, no forced
     broadcast, no Python."""
     # materialize the fingerprints ONCE (code-review r7): the pair list and
     # the two match sides would otherwise each re-run the corpus-wide
@@ -799,18 +801,25 @@ def winnow_shared_spans(df: DataFrame, text_col: str = "text",
     fps = winnow_fingerprints(df, text_col, id_col, k, w).localCheckpoint(
         eager=True
     )
-    pairs = _capped_overlap_pairs(fps, min_shared, max_bucket).select(
-        "id_a", "id_b"
+    # The pair list fans out to every matching fingerprint position (2.35M
+    # match rows from 32k pairs on perfbench curate_docs), and the
+    # segmentation window's (pair, delta) distribution is satisfied by the
+    # pair list's own (id_a, id_b) exchange. AQE coalesces that exchange
+    # from its PRE-fan-out size (2 partitions there), so without an
+    # explicit exchange the fan-out, sort, windows and span aggregate all
+    # ran on 2 tasks (explode-after-coalesce). AQE broadcasts both
+    # fingerprint sides, so the joins stream the pair list and the
+    # defaultParallelism partitions below carry through to the window.
+    par = fps.sparkSession.sparkContext.defaultParallelism
+    pairs = (
+        _capped_overlap_pairs(fps, min_shared, max_bucket)
+        .select("id_a", "id_b")
+        .repartition(par, "id_a", "id_b")
     )
     a = fps.select(F.col("id").alias("id_a"), F.col("fp"),
                    F.col("pos").alias("a_pos"))
     b = fps.select(F.col("id").alias("id_b"), F.col("fp"),
                    F.col("pos").alias("b_pos"))
-    # NO repartition on the pair list: the position-match joins stream the
-    # (much larger) fingerprint side while AQE runtime-broadcasts the pair
-    # list, so parallelism comes from the fps partitioning — an explicit
-    # exchange here measured NEUTRAL at sf0.1 and ~15% SLOWER at 10x
-    # (it interferes with the runtime broadcast decision)
     matches = (
         pairs.join(a, "id_a")
         .join(b, ["id_b", "fp"])
@@ -826,6 +835,14 @@ def winnow_shared_spans(df: DataFrame, text_col: str = "text",
     seg_w = Window.partitionBy("id_a", "id_b", "delta").orderBy("a_pos")
     segged = (
         matches.withColumn("_prev", F.lag("a_pos").over(seg_w))
+        # a (pair, delta) group of fewer than min_fps matches cannot hold a
+        # span of min_fps: drop it whole (its lags are already taken) before
+        # the second window and the aggregate. Computed in the lag's Window
+        # exec, so the matches are sorted once and never recomputed; it
+        # drops 98.6% of the match rows on perfbench curate_docs
+        .withColumn("_n", F.count(F.lit(1)).over(seg_w.rowsBetween(
+            Window.unboundedPreceding, Window.unboundedFollowing)))
+        .filter(F.col("_n") >= min_fps)
         .withColumn(
             "_brk",
             F.when(
@@ -1126,6 +1143,56 @@ def _release_cut(df: DataFrame) -> None:
         pass
 
 
+def _next_round(edges: DataFrame, labels: DataFrame, rnd: int) -> DataFrame:
+    """One min-label propagation round of :func:`dup_clusters`: (id, lab,
+    old) with each node's new label and, as ``old``, its current one."""
+    lab_t = dict(labels.dtypes)["lab"]
+    # carry each node's CURRENT label through the union as `old` (non-null
+    # only on the self part — every id appears exactly once there) so the
+    # convergence flag comes out of the same groupBy that produces the new
+    # labels (VERDICT r5 #4 — a join of new vs old labels made
+    # curate_corpus ~3 jobs/round)
+    parts = [labels.withColumn("old", F.col("lab"))]
+    prop = edges.join(
+        labels.withColumnRenamed("id", "src"), "src"
+    ).select(
+        F.col("dst").alias("id"), "lab",
+        F.lit(None).cast(lab_t).alias("old"),
+    )
+    parts.append(prop)
+    if rnd >= 3:
+        # still unconverged after 3 plain rounds ⇒ long-diameter
+        # component: add pointer jumping (adopt the label OF my
+        # current label, lab[lab[id]]) so labels spread along
+        # 2^k-hop paths and the loop closes in O(log diameter)
+        # further rounds. Not done earlier: typical near-dup
+        # graphs converge in ≤3 plain rounds and the extra
+        # self-join would be pure overhead there. (lab is always a
+        # node of the same component, so the min stays
+        # within-component and the fixpoint is unchanged.)
+        jmp = (
+            labels.alias("x")
+            .join(
+                labels.select(
+                    F.col("id").alias("jid"), F.col("lab").alias("jlab")
+                ),
+                F.col("x.lab") == F.col("jid"),
+            )
+            .select(
+                F.col("x.id").alias("id"),
+                F.col("jlab").alias("lab"),
+                F.lit(None).cast(lab_t).alias("old"),
+            )
+        )
+        parts.append(jmp)
+    u = parts[0]
+    for extra in parts[1:]:
+        u = u.union(extra)
+    return u.groupBy("id").agg(
+        F.min("lab").alias("lab"), F.max("old").alias("old")
+    )
+
+
 def dup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
                  max_iters: int = 50,
                  checkpoint_dir: "str | None" = None) -> DataFrame:
@@ -1141,9 +1208,9 @@ def dup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     are short chains in practice), with pointer jumping engaging after 3
     rounds (O(log diameter) on deep components). Each round is one
     equi-join over the FULL edge list + one map-side-combinable min
-    aggregate; the convergence check is a filter-count over the freshly
-    checkpointed label table. ``localCheckpoint`` cuts lineage growth per
-    round.
+    aggregate (round 0, from lab = id, needs only the aggregate); the
+    convergence count is observed on the job that checkpoints the round's
+    labels. ``localCheckpoint`` cuts lineage growth per round.
 
     Fault tolerance (VERDICT r03 #3): the default per-round lineage cut is
     ``localCheckpoint`` — truncated lineage into NON-RELIABLE executor-local
@@ -1193,14 +1260,10 @@ def dup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
             )
         sc.setCheckpointDir(checkpoint_dir)
 
-    def _cut(df: DataFrame, eager: bool = True) -> DataFrame:
-        # eager=False for frames whose first action immediately follows:
-        # the action materializes the checkpoint, so eager=True's separate
-        # materialization job would be pure per-round latency (the loop
-        # below counts the fresh frame right after cutting it)
+    def _cut(df: DataFrame) -> DataFrame:
         if checkpoint_dir is not None:
-            return df.checkpoint(eager=eager)
-        return df.localCheckpoint(eager=eager)
+            return df.checkpoint(eager=True)
+        return df.localCheckpoint(eager=True)
 
     edges = pairs.select(
         F.col(id_a).alias("src"), F.col(id_b).alias("dst")
@@ -1209,98 +1272,44 @@ def dup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     ).distinct()
     # materialize the edge list ONCE: every propagation round joins it, and
     # without the cut each round would re-run the whole upstream candidate
-    # generation (LSH banding etc.) through the lazy lineage
+    # generation (LSH banding etc.) through the lazy lineage. Its partition
+    # count is what AQE coalesced the distinct to, so a small pair graph
+    # runs its rounds on few tasks.
     try:
         edges = _cut(edges)
-        # size the loop's frames from the MATERIALIZED edge count (cheap —
-        # cached blocks), not spark.sql.shuffle.partitions: a small pair
-        # graph otherwise drags 32+ near-empty tasks through every round's
-        # jobs, and the loop is latency-bound, not data-bound (guide §2 —
-        # scale-adaptive partitioning; ~20k edges/partition keeps big
-        # graphs at defaultParallelism unchanged)
-        n_edges = edges.count()
-        par = pairs.sparkSession.sparkContext.defaultParallelism
-        n_part = int(max(1, min(par, n_edges // 20_000 + 1)))
-        if edges.rdd.getNumPartitions() > n_part:
-            wide = edges
-            edges = _cut(edges.coalesce(n_part))
-            _release_cut(wide)
-        labels = _cut(
-            edges.select(F.col("src").alias("id"))
-            .distinct()
-            .withColumn("lab", F.col("id"))
+        # round 0 starts from lab = id, so its propagation needs no join:
+        # every node (each is a src of the symmetric edge list) takes the
+        # min of itself and its neighbours
+        labels = edges.groupBy("src").agg(F.min("dst").alias("m")).select(
+            F.col("src").alias("id"),
+            F.least("src", "m").alias("lab"),
+            F.col("src").alias("old"),
         )
         changed = 0
-        lab_t = dict(labels.dtypes)["lab"]
-        ckpt = labels  # the round's materialized frame (unpersist target)
+        ckpt = None  # the previous round's cut (unpersist target)
         for rnd in range(max_iters):
-            # carry each node's CURRENT label through the union as `old`
-            # (non-null only on the self part — every id appears exactly
-            # once there) so the convergence check is computed inside the
-            # same groupBy that produces the new labels: `changed` then
-            # costs a filter-count over the freshly CHECKPOINTED label
-            # table (O(V), cached blocks, no shuffle) instead of the
-            # former O(E) join of new vs old labels (VERDICT r5 #4 — the
-            # join made curate_corpus ~3 jobs/round)
-            parts = [labels.withColumn("old", F.col("lab"))]
-            prop = edges.join(
-                labels.withColumnRenamed("id", "src"), "src"
-            ).select(
-                F.col("dst").alias("id"), "lab",
-                F.lit(None).cast(lab_t).alias("old"),
-            )
-            parts.append(prop)
-            if rnd >= 3:
-                # still unconverged after 3 plain rounds ⇒ long-diameter
-                # component: add pointer jumping (adopt the label OF my
-                # current label, lab[lab[id]]) so labels spread along
-                # 2^k-hop paths and the loop closes in O(log diameter)
-                # further rounds. Not done from round 0: typical near-dup
-                # graphs converge in ≤3 plain rounds and the extra
-                # self-join would be pure overhead there. (lab is always a
-                # node of the same component, so the min stays
-                # within-component and the fixpoint is unchanged.)
-                jmp = (
-                    labels.alias("x")
-                    .join(
-                        labels.select(
-                            F.col("id").alias("jid"), F.col("lab").alias("jlab")
-                        ),
-                        F.col("x.lab") == F.col("jid"),
-                    )
-                    .select(
-                        F.col("x.id").alias("id"),
-                        F.col("jlab").alias("lab"),
-                        F.lit(None).cast(lab_t).alias("old"),
-                    )
-                )
-                parts.append(jmp)
-            u = parts[0]
-            for extra in parts[1:]:
-                u = u.union(extra)
-            new_labels = _cut(
-                u.groupBy("id")
-                .agg(F.min("lab").alias("lab"), F.max("old").alias("old"))
-                .withColumn("_chg", F.col("lab") != F.col("old")),
-                eager=False,
-            )
-            # this count is the round's ONE action: it materializes the
-            # lazy checkpoint (every partition is scanned, so all blocks
-            # are stored) AND reads the convergence flag — folding what
-            # used to be an eager-checkpoint job + a count job per round
-            changed = new_labels.filter(F.col("_chg")).count()
+            # the round's ONE action: the cut materializes the new labels,
+            # and the observed sum reads the convergence count off that
+            # same job (a separate count would be 2 more jobs per round)
+            obs = Observation()
+            labels = _cut(labels.observe(obs, F.sum(
+                (F.col("lab") != F.col("old")).cast("long")
+            ).alias("changed")))
+            changed = obs.get["changed"] or 0
             # free the superseded round's checkpoint blocks now instead of
             # waiting for driver GC + ContextCleaner (otherwise up to
             # max_iters copies of the label table stay pinned in executor
-            # storage); the count above truncated new_labels' lineage, so
+            # storage); the cut truncated the new labels' lineage, so
             # nothing reads ckpt any more
-            _release_cut(ckpt)
-            ckpt = new_labels
+            if ckpt is not None:
+                _release_cut(ckpt)
+            ckpt = labels
             # projection over the checkpointed frame (free) — drops the
-            # convergence bookkeeping columns before the next round
-            labels = new_labels.select("id", "lab")
+            # convergence bookkeeping column before the next round
+            labels = labels.select("id", "lab")
             if changed == 0:
                 break
+            labels = _next_round(edges, labels, rnd + 1)
         if changed != 0:
             # partially-propagated labels are silently WRONG cluster ids —
             # fail loudly instead (a component with diameter > max_iters

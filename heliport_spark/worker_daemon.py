@@ -1,8 +1,8 @@
 """Python worker daemon that loads the engine once, before it forks workers.
 
 Spark forks every Python worker of an executor from one daemon process
-(``spark.python.daemon.module``; ``plans.get_spark`` names this module). A
-worker forked from the stock ``pyspark.daemon`` imports pandas, pyarrow and
+(``spark.python.daemon.module``; ``plans.get_spark`` names this module on
+local masters). A worker forked from the stock ``pyspark.daemon`` imports pandas, pyarrow and
 ``heliport_spark``, builds the textstats tables (a Python loop over 1.1M
 codepoints) and maps the model before it scores its first batch, so every
 fresh worker of a job pays ~1 s (4-core host) before its first row. Here the

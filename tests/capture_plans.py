@@ -18,7 +18,8 @@ SECTIONS = [
      "wide hash aggregation: partial_ aggregates before the exchange "
      "(map-side combine)"),
     ("word_counts",
-     "T1/T3: JVM-side explode -> partial+final hash agg -> "
+     "T1/T3: the one-file scan spread by doc_id (_docs_repart) -> "
+     "JVM-side explode -> partial+final hash agg -> "
      "TakeOrderedAndProject (no global sort materialization)"),
     ("revenue_rollup", "ROLLUP expand over broadcast-joined dims"),
     ("dedup_minhash_lsh",
@@ -107,9 +108,11 @@ SECTIONS = [
     ("winnow_shared_spans",
      "shared-span extraction: the fingerprint table is materialized ONCE "
      "(eager localCheckpoint — the scans below read its blocks, not the "
-     "corpus) then capped fp self-join -> pair agg -> two (id, fp) "
-     "equi-joins -> per-(pair, delta) lag window + running-sum "
-     "segmentation -> span hash-agg; no crossJoin, no forced broadcast"),
+     "corpus) then capped fp self-join -> pair agg -> pair list "
+     "repartitioned to defaultParallelism by (id_a, id_b) -> two (id, fp) "
+     "equi-joins -> per-(pair, delta) lag window + group count (groups "
+     "under min_fps dropped) -> running-sum segmentation -> span "
+     "hash-agg; no crossJoin, no forced broadcast"),
     ("curate_corpus_lid",
      "the full 100 TB curation chain: source gate -> HeLI LID gate (one "
      "ArrowEvalPython over the persisted post-gate frame) -> exact dedup "

@@ -311,3 +311,21 @@ def test_curate_clips_end_to_end(spark):
     for name, frame in st.items():
         lvl = frame.storageLevel
         assert not (lvl.useMemory or lvl.useDisk), name
+
+
+def test_curate_corpus_job_ceiling(spark):
+    """The chain's cost on small inputs is mostly fixed per-job cost, so
+    its job count is pinned: the source gate and exact dedup run once
+    (their survivor ids are cut, not recomputed by each reader), and the
+    near-dup clustering spends one job group per round with no count or
+    re-cut of its own."""
+    import __spark_entry__ as e
+    from tests.test_pipeline import _jobs_started
+
+    rows = []
+    jobs = _jobs_started(
+        spark, "curate-corpus-jobs",
+        lambda: rows.extend(e.queries()["curate_corpus"](spark, SF_SMALL)
+                            .collect()))
+    assert len(rows) == 195
+    assert jobs <= 48, jobs

@@ -214,3 +214,38 @@ def test_fingerprint_match_plan_capped_mapside_and_cached(spark):
     assert plan.count("InMemoryTableScan") >= 2  # both join sides + overflow
     assert "ResolvedHint" not in m._jdf.queryExecution().logical().toString()
     fp.unpersist()
+
+
+def _window_stage_tasks(df, marker: str) -> int:
+    """Tasks of the stage that runs the executed plan's Window exec whose
+    description contains ``marker`` (call after ``df`` has run, so the
+    adaptive plan is final)."""
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Window" and marker in node.simpleString(1000):
+            # a Window is narrow over its input: its RDD's partitions are
+            # its stage's tasks
+            return node.execute().getNumPartitions()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+        elif node.getClass().getSimpleName().endswith("QueryStageExec"):
+            stack.append(node.plan())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    raise AssertionError(f"no Window exec with {marker!r} in the plan")
+
+
+def test_shared_span_window_runs_on_every_core(spark):
+    """remove_shared_spans' match join fans a small pair list out to every
+    matching fingerprint position, then segments the matches with a
+    (pair, delta) window. The pair list's exchange is sized from its
+    pre-fan-out size, so unless the operator sizes it from
+    defaultParallelism, the fan-out, sort and window all run on the few
+    tasks AQE coalesced it to."""
+    import __spark_entry__ as e
+
+    df = e.extra_queries()["remove_shared_spans"](spark, SF)
+    df.collect()  # the whole plan: count() would drop the LEFT JOIN
+    par = spark.sparkContext.defaultParallelism
+    assert _window_stage_tasks(df, "lag(a_pos") >= par

@@ -48,3 +48,30 @@ def test_workers_fork_from_preloaded_daemon(spark):
             .select(worker_state("id").alias("s"))
             .distinct().collect())
     assert [r.s for r in rows] == ["class_table=True frozen=True scorer=True"]
+
+
+def test_session_conf_names_daemon_only_for_local_masters():
+    """The preloaded daemon is named only where it can import the engine
+    when it starts; every other master, spark-submit's own (None) included,
+    keeps the stock daemon. The rest of the table is master-independent."""
+    from heliport_spark.plans import WORKER_DAEMON, session_conf
+
+    key = "spark.python.daemon.module"
+    for master in ("local", "local[4]", "local[*]"):
+        assert session_conf(master, 8)[key] == WORKER_DAEMON
+    for master in (None, "local-cluster[2,1,1024]", "yarn",
+                   "spark://host:7077", "k8s://https://host:443"):
+        assert key not in session_conf(master, 8)
+    local = session_conf("local[4]", 8)
+    del local[key]
+    assert local == session_conf(None, 8)
+
+
+def test_get_spark_applies_the_conf_table(spark):
+    """The test session (get_spark on local[8]) was launched with every
+    entry of the table."""
+    from heliport_spark.plans import session_conf
+
+    conf = dict(spark.sparkContext.getConf().getAll())
+    for k, v in session_conf("local[8]", 8).items():
+        assert conf.get(k) == v, k
