@@ -834,10 +834,9 @@ def _curate_corpus(spark, sf, eager=True):
     """END-TO-END corpus curation — the full path a training-data team runs,
     composed from the already-oracle-exact stages and their SHARED constants:
     (0a) SOURCE-reputation gate first (RefinedWeb order: drop whole junk
-        domains before paying any per-doc work;
-        ``source_reputation_filter(require_doc_keep=False)`` — source-level
-        only, the per-doc Gopher predicate stays at stage 3 so the stages
-        remain orthogonal);
+        domains before paying any per-doc work; ``reputable_sources`` —
+        source-level only, the per-doc Gopher predicate stays at stage 3 so
+        the stages remain orthogonal);
     (0b) EXACT dedup (VERDICT r04 #3): one cheap fingerprint hash-agg
         collapses byte-identical piles before any banding, which
         structurally removes the degenerate (band, sig) buckets the

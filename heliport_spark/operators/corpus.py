@@ -561,14 +561,13 @@ def source_reputation_filter(df: DataFrame, text_col: str = "text",
                              id_col: str = "doc_id",
                              group_col: str = "source",
                              min_keep_num: int = 9,
-                             min_keep_den: int = 10,
-                             require_doc_keep: bool = True) -> DataFrame:
+                             min_keep_den: int = 10) -> DataFrame:
     """RefinedWeb/C4-style domain-reputation gate: drop EVERY document from
     a source (domain) whose Gopher keep rate falls below
     ``min_keep_num/min_keep_den`` — a domain that is mostly junk poisons
     even its passing pages (boilerplate farms, SEO spam). Survivors are
-    docs from reputable sources; ``require_doc_keep=True`` (default)
-    additionally requires the doc itself to pass ``gopher_keep_expr``.
+    docs from reputable sources that themselves pass ``gopher_keep_expr``
+    (:func:`reputable_sources` is the source-level gate alone).
 
     The threshold is an exact-integer cross-multiplication
     (``n_keep * den >= n_docs * num``) so the decision is bit-portable
@@ -586,10 +585,11 @@ def source_reputation_filter(df: DataFrame, text_col: str = "text",
     )
     good = reputable_sources(df, text_col, group_col, min_keep_num,
                              min_keep_den)
-    out = rows.join(good, group_col)
-    if require_doc_keep:
-        out = out.filter(F.col("_k") == 1)
-    return out.select(id_col, group_col)
+    return (
+        rows.join(good, group_col)
+        .filter(F.col("_k") == 1)
+        .select(id_col, group_col)
+    )
 
 
 def reputable_sources(df: DataFrame, text_col: str = "text",

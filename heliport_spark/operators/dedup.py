@@ -807,9 +807,15 @@ def winnow_shared_spans(df: DataFrame, text_col: str = "text",
     # pair list's own (id_a, id_b) exchange. AQE coalesces that exchange
     # from its PRE-fan-out size (2 partitions there), so without an
     # explicit exchange the fan-out, sort, windows and span aggregate all
-    # ran on 2 tasks (explode-after-coalesce). AQE broadcasts both
-    # fingerprint sides, so the joins stream the pair list and the
-    # defaultParallelism partitions below carry through to the window.
+    # ran on 2 tasks (explode-after-coalesce). While the fingerprint table
+    # is under spark.sql.autoBroadcastJoinThreshold (every input measured,
+    # up to 10x sf0.1), AQE broadcasts both fingerprint sides, so the joins
+    # stream the pair list and the defaultParallelism partitions below
+    # carry through to the window. Above the threshold the id_a join
+    # becomes a sort-merge join that (id_a, id_b) hashing does not satisfy,
+    # so this exchange is then extra; that regime, and whether (id_a, id_b)
+    # beats id_a alone on hub-heavy pair lists, are unmeasured (ROADMAP
+    # C15).
     par = fps.sparkSession.sparkContext.defaultParallelism
     pairs = (
         _capped_overlap_pairs(fps, min_shared, max_bucket)

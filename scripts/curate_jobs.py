@@ -3,13 +3,13 @@
 
 Usage (from the repository root):
 
-    python3 scripts/curate_jobs.py DOCS_DIR [--master local[4]] [--warmup 1]
+    python3 scripts/curate_jobs.py DOCS_DIR [--master local[4]]
 
 ``DOCS_DIR`` holds a ``documents.parquet`` table (a testdata scale-factor
 directory, or a perfbench curate_docs input such as
 ``.perfbench_work/inputs/curate_docs-s1-v1``). The script runs the registered
 ``curate_corpus`` and ``remove_shared_spans`` queries, each collected in
-full as perfbench does, after ``--warmup`` untimed passes over the same
+full as perfbench does, after one untimed warm-up pass over the same
 input. For every driver action the timed pass takes (each ``count``,
 ``collect``/``toPandas``, eager checkpoint and ``write.save``) it prints:
 
@@ -170,7 +170,6 @@ def main(argv=None) -> int:
     ap.add_argument("docs_dir")
     ap.add_argument("--master",
                     default=f"local[{min(4, os.cpu_count() or 1)}]")
-    ap.add_argument("--warmup", type=int, default=1)
     args = ap.parse_args(argv)
     if not os.path.exists(os.path.join(args.docs_dir, "documents.parquet")):
         ap.error(f"{args.docs_dir} has no documents.parquet")
@@ -192,9 +191,8 @@ def main(argv=None) -> int:
                               "spark.ui.showConsoleProgress": "false",
                           })
         spark.sparkContext.setLogLevel("ERROR")
-        for _ in range(args.warmup):
-            for q in QUERIES:
-                qs[q](spark, args.docs_dir).toPandas()
+        for q in QUERIES:  # the untimed warm-up pass
+            qs[q](spark, args.docs_dir).toPandas()
         log = ActionLog(spark.sparkContext)
         for name in ACTIONS:
             log.wrap(type(spark.range(1)), name)  # the classic DataFrame

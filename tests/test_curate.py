@@ -221,6 +221,27 @@ def test_curate_persist_lifecycle(spark):
     assert len(out.collect()) == 195
 
 
+def test_stage_book_frees_its_cuts(spark):
+    """An eager chain frees its id cuts in ``finish`` unless ``stages=``
+    exposed frames that still read them."""
+    from heliport_spark.operators.curate import _StageBook
+
+    def held(rid):
+        # getPersistentRDDs returns a snapshot: read it after each step
+        return spark.sparkContext._jsc.getPersistentRDDs().containsKey(rid)
+
+    def cut_kept(stages):
+        book = _StageBook(stages, eager=True)
+        cut = book.note("ids", book.cut(spark.range(10)))
+        rid = cut._jdf.queryExecution().logical().rdd().id()
+        assert held(rid)
+        book.finish(spark.range(3))
+        return held(rid)
+
+    assert not cut_kept(None)
+    assert cut_kept({})
+
+
 def test_curate_lazy_mode_unchanged(spark):
     """eager=False keeps the old fully-lazy composition: same values, and
     the stage intermediates stay persisted until release_stages frees

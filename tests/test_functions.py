@@ -841,9 +841,12 @@ def test_curate_corpus_composition(spark):
 
 def test_source_reputation_filter(spark):
     """Domain gate: a junk-heavy source loses ALL its docs (even its one
-    good page); a reputable source keeps only its passing docs — unless
-    require_doc_keep=False, which admits everything from good sources."""
-    from heliport_spark.operators.corpus import source_reputation_filter
+    good page); a reputable source keeps only its passing docs, and the
+    source-level gate alone (reputable_sources) admits the source."""
+    from heliport_spark.operators.corpus import (
+        reputable_sources,
+        source_reputation_filter,
+    )
 
     good_text = "the quick brown fox jumps over the lazy dog again and again"
     junk_text = "zzzzzzzzzzzzzzzzzzzzzzzzzzzzzzzzzzzzzzzz"
@@ -855,9 +858,9 @@ def test_source_reputation_filter(spark):
     kept = source_reputation_filter(df).collect()
     ids = {r["doc_id"] for r in kept}
     assert ids == {100 + i for i in range(9)}  # spamfarm fully gone,
-    # news keeps only its passing docs; with the doc-level rule off, the
+    # news keeps only its passing docs; without the doc-level rule the
     # whole reputable domain survives (109 included), spamfarm still gone
-    all_news = source_reputation_filter(df, require_doc_keep=False).collect()
+    all_news = df.join(reputable_sources(df), "source", "left_semi").collect()
     assert {r["doc_id"] for r in all_news} == {100 + i for i in range(10)}
 
 
