@@ -25,7 +25,9 @@ a batch share — the exact-duplicate factorize of the raw texts, the raw
 token span hashes. HeLI scoring, the word-NLL signal, the fastText
 cross-check and (in the identify UDF) textstats are functions of it,
 computed once per distinct text and scattered back by the dedup codes. The
-public ``*_batch`` calls each build their own context.
+identify UDF runs the fastText cross-check on ``BatchContext.subset`` of
+the texts whose HeLI label is determined (operators/identify.py). The
+public ``*_batch`` calls each build their own context and score every text.
 
 Two accumulation modes:
 
@@ -60,6 +62,7 @@ from .model import (
     HeliModel,
     get_model,
     hash_grams,
+    sorted_probe,
 )
 
 MAX_NGRAM = 6  # identifier.rs:38
@@ -71,7 +74,9 @@ _EMPTY_F32 = np.empty(0, np.float32)
 # word-NLL gathers from a dense (distinct word × winner lang) matrix built
 # this many cells at a time (32 MB of f32), one block of winner columns each
 _WNLL_BLOCK_CELLS = 8_000_000
-# rows per chunk when one long segment is left in a _seq_row_sums tail
+# _seq_row_sums sums length-sorted segments this many at a time, and a
+# segment left alone in its block's tail finishes this many rows per chunk
+_SEQ_BLOCK = 256
 _SEQ_CHUNK = 4096
 
 
@@ -174,27 +179,42 @@ def _seq_row_sums(M: np.ndarray, idx: np.ndarray, seg_start: np.ndarray,
     added sequentially from +0.0 in j order into a ``dtype`` accumulator
     (default ``M.dtype``) — bit-identical to numpy's axis-0 sum of the
     segment's rows and to ``np.add.at`` over them (``np.add.reduceat`` is
-    not). A shrinking-tail loop over j: segments sorted by length, so the
-    live ones at step j are a contiguous tail. A segment left alone in the
+    not). Segments are sorted by length and summed in blocks of
+    ``_SEQ_BLOCK``; inside a block a shrinking-tail loop over j adds the
+    live segments' rows (a contiguous tail) through two reused buffers, so
+    every step gathers into cache-sized memory instead of allocating a
+    fresh (tail × columns) temporary. A segment left alone in its block's
     tail (one long word or text) finishes in sequential chunks instead of
     one numpy call per row."""
     k = len(seg_len)
-    acc = np.zeros((k, M.shape[1]), dtype=dtype or M.dtype)
+    dt = np.dtype(dtype or M.dtype)
+    out = np.empty((k, M.shape[1]), dtype=dt)
     order = np.argsort(seg_len, kind="stable")
     ls = seg_len[order]
     base = seg_start[order]
-    for j in range(int(ls[-1]) if k else 0):
-        lo = int(np.searchsorted(ls, j + 1))
-        if lo == k - 1:
-            rest = idx[base[lo] + j : base[lo] + ls[lo]]
-            a = acc[lo]
-            for c in range(0, len(rest), _SEQ_CHUNK):
-                a = np.vstack([a[None], M[rest[c : c + _SEQ_CHUNK]]]).sum(axis=0)
-            acc[lo] = a
-            break
-        acc[lo:] += M[idx[base[lo:] + j]]
-    out = np.empty_like(acc)
-    out[order] = acc
+    M = np.asarray(M)  # a memmap's subclass indexing stays off the path
+    acc = np.empty((min(k, _SEQ_BLOCK), M.shape[1]), dtype=dt)
+    buf = np.empty(acc.shape, dtype=M.dtype)
+    for b0 in range(0, k, _SEQ_BLOCK):
+        lb, bb = ls[b0 : b0 + _SEQ_BLOCK], base[b0 : b0 + _SEQ_BLOCK]
+        nb = len(lb)
+        a = acc[:nb]
+        a.fill(0)
+        for j in range(int(lb[-1])):
+            lo = int(np.searchsorted(lb, j + 1))
+            if lo == nb - 1:
+                rest = idx[bb[lo] + j : bb[lo] + lb[lo]]
+                r = a[lo]
+                for c in range(0, len(rest), _SEQ_CHUNK):
+                    r = np.vstack([r[None], M[rest[c : c + _SEQ_CHUNK]]]).sum(axis=0)
+                a[lo] = r
+                break
+            # mode="clip": take buffers its output under the default "raise";
+            # every index is in range
+            g = np.take(M, idx[bb[lo:] + j], axis=0, out=buf[: nb - lo],
+                        mode="clip")
+            a[lo:] += g
+        out[order[b0 : b0 + nb]] = a
     return out
 
 
@@ -358,10 +378,10 @@ def _grow(arr: np.ndarray, need: int) -> np.ndarray:
 
 class _WordIndex:
     """Word-hash → slot map of a word memo: a SORTED key snapshot probed with
-    one vectorized searchsorted (a per-unique dict.get generator measured
-    ~20 ms per warm 10k×45-word batch; the probe is ~2 ms). Words are added
-    once per batch; hashes are never re-added, so concatenate-and-sort
-    needs no dedup."""
+    ``sorted_probe``, one vectorized searchsorted (a per-unique dict.get
+    generator measured ~20 ms per warm 10k×45-word batch; the probe is
+    ~2 ms). Words are added once per batch; hashes are never re-added, so
+    concatenate-and-sort needs no dedup."""
 
     def __init__(self):
         self.keys = np.empty(0, np.uint64)
@@ -372,11 +392,10 @@ class _WordIndex:
 
     def lookup(self, h: np.ndarray) -> np.ndarray:
         """Slot of each hash, -1 for unknown."""
-        ks = self.keys
-        if not ks.size:
-            return np.full(len(h), -1, np.int64)
-        p = np.minimum(np.searchsorted(ks, h), ks.size - 1)
-        return np.where(ks[p] == h, self.slots[p], np.int64(-1))
+        p = sorted_probe(self.keys, h)
+        hit = p >= 0
+        p[hit] = self.slots[p[hit]]
+        return p
 
     def add(self, h: np.ndarray, slots: np.ndarray) -> None:
         keys = np.concatenate([self.keys, h])
@@ -413,13 +432,16 @@ class BatchContext:
         # distinct tokens by 64-bit span hash — the SAME hash the model keys
         # use (order-0 lookup consumes it directly) and the word memos' key
         # (a 64-bit collision merging two words is ~(d²/2)·2⁻⁶⁴, far below
-        # the model's own hash-collision tolerance). Hash factorize, not
-        # np.unique: no argsort (63 → 9 ms per 10k×45-word batch).
+        # the model's own hash-collision tolerance)
+        self._set_words(_hash_spans(self.cp, self.s_idx, self.tok_len))
+
+    def _set_words(self, tok_h: np.ndarray) -> None:
+        """flat_ids, uniq_h and first_idx from the per-token span hashes.
+        Hash factorize, not np.unique: no argsort (63 → 9 ms per 10k×45-word
+        batch)."""
         import pandas as pd
 
-        flat_ids, uniq_h = pd.factorize(
-            _hash_spans(self.cp, self.s_idx, self.tok_len)
-        )
+        flat_ids, uniq_h = pd.factorize(tok_h)
         self.flat_ids = flat_ids.astype(np.int64, copy=False)
         self.uniq_h = np.asarray(uniq_h, dtype=np.uint64)
         # each distinct token's first occurrence: reversed scatter, the
@@ -431,6 +453,29 @@ class BatchContext:
 
     def scatter(self, a: np.ndarray) -> np.ndarray:
         return a if self.codes is None else a[self.codes]
+
+    def subset(self, rows: np.ndarray) -> "BatchContext":
+        """The context of the distinct texts ``rows`` (ascending indices into
+        ``texts``), cut out of this one without a second P1-P4 or hashing
+        pass: every field equals that of a context built from those texts,
+        except that ``cp`` is this context's buffer (the token offsets index
+        it) and ``raw``/``low`` are None (textstats cannot read a subset)."""
+        sub = object.__new__(BatchContext)
+        sub.n = len(rows)
+        sub.codes, sub.raw, sub.low = None, None, None
+        sub.texts = [self.texts[i] for i in rows]
+        cnt = np.diff(self.bounds)[rows]
+        sub.bounds = np.zeros(len(rows) + 1, dtype=np.int64)
+        np.cumsum(cnt, out=sub.bounds[1:])
+        tk = np.repeat(self.bounds[rows] - sub.bounds[:-1], cnt) + \
+            np.arange(int(sub.bounds[-1]))
+        sub.cp = self.cp
+        sub.s_idx, sub.e_idx, sub.tok_len = (
+            self.s_idx[tk], self.e_idx[tk], self.tok_len[tk])
+        sub.tok_text = np.repeat(np.arange(len(rows)), cnt)
+        sub.cjk_pct, sub.valid = self.cjk_pct[rows], self.valid[rows]
+        sub._set_words(self.uniq_h[self.flat_ids[tk]])
+        return sub
 
 
 def _row_sums(ctx: BatchContext, X: np.ndarray) -> np.ndarray:
@@ -905,7 +950,9 @@ class Scorer:
         artifact raises FileNotFoundError.
 
         Disagreement with the HeLI label is surfaced as a rule flag only —
-        it never overrides the HeLI decision (F1-parity requirement).
+        it never overrides the HeLI decision (F1-parity requirement). The
+        identify UDF passes ``ctx.subset`` of the determined texts, the only
+        rows where that flag can fire.
         """
         M, bias = self._ft_params()
         n = len(ctx.texts)

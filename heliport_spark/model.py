@@ -16,8 +16,11 @@ Spark executors:
 
 Rationale (100 TB scale): the arrays are loaded with ``np.load(mmap_mode="r")``
 so all Python workers on an executor share one page-cached copy; lookups are
-``np.searchsorted`` over the whole batch — no Python dict, no per-row work.
-Batch lookup of k grams costs O(k log n) fully inside numpy.
+one ``np.searchsorted`` over the whole batch — no Python dict, no per-row
+work. The batch's needles are probed in sorted order (``sorted_probe``):
+ascending needles let each binary search start from the previous one's
+bound and walk neighbouring keys, so k lookups touch the table's pages in
+one forward sweep instead of k random descents through up to 1.8M keys.
 
 Hashing: FNV-1a over UTF-32 codepoints with a splitmix64 finalizer,
 vectorized column-wise with a length mask so a gram hashes identically
@@ -86,6 +89,24 @@ def hash_grams(grams: "list[str] | np.ndarray") -> np.ndarray:
     return h
 
 
+def sorted_probe(keys: np.ndarray, needles: np.ndarray) -> np.ndarray:
+    """Index of each needle in the sorted ``keys``, -1 where absent: the
+    needles are argsorted, binary-searched in ascending order (numpy's
+    ``searchsorted`` narrows each search from the previous bound) and the
+    results scattered back, so the indices equal an unsorted probe's."""
+    out = np.full(len(needles), -1, dtype=np.int64)
+    if not len(keys) or not len(needles):
+        return out
+    keys = np.asarray(keys)  # a memmap's subclass indexing stays off the path
+    order = np.argsort(needles)
+    sn = needles[order]
+    p = np.searchsorted(keys, sn)
+    np.minimum(p, len(keys) - 1, out=p)
+    hit = keys[p] == sn
+    out[order[hit]] = p[hit]
+    return out
+
+
 class OrderTable:
     """One n-gram order: sorted hash keys + posting lists."""
 
@@ -102,12 +123,7 @@ class OrderTable:
 
     def lookup(self, hashes: np.ndarray) -> np.ndarray:
         """Return index into keys for each hash, or -1 if absent."""
-        idx = np.searchsorted(self.keys, hashes)
-        idx[idx >= len(self.keys)] = len(self.keys) - 1 if len(self.keys) else 0
-        if len(self.keys) == 0:
-            return np.full(len(hashes), -1, dtype=np.int64)
-        found = self.keys[idx] == hashes
-        return np.where(found, idx, -1)
+        return sorted_probe(self.keys, hashes)
 
 
 class HeliModel:

@@ -15,8 +15,8 @@ Design notes for 100 TB:
 * the scorer's per-batch fixed cost is small: replaying this UDF's body
   over the filter_default benchmark input (four ~3,000-row files, a fresh
   scorer per file, ft + word-NLL + textstats, min of 5 on a 4-core host)
-  took 3.36 s in 750-row batches against 3.24 s in one batch per file
-  (1.04×; 2.2× while text sums depended on the batch). The older "2×
+  took 2.42 s in 750-row batches against 1.94 s in one batch per file
+  (1.25×; 2.2× while text sums depended on the batch). The older "2×
   slower below 10k-row partitions" figure (BENCH.md, docs/SCALE.md)
   predates that and also counts Spark's per-task cost.
 * the model is NOT a Spark broadcast variable: broadcasting 158 MB through
@@ -35,6 +35,12 @@ Design notes for 100 TB:
   scattered back to the batch rows once. Nothing keyed on batch contents
   outlives the call — the only cross-call state is the per-worker word
   memos.
+* the fastText cross-check reads only the context's distinct texts whose
+  HeLI ``lang`` is determined (``ctx.subset``): its one consumer, the
+  advisory ``ft_disagree`` rule, cannot fire on an ``und``/``zxx`` row, so
+  ``ft_lang``/``ft_prob`` are NULL there. On the filter_default benchmark
+  input 38% of rows are ``und``/``zxx``, and 32-35% of a file's distinct
+  words occur only in them.
 """
 
 from __future__ import annotations
@@ -42,6 +48,7 @@ from __future__ import annotations
 import os
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -70,12 +77,23 @@ def identify_columns(scorer, texts, ignore_confidence: bool = False,
                      with_ft: bool = False, with_word_nll: bool = False,
                      with_text_stats: bool = False) -> pd.DataFrame:
     """The body of ``identify_df``'s UDF for one batch of texts (str or
-    None): every output column, computed from one ``BatchContext``."""
+    None): every output column, computed from one ``BatchContext``.
+
+    The fastText cross-check runs only over the distinct texts whose
+    ``lang`` is determined (not ``und``/``zxx``), on a subset of the same
+    context; ``ft_lang``/``ft_prob`` are null (None/NaN) on the other rows.
+    Its one consumer, the ``ft_disagree`` rule, already requires a
+    determined ``lang``, so no flag can change."""
     ctx = scorer.context(texts)
     res = scorer.identify_context(ctx, ignore_confidence, with_word_nll)
     cols = dict(zip(("lang", "score", "raw_score", "cjk_pct"), res))
     if with_ft:
-        cols["ft_lang"], cols["ft_prob"] = scorer.ft_identify(ctx)
+        det = np.flatnonzero((res[0] != "und") & (res[0] != "zxx"))
+        ft_lang, ft_prob = scorer.ft_identify(ctx.subset(det))
+        cols["ft_lang"] = np.full(len(ctx.texts), None, dtype=object)
+        cols["ft_lang"][det] = ft_lang
+        cols["ft_prob"] = np.full(len(ctx.texts), np.nan, dtype=np.float32)
+        cols["ft_prob"][det] = ft_prob
     if with_word_nll:
         cols["word_nll"] = res[4]
     if with_text_stats:
@@ -107,6 +125,12 @@ def identify_df(
     (+ ``ft_lang``, ``ft_prob`` when ``with_ft``; + ``word_nll`` — the
     independent order-0 word-LM score, heli.py::word_nll_batch — when
     ``with_word_nll``).
+
+    ``ft_lang``/``ft_prob`` are NULL on rows whose ``lang`` is ``und`` or
+    ``zxx``: the fastText cross-check exists for the ``ft_disagree`` rule,
+    which needs a determined HeLI label to disagree with, so the UDF does
+    not score those rows. ``Scorer.ft_identify_batch`` still scores every
+    text.
 
     ``score`` follows the reference CLI semantics
     (/root/reference/src/cli/identify.rs:43-46): confidence margin when

@@ -13,6 +13,9 @@ Targets the invariants the fast lanes rely on:
     and through the joined-lowercase fast path (embedded newlines force
     per-text lowering; case-expanding chars like 'İ' shift separator
     offsets);
+  * the identify UDF's fastText cross-check runs only where its flag can
+    fire: null on exactly the und/zxx rows of a duplicate-heavy batch,
+    bit-equal to the full-batch ft_identify_batch on every other row;
   * identify_topk_batch ≡ the per-row reference scan.
 Exit code 0 = all invariants held; first counterexample is printed and
 re-raised.
@@ -27,6 +30,7 @@ import numpy as np
 from hypothesis import given, settings, strategies as st
 
 from heliport_spark.heli import COLLAPSE, LANGS_ARR, PENALTY, Scorer
+from heliport_spark.operators.identify import identify_columns
 from heliport_spark.textstats import text_stats_batch
 
 _FAST = Scorer()
@@ -87,6 +91,23 @@ def run(n_examples: int) -> None:
             want += [b[0] for b in ts0]
             assert got == want, (repr(texts[i]), got, want)
 
+    @settings(max_examples=n_examples, deadline=None)
+    @given(big_batches())
+    def ft_only_on_determined(texts):
+        """identify_columns scores ft over the determined distinct texts of
+        the batch's one context: ft_lang/ft_prob are null exactly where
+        lang is und/zxx, and every other row equals the public full-batch
+        call bit for bit."""
+        cols = identify_columns(_FAST, texts, False, True, False, False)
+        und = cols["lang"].isin(["und", "zxx"]).to_numpy()
+        assert np.array_equal(cols["ft_lang"].isna().to_numpy(), und), texts
+        assert np.array_equal(cols["ft_prob"].isna().to_numpy(), und), texts
+        fl, fp = Scorer(_FAST.model).ft_identify_batch(texts)
+        got = (cols["ft_lang"][~und].tolist(),
+               cols["ft_prob"].to_numpy()[~und].view(np.uint32).tolist())
+        want = (fl[~und].tolist(), fp[~und].view(np.uint32).tolist())
+        assert got == want, (texts, got, want)
+
     @settings(max_examples=max(20, n_examples // 4), deadline=None)
     @given(st.lists(text_strategy, min_size=1, max_size=24), st.integers(0, 5))
     def topk_matches_reference_scan(texts, k):
@@ -108,7 +129,8 @@ def run(n_examples: int) -> None:
                 row.append((str(LANGS_ARR[c]), float(points[r][i])))
             assert got[r] == row, (r, texts[r], got[r], row)
 
-    for check in (fast_matches_exact, batch_invariant, topk_matches_reference_scan):
+    for check in (fast_matches_exact, batch_invariant, ft_only_on_determined,
+                  topk_matches_reference_scan):
         print(f"fuzz: {check.__name__} x{n_examples} ...", flush=True)
         check()
         print(f"fuzz: {check.__name__} OK", flush=True)

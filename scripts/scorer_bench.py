@@ -11,7 +11,16 @@ times identify_batch over 10k-text batches:
 * warm  — second pass over the same distinct vocabulary: measures the
           steady-state memo-hit path
 
+``--parquet DIR`` instead replays the identify UDF's body
+(``operators.identify.identify_columns``, every output on) once per parquet
+file of DIR's ``transcript`` column, with a fresh Scorer per file, the shape
+of one pipeline task per input file on a cold worker. It prints the min over
+``SCORER_BENCH_REPS`` passes of each kernel's ms summed over the files:
+context (dedup, P1-P4, span hashing), score (C1-C5), word-NLL, ft,
+textstats, and the whole call.
+
 Usage: python scripts/scorer_bench.py [n_texts] [words_per_text]
+       python scripts/scorer_bench.py --parquet DIR
 """
 
 from __future__ import annotations
@@ -63,7 +72,67 @@ def synth_corpus(model, n_texts: int, words_per_text: int) -> "list[str]":
     return texts
 
 
+KERNELS = ("context", "score", "word_nll", "ft", "textstats", "total")
+
+
+def _timed(fn, acc: dict, key: str):
+    def wrapped(*a, **kw):
+        t0 = time.perf_counter()
+        try:
+            return fn(*a, **kw)
+        finally:
+            acc[key] += time.perf_counter() - t0
+    return wrapped
+
+
+def replay_parquet(path: str, reps: int) -> dict:
+    """Min-of-``reps`` ms per kernel of identify_columns over DIR's files."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    import heliport_spark.textstats as ts
+    from heliport_spark.heli import Scorer
+    from heliport_spark.model import get_model
+    from heliport_spark.operators.identify import identify_columns
+
+    files = sorted(glob.glob(os.path.join(path, "*.parquet"))) or [path]
+    batches = [pq.read_table(f, columns=["transcript"]).column(0).to_pylist()
+               for f in files]
+    model = get_model()
+    best = dict.fromkeys(KERNELS, float("inf"))
+    stats = ts.text_stats_joined
+    methods = ("context", "identify_context", "word_nll", "ft_identify")
+    for _ in range(reps):
+        acc = dict.fromkeys(methods + ("textstats", "total"), 0.0)
+        ts.text_stats_joined = _timed(stats, acc, "textstats")
+        try:
+            for texts in batches:
+                sc = Scorer(model)
+                for m in methods:
+                    setattr(sc, m, _timed(getattr(sc, m), acc, m))
+                t0 = time.perf_counter()
+                identify_columns(sc, texts, False, True, True, True)
+                acc["total"] += time.perf_counter() - t0
+        finally:
+            ts.text_stats_joined = stats
+        # identify_context calls word_nll: score is the rest of it
+        acc["score"] = acc.pop("identify_context") - acc["word_nll"]
+        acc["ft"] = acc.pop("ft_identify")
+        for k in KERNELS:
+            best[k] = min(best[k], acc[k] * 1e3)
+    return {"files": len(files), "rows": sum(map(len, batches)), **best}
+
+
 def main():
+    if len(sys.argv) > 2 and sys.argv[1] == "--parquet":
+        reps = int(os.environ.get("SCORER_BENCH_REPS", "3"))
+        res = replay_parquet(sys.argv[2], reps)
+        print(f"identify_columns replay: {res['files']} files, "
+              f"{res['rows']} rows, fresh Scorer per file, min of {reps} (ms)")
+        for k in KERNELS:
+            print(f"{k:>10} {res[k]:>10.1f}")
+        return
     if len(sys.argv) > 1 and sys.argv[1] == "--sweep":
         # length sweep: the engine is length-linear, so texts/s alone is
         # meaningless without words/text — report words/s alongside (the

@@ -287,17 +287,23 @@ def test_curate_clips_classifier_gate(spark):
     assert {r["clip_id"] for r in rows} <= kept
 
 
-def test_curate_clips_end_to_end(spark):
+def test_curate_clips_end_to_end(spark, tmp_path):
     """The registered curate_clips entry (BASELINE.json north_star as ONE
     chain) at sf0.01: stage counts pinned, planted audio near-dups (ids ≡ 1
     mod 29 reuse the previous id's spectrum — sources/clips.py
     synth_pcm_varied) are collapsed by the acoustic stage, the output is
     multi-language via the golden rows, and the eager lifecycle leaves no
-    stage frame cached."""
+    stage frame cached. The synthesized clips are written to parquet once:
+    the eager lifecycle frees every stage frame, so each stage count
+    re-runs the chain from its source, and a synthesized source would
+    re-run the PCM synthesis every time."""
     from heliport_spark.operators.curate import curate_clips
     from heliport_spark.sources.clips import clips_from_documents
 
-    clips = clips_from_documents(spark, SF_SMALL, audio_style="varied")
+    src = str(tmp_path / "clips.parquet")
+    clips_from_documents(spark, SF_SMALL, audio_style="varied") \
+        .write.parquet(src)
+    clips = spark.read.parquet(src)
     st = {}
     rows = curate_clips(clips, audio_neardup=True, stages=st).collect()
     counts = {k: v.count() for k, v in st.items()}

@@ -14,6 +14,12 @@ as computed by the tree before the per-batch context (see
   9.5e-7 in ``score``, 4.8e-7 in ``raw_score``, 1.2e-7 in ``ft_prob``);
 * ``rep_cand`` / ``scrub_cand`` equal, or a subset that still covers every
   exact JVM-regex match.
+
+The fastText cross-check runs only where its ``ft_disagree`` flag can
+fire, so ``ft_lang``/``ft_prob`` hold the pinned values (bit-equal and
+banded as above) on every row whose ``lang`` is determined, and are null on
+every ``und``/``zxx`` row (``expected.json`` was generated when the
+cross-check scored every row, and keeps those values).
 """
 
 from __future__ import annotations
@@ -32,6 +38,7 @@ import corpus  # noqa: E402
 BIT_EQUAL = ("lang", "ft_lang", "word_nll", "cjk_pct", "digit_ratio",
              "alpha_ratio")
 BANDED = ("score", "raw_score", "ft_prob")
+FT = ("ft_lang", "ft_prob")  # null on und/zxx rows
 TOL = 5e-5
 
 
@@ -55,12 +62,18 @@ def test_edge_corpus_matches_pinned_outputs(request):
     for name, texts in zip(corpus.NAMES, corpus.batches()):
         df, exp = got[name], expected[name]
         tl = ["" if t is None else t for t in texts]
+        det = ~df["lang"].isin(["und", "zxx"]).to_numpy()
+        for f in FT:
+            assert np.array_equal(df[f].isna().to_numpy(), ~det), (name, f)
         for f in BIT_EQUAL:
-            assert df[f].tolist() == exp[f], (name, f)
+            rows = det if f in FT else np.ones(len(df), bool)
+            assert df[f][rows].tolist() == \
+                [v for v, r in zip(exp[f], rows) if r], (name, f)
         for f in BANDED:
-            g = df[f].to_numpy(np.float64)
-            w = np.asarray(exp[f], np.float64)
-            assert np.abs(g - w).max() < TOL, (name, f)
+            rows = det if f in FT else np.ones(len(df), bool)
+            g = df[f].to_numpy(np.float64)[rows]
+            w = np.asarray(exp[f], np.float64)[rows]
+            assert not rows.any() or np.abs(g - w).max() < TOL, (name, f)
         for f in ("rep_cand", "scrub_cand"):
             g = np.asarray(df[f].tolist(), bool)
             w = np.asarray(exp[f], bool)

@@ -230,6 +230,71 @@ def test_ft_span_path_matches_word_buckets(fast_scorer):
         assert K[i] == len(bk), w
 
 
+def test_sorted_probe_matches_unsorted_searchsorted():
+    """The sorted probe behind both lookups (model order tables and the
+    word memos' index) returns exactly what a plain searchsorted over the
+    needles in their given order returns: repeated needles, needles below
+    the first key and above the last, an empty table, empty needles."""
+    from heliport_spark.heli import _WordIndex
+    from heliport_spark.model import OrderTable, sorted_probe
+
+    def plain(keys, needles):
+        if not len(keys):
+            return np.full(len(needles), -1, np.int64)
+        p = np.minimum(np.searchsorted(keys, needles), len(keys) - 1)
+        return np.where(keys[p] == needles, p, -1)
+
+    rng = np.random.default_rng(5)
+    keys = np.unique(rng.integers(10, 2**63, 5000, dtype=np.uint64))
+    edges = [0, 1, keys[0] - 1, keys[0], keys[-1], keys[-1] + 1, 2**64 - 1]
+    needles = np.concatenate([
+        rng.choice(keys, 300), rng.choice(keys, 50).repeat(4),
+        rng.integers(10, 2**63, 300, dtype=np.uint64),
+        np.array(edges, dtype=np.uint64).repeat(2),
+    ])
+    rng.shuffle(needles)
+    for k, h in ((keys, needles), (keys[:1], needles), (keys, needles[:0]),
+                 (keys[:0], needles), (keys[:0], needles[:0])):
+        want = plain(k, h)
+        assert np.array_equal(sorted_probe(k, h), want)
+        table = OrderTable(k, np.arange(len(k) + 1, dtype=np.uint64),
+                           np.zeros(len(k), np.uint8),
+                           np.zeros(len(k), np.float32))
+        assert np.array_equal(table.lookup(h), want)
+        # the memo index: keys added unsorted in two batches; key k[i]
+        # holds slot 7i + 3
+        index = _WordIndex()
+        perm = rng.permutation(len(k))
+        for part in np.array_split(perm, 2):
+            index.add(k[part], 7 * part.astype(np.int64) + 3)
+        assert np.array_equal(index.lookup(h),
+                              np.where(want >= 0, 7 * want + 3, -1))
+
+
+def test_identify_columns_ft_only_on_determined_rows():
+    """``identify_columns(with_ft=True)`` runs the fastText cross-check over
+    the distinct texts whose lang is determined: ``ft_lang``/``ft_prob``
+    are null exactly on the und/zxx rows, and every other row is bit-equal
+    to the public full-batch ``ft_identify_batch`` over the same texts."""
+    from heliport_spark.operators.identify import identify_columns
+
+    edge = _edge_corpus()
+    texts = (list(GOLDEN_SENTS) + edge.SENTENCES + edge.EDGE
+             + list(ADVERSARIAL_SENTS)) * 2
+    cols = identify_columns(Scorer(), texts, False, True, False, False)
+    und = cols["lang"].isin(["und", "zxx"]).to_numpy()
+    assert und.any() and (~und).any()
+    assert (cols["lang"][und] == "und").any() and \
+        (cols["lang"][und] == "zxx").any()
+    assert np.array_equal(cols["ft_lang"].isna().to_numpy(), und)
+    assert np.array_equal(cols["ft_prob"].isna().to_numpy(), und)
+    fl, fp = Scorer().ft_identify_batch(texts)
+    assert cols["ft_lang"][~und].tolist() == fl[~und].tolist()
+    got = cols["ft_prob"].to_numpy()[~und]
+    assert got.dtype == np.float32
+    assert np.array_equal(got.view(np.uint32), fp[~und].view(np.uint32))
+
+
 def test_ft_missing_artifact_is_explicit_error(fast_scorer, tmp_path):
     """A model dir without ft_M.npy makes the fastText cross-check raise an
     error naming the model dir (no silent fallback scorer)."""
@@ -247,26 +312,50 @@ def test_ft_missing_artifact_is_explicit_error(fast_scorer, tmp_path):
         sc.ft_identify_batch(["hello world"])
 
 
-def test_seq_row_sums_matches_add_at():
-    """The shrinking-tail per-segment sum (the sequential method of the
-    text-score sums in f64, the ft word bucket sums in f32) is
+def test_seq_row_sums_matches_add_at(monkeypatch):
+    """The blocked shrinking-tail per-segment sum (the sequential method of
+    the text-score sums in f64, the ft word bucket sums in f32) is
     bit-identical to an np.add.at loop into an accumulator of the same
-    dtype, including empty segments and one long segment that finishes
-    in chunks."""
+    dtype: in one block, with empty segments and a long segment that
+    finishes in chunks; and over several blocks, with 1,200 segments, a
+    fifth of them empty, and two segments longer than ``_SEQ_CHUNK`` that
+    sort into different blocks (each alone in its block's tail)."""
+    import heliport_spark.heli as H
     from heliport_spark.heli import _seq_row_sums
 
     rng = np.random.default_rng(3)
     V = rng.standard_normal((50, 242)).astype(np.float32)
-    lens = np.array([3, 0, 7, 1, 9000, 0, 2], dtype=np.int64)
-    start = np.zeros(len(lens), dtype=np.int64)
-    np.cumsum(lens[:-1], out=start[1:])
-    idx = rng.integers(0, 50, int(lens.sum()))
-    for dtype in (np.float32, np.float64):
-        ref = np.zeros((len(lens), 242), dtype=dtype)
-        np.add.at(ref, np.repeat(np.arange(len(lens)), lens), V[idx])
-        got = _seq_row_sums(V, idx, start, lens, dtype)
-        assert got.dtype == dtype
-        assert np.array_equal(got, ref)
+
+    def check(lens):
+        start = np.zeros(len(lens), dtype=np.int64)
+        np.cumsum(lens[:-1], out=start[1:])
+        idx = rng.integers(0, 50, int(lens.sum()))
+        for dtype in (np.float32, np.float64):
+            ref = np.zeros((len(lens), 242), dtype=dtype)
+            np.add.at(ref, np.repeat(np.arange(len(lens)), lens), V[idx])
+            got = _seq_row_sums(V, idx, start, lens, dtype)
+            assert got.dtype == dtype
+            assert np.array_equal(got, ref)
+
+    check(np.array([3, 0, 7, 1, 9000, 0, 2], dtype=np.int64))
+
+    # a segment longer than _SEQ_CHUNK can sort into an earlier block only
+    # below a run of ≥ _SEQ_BLOCK longer ones: shrink the chunk so that run
+    # stays small. Sorted ranks 1023 and 1199 end the last two blocks.
+    monkeypatch.setattr(H, "_SEQ_CHUNK", 8)
+    n, blk = 1200, H._SEQ_BLOCK
+    ranked = np.concatenate([
+        np.zeros(240, np.int64),                  # a fifth empty
+        rng.integers(1, 20, 4 * blk - 1 - 240),   # ranks 240..1022
+        [60],                                     # rank 1023
+        rng.integers(61, 80, n - 4 * blk - 1),    # ranks 1024..1198
+        [200],                                    # rank 1199
+    ])
+    lens = rng.permutation(ranked)
+    pos = np.argsort(np.argsort(lens, kind="stable"), kind="stable")
+    assert sorted(pos[lens > 80].tolist() + pos[lens == 60].tolist()) == \
+        [4 * blk - 1, n - 1]
+    check(lens)
 
 
 def _edge_corpus():
@@ -288,7 +377,9 @@ def test_identify_columns_batch_invariant():
     bit-equal in every scored column. The batchings take both text-sum
     methods for the same rows: the whole mix has more (text × distinct
     word) cells than tokens (sequential), a single row or a chunk of the
-    repeated block has fewer (dense counts dgemm)."""
+    repeated block has fewer (dense counts dgemm). ``ft_lang``/``ft_prob``
+    are compared null-aware: null on every und/zxx row, bit-equal on every
+    determined one."""
     from heliport_spark.operators.identify import identify_columns
 
     edge = _edge_corpus()
@@ -307,10 +398,17 @@ def test_identify_columns_batch_invariant():
     def run(chunks):
         parts = [identify_columns(sc, c, False, True, True, False)
                  for c in chunks]
-        return {f: sum((p[f].tolist() for p in parts), [])
+        # null-aware: a null ft_prob is NaN, which equals nothing
+        return {f: [None if v != v else v
+                    for p in parts for v in p[f].tolist()]
                 for f in parts[0].columns}
 
     whole = run([mix])
+    # ft is null exactly on the und/zxx rows, in every batching
+    und = [lang in ("und", "zxx") for lang in whole["lang"]]
+    assert any(und) and not all(und)
+    assert [v is None for v in whole["ft_lang"]] == und
+    assert [v is None for v in whole["ft_prob"]] == und
     for chunks in ([[t] for t in mix],
                    [mix[i : i + 5] for i in range(0, len(mix), 5)]):
         got = run(chunks)
