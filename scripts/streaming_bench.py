@@ -10,6 +10,10 @@ no external data):
 * dedup     — same input where half the rows are forced duplicates →
               streaming_exact_dedup (per-fingerprint state) → noop sink;
               reports rows/s and final state size.
+* minhash_candidates / minhash_verify — the two near-dup lanes, fed the
+              same 10×-lower rate: band keys alone vs band keys plus the
+              fused signature verify (both hash through
+              minhash_features_udf).
 
 Usage: python scripts/streaming_bench.py [rows_per_sec] [seconds]
 """
@@ -106,6 +110,7 @@ def run(rows_per_sec: int, seconds: int) -> None:
     from heliport_spark.streaming.stream import (
         streaming_exact_dedup,
         streaming_fingerprint_links,
+        streaming_minhash_candidates,
         streaming_minhash_verified,
         streaming_quality_filter,
     )
@@ -144,6 +149,10 @@ def run(rows_per_sec: int, seconds: int) -> None:
         # (worst-case boilerplate stream).
         ("minhash_verify",
          streaming_minhash_verified(clips_at(max(1, rows_per_sec // 10)))),
+        # the same rate and text into the candidates-only lane: the same
+        # shingle hashing without the signature verify
+        ("minhash_candidates",
+         streaming_minhash_candidates(clips_at(max(1, rows_per_sec // 10)))),
         # per-row FFT + per-landmark state probes: feed 200×-lower rate
         # (each clip explodes to dozens of landmark hashes and every hot
         # bucket links against its k stored entries — deliberate worst case)
@@ -163,8 +172,8 @@ def run(rows_per_sec: int, seconds: int) -> None:
             rows = sum(p["numInputRows"] for p in progress)
             secs = sum(p["batchDuration"] for p in progress) / 1000.0
             results[name] = (rows, rows / secs if secs else 0.0)
-            if name in ("dedup", "dedup_event_time", "minhash_verify",
-                        "fingerprint_links") \
+            if name in ("dedup", "dedup_event_time", "minhash_candidates",
+                        "minhash_verify", "fingerprint_links") \
                     and progress and progress[-1]["stateOperators"]:
                 results[f"{name}_state_rows"] = progress[-1][
                     "stateOperators"

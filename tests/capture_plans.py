@@ -50,7 +50,9 @@ SECTIONS = [
      "Hamming ≤ 3 by pigeonhole; same candidate-generation shape as "
      "MinHash-LSH"),
     ("ann_lsh",
-     "multi-table sign-LSH ANN: (table, bucket) equi-join for candidates, "
+     "multi-table sign-LSH ANN: one ArrowEvalPython per side computes "
+     "every table's bucket key in one BLAS matmul per batch, "
+     "(table, bucket) equi-join for candidates, "
      "hash-agg dedup, window top-k; NO forced broadcasts "
      "(test_ann_scale_paths_never_force_broadcast pins the no-hint "
      "property)"),

@@ -506,30 +506,68 @@ def test_wav_roundtrip_and_resample():
     assert snr_db(np.linspace(-0.5, 0.5, len(up)).astype(np.float32), up) > 40.0
 
 
-def test_lsh_bucket_udf_matches_expr(spark):
-    """The Arrow-batched bucket UDF (used when n_planes×dim would bloat the
-    Catalyst plan) must produce bit-identical keys to the unrolled expr."""
-    from pyspark.sql import functions as F
+def _lsh_bucket_sql(vec_sql: str, planes):
+    """Catalyst parity reference for one table of ``lsh_bucket_keys``: bit
+    i = (vec · plane_i) > 0 as an unrolled aggregate(zip_with) per plane
+    over the backtick-quoted column ``vec_sql``, summed sequentially in
+    double. A NULL vector, a NULL element or a length mismatch makes the
+    projection NULL, so its bit stays 0. Literals use repr(float), which
+    parses back to the same double."""
+    terms = ["CAST(0 AS BIGINT)"]
+    for i, p in enumerate(planes):
+        arr = ", ".join(f"{float(x)!r}D" for x in p)
+        proj = (
+            f"aggregate(zip_with(`{vec_sql}`, array({arr}), "
+            f"(x, c) -> CAST(x AS DOUBLE) * c), 0.0D, (acc, x) -> acc + x)"
+        )
+        # a BIGINT shift: Java int shifts mask the count mod 32
+        terms.append(
+            f"(CASE WHEN {proj} > 0 THEN shiftleft(CAST(1 AS BIGINT), {i}) "
+            f"ELSE CAST(0 AS BIGINT) END)"
+        )
+    return F.expr(" + ".join(terms))
 
-    from heliport_spark.operators.similarity import (
-        hyperplanes,
-        lsh_bucket_expr,
-        lsh_bucket_sql,
-        lsh_bucket_udf,
-    )
+
+def test_lsh_bucket_udf_matches_expr(spark):
+    """The BLAS bucket-key UDF gives the unrolled Catalyst form's keys, one
+    per table: on the sf0.01 embeddings (dim 64) and on a seeded 512-dim
+    fixture whose NULL, all-zero, wrong-length and NULL-element rows share
+    Arrow batches with ordinary rows and key to 0 in every table."""
+    from heliport_spark.operators.similarity import hyperplanes, lsh_bucket_keys
+
+    def keyed(df, tables):
+        return df.select(
+            "vec_id",
+            lsh_bucket_keys(F.col("embedding"), tables).alias("k_udf"),
+            F.array(
+                *[_lsh_bucket_sql("embedding", p) for p in tables]
+            ).alias("k_ref"),
+        )
 
     e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    planes = hyperplanes(64, 10)
-    both = e.select(
-        lsh_bucket_expr(F.col("embedding"), planes).alias("k_expr"),
-        lsh_bucket_udf(planes)(F.col("embedding")).alias("k_udf"),
-        lsh_bucket_sql("embedding", planes).alias("k_sql"),
-    )
-    assert both.filter(F.col("k_expr") != F.col("k_udf")).count() == 0
-    # the single-parse SQL builder (the hot query-construction path) must be
-    # BIT-identical to the Column form — same operators, repr round-trip
-    # literals
-    assert both.filter(F.col("k_expr") != F.col("k_sql")).count() == 0
+    tables = [hyperplanes(64, 8, seed=42 + 1000 * t) for t in range(8)]
+    both = keyed(e, tables)
+    assert both.filter(F.col("k_udf") != F.col("k_ref")).count() == 0
+    assert both.select("k_udf").distinct().count() > 100  # keys do vary
+
+    rng = np.random.default_rng(13)
+    rows = [
+        (i, rng.standard_normal(512).astype(np.float32).tolist())
+        for i in range(240)
+    ]
+    edge = {
+        240: None,
+        241: [0.0] * 512,
+        242: rng.standard_normal(511).astype(np.float32).tolist(),
+        243: [None] + rng.standard_normal(511).astype(np.float32).tolist(),
+    }
+    for pos, (vid, vec) in zip((30, 120, 200, 210), edge.items()):
+        rows.insert(pos, (vid, vec))
+    fx = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
+    tables = [hyperplanes(512, 8, seed=42 + 1000 * t) for t in range(2)]
+    got = {r["vec_id"]: r for r in keyed(fx, tables).collect()}
+    assert all(r["k_udf"] == r["k_ref"] for r in got.values())
+    assert {v: got[v]["k_udf"] for v in edge} == {v: [0, 0] for v in edge}
 
 
 def test_identify_df_relevant_langs(spark):

@@ -15,6 +15,36 @@ from heliport_spark.streaming.stream import (
 )
 
 
+def shingle_hashes_expr(text):
+    """Catalyst parity reference for ``minhash_features_udf``'s ``hs``:
+    array<bigint> of the h60-mod-p distinct 5-char shingle hashes."""
+    from heliport_spark.operators.dedup import MERSENNE_P, h60, shingles_expr
+
+    return F.transform(
+        shingles_expr(text, 5), lambda s: h60(s) % F.lit(MERSENNE_P)
+    )
+
+
+def salted_minhash_sig_from(sh):
+    """Catalyst parity reference for ``minhash_features_udf``'s ``sig``:
+    array<bigint> of the H salted minhashes (per-function md5 salt
+    ``f"{i}|"``, the batch estimator's ``_minhash_wide_salted`` family) from
+    a pre-projected shingle-array column."""
+    from heliport_spark.operators.dedup import MERSENNE_P, MINHASH_PARAMS, h60
+
+    return F.array(
+        *[
+            F.array_min(
+                F.transform(
+                    sh,
+                    lambda s: h60(F.concat(F.lit(f"{i}|"), s)) % F.lit(MERSENNE_P),
+                )
+            )
+            for i in range(len(MINHASH_PARAMS))
+        ]
+    )
+
+
 @pytest.fixture()
 def stream_dirs(spark):
     base = tempfile.mkdtemp(prefix="hs_stream_")
@@ -405,6 +435,60 @@ def test_streaming_minhash_candidates_match_batch(spark):
         shutil.rmtree(base, ignore_errors=True)
 
 
+def test_streaming_minhash_candidates_edge_texts(spark):
+    """NULL, empty and whitespace-only transcripts in the candidates lane:
+    the NULL rows share one key per band (sig ''), the empty and
+    whitespace-only ones normalize to the same '' shingle, and neither
+    group pairs with the other or with real text — across two
+    micro-batches."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from heliport_spark.streaming.stream import streaming_minhash_candidates
+
+    schema = StructType(
+        [
+            StructField("clip_id", StringType()),
+            StructField("transcript", StringType()),
+        ]
+    )
+    text = "the quick brown fox jumps over the lazy dog"
+    first = [("n1", None), ("e1", ""), ("t1", text),
+             ("u1", "completely different words appear in this row")]
+    second = [("n2", None), ("w1", "   "), ("w2", "\t\n "), ("t2", text)]
+    base = tempfile.mkdtemp(prefix="hs_mh_edge_")
+    in_dir, out_dir, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
+    try:
+        spark.createDataFrame(first, schema).write.parquet(in_dir)
+        stream = spark.readStream.schema(schema).parquet(in_dir)
+        q = (
+            streaming_minhash_candidates(stream)
+            .writeStream.format("parquet")
+            .option("path", out_dir)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            spark.createDataFrame(second, schema).write.mode(
+                "append"
+            ).parquet(in_dir)
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        got = {
+            (r["id_a"], r["id_b"])
+            for r in spark.read.parquet(out_dir).collect()
+        }
+        assert got == {
+            ("n1", "n2"),
+            ("e1", "w1"), ("e1", "w2"), ("w1", "w2"),
+            ("t1", "t2"),
+        }
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
 def test_streaming_minhash_verified_matches_batch_estimate(spark):
     """The fused streaming verify (VERDICT r03 #4) emits exactly the batch
     ``minhash_jaccard_estimate`` output — same VERIFIED pairs, bit-equal
@@ -486,11 +570,8 @@ def test_minhash_features_udf_parity(spark):
     whitespace; case mapping; short/empty texts)."""
     from pyspark.sql import functions as F
 
-    from heliport_spark.operators.dedup import MERSENNE_P, h60, shingles_expr
-    from heliport_spark.streaming.stream import (
-        minhash_features_udf,
-        salted_minhash_sig_from,
-    )
+    from heliport_spark.operators.dedup import shingles_expr
+    from heliport_spark.streaming.stream import minhash_features_udf
 
     docs = (
         spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -513,10 +594,7 @@ def test_minhash_features_udf_parity(spark):
     txt = F.coalesce(F.col("text"), F.lit(""))
     expr = df.select(
         "id",
-        F.transform(
-            shingles_expr(txt, 5),
-            lambda s: h60(s) % F.lit(MERSENNE_P),
-        ).alias("hs"),
+        shingle_hashes_expr(txt).alias("hs"),
         salted_minhash_sig_from(shingles_expr(txt, 5)).alias("sig"),
     )
     udf = df.select("id", minhash_features_udf()(txt).alias("f"))
