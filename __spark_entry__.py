@@ -574,9 +574,10 @@ def _audio_loudness(spark, sf):
 
     clips = clips_from_documents(spark, sf, with_golden=False, max_pcm_ms=500)
     norm = normalize_loudness_df(clips)
-    # re-measure the stats on the NORMALIZED bytes
+    # re-measure the stats on the NORMALIZED bytes (raw PCM: the source's
+    # codec goes with the source bytes)
     stats = audio_features_df(
-        norm.drop("bytes").withColumnRenamed("bytes_norm", "bytes")
+        norm.drop("bytes", "codec").withColumnRenamed("bytes_norm", "bytes")
     )
     return stats.groupBy("sr_hz").agg(
         F.count(F.lit(1)).alias("n_clips"),
@@ -644,14 +645,15 @@ def _audio_vad(spark, sf):
     clips = clips.unionByName(signal_adversarial_clips(spark))
     # sr_trim is the effective rate of the trimmed PCM (the WAV container's
     # embedded rate when it drifts from the sr_hz metadata) — authoritative
-    # for all ms math downstream of the trim
+    # for all ms math downstream of the trim; bytes_trim is raw PCM, so the
+    # source's codec is dropped with the source bytes
     trimmed = (
         trim_silence_df(clips)
-        .drop("bytes", "sr_hz")
+        .drop("bytes", "sr_hz", "codec")
         .withColumnRenamed("bytes_trim", "bytes")
         .withColumnRenamed("sr_trim", "sr_hz")
     )
-    segs = vad_segments_df(trimmed, codec_col=None)
+    segs = vad_segments_df(trimmed)
     return segs.select(
         "clip_id", "seg_idx", "start_ms", "end_ms", "dur_ms",
         F.round("seg_rms", 4).alias("seg_rms"),
@@ -1370,7 +1372,6 @@ def _audio_denoise(spark, sf):
         dn.filter(F.col("bytes_dn").isNotNull())
         .select("clip_id", "sr_hz", "noise_db",
                 F.col("bytes_dn").alias("bytes"))
-        , codec_col=None
     )
     return stats.groupBy("sr_hz").agg(
         F.count(F.lit(1)).alias("n_clips"),

@@ -1,10 +1,28 @@
-"""Audio/multimodal column handling: PCM/WAV decode, mel features, SNR.
+"""Audio/multimodal column handling: PCM/WAV decode, waveform statistics,
+mel features, resampling, VAD, denoise and landmark fingerprints.
 
 The engine's input rows carry audio as an opaque ``bytes: binary`` column
 with typed metadata (``sr_hz``, ``dur_ms``, ``codec``) — BASELINE.json
 input_hint. The quality-filter pipeline must pass PCM through *untouched*
 (allclose / SNR ≥ 30 dB after a decode→re-encode round trip), which these
 helpers implement and the tests assert.
+
+One decode path: every audio operator reads the clips table's own columns
+by name (``bytes``, ``sr_hz``, ``codec``, ``clip_id``) through ONE row
+reader, ``_clip_rows``, which yields each row's (waveform, rate) per Arrow
+batch. ``decode_by_codec`` is the only code that knows the codec dispatch
+and what counts as malformed; it never raises. The operators come in
+two shapes built on the reader, each keeping only its per-clip function,
+its output fields and its own NULL/zero defaults:
+
+* append-columns (``_append_columns``): ``audio_features_df``,
+  ``resample_audio_df``, ``audio_embedding_df``, ``normalize_loudness_df``,
+  ``trim_silence_df``, ``mel_stats_df``, ``denoise_audio_df``;
+* fan-out (``_explode_clips``): ``chunk_audio_df``, ``vad_segments_df``,
+  ``audio_fingerprints_df``.
+
+Derived ``bytes_*`` columns are raw PCM; a chain that renames one onto
+``bytes`` drops the source's ``codec`` column.
 
 Real in this container (pure numpy / stdlib — no native libs needed):
 * PCM s16le decode/encode and waveform statistics,
@@ -15,13 +33,12 @@ Real in this container (pure numpy / stdlib — no native libs needed):
 
 Only lossy codec decode (opus/mp3), image decode, and video frame sampling
 genuinely need native libs absent here — those entry points are STUBBED with
-``NotImplementedError`` but keep real Spark plumbing (schemas, Arrow batch
-shapes) so swapping in a real decoder is a one-function change.
+``NotImplementedError``.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -40,8 +57,10 @@ from pyspark.sql.types import (
 
 
 def decode_pcm_s16le(raw: bytes) -> np.ndarray:
-    """PCM s16le bytes → float32 waveform in [-1, 1)."""
-    return np.frombuffer(raw, dtype="<i2").astype(np.float32) / 32768.0
+    """PCM s16le bytes → float32 waveform in [-1, 1); a trailing partial
+    sample (odd byte count) is dropped."""
+    return np.frombuffer(raw, dtype="<i2", count=len(raw) // 2).astype(
+        np.float32) / 32768.0
 
 
 def encode_pcm_s16le(wave: np.ndarray) -> bytes:
@@ -52,19 +71,22 @@ def encode_pcm_s16le(wave: np.ndarray) -> bytes:
 
 
 def decode_by_codec(raw: bytes, codec: "str | None") -> "tuple[np.ndarray, int | None]":
-    """Dispatch decode on the clips table's ``codec`` metadata column →
-    (mono float32 waveform, container sample rate or None).
+    """The one decode rule of the audio operators: a clips-table row's
+    ``bytes`` and ``codec`` → (mono float32 waveform, container sample rate
+    or None). Never raises.
 
     * ``wav`` → full RIFF parse (``decode_wav``); multi-channel audio is
-      mean-downmixed to mono for the stats path; the container's own sample
-      rate is returned (authoritative over drifted metadata).
-    * anything else (``pcm_s16le``/``pcm``/NULL) → raw PCM16 frames.
-
-    A malformed WAV container returns an EMPTY waveform instead of raising:
-    downstream stats stay at their zero/silent defaults, so the signal gate
-    flags and drops the row — a 10^12-clip job must not die on one corrupt
-    container, and "silent + 0 samples" is exactly the drop semantics the
-    gate already implements for empty audio."""
+      mean-downmixed to mono; the container's own sample rate is returned
+      (authoritative over drifted ``sr_hz`` metadata).
+    * anything else (``pcm_s16le``/``pcm``/NULL) → raw PCM16 samples.
+      Derived ``bytes_*`` columns (resampled, normalized, trimmed,
+      denoised, chunked) are raw PCM: a chain that renames one onto
+      ``bytes`` drops the source's ``codec`` column.
+    * A trailing partial sample or multi-channel frame is dropped.
+    * A malformed container yields an EMPTY waveform: every operator then
+      emits its documented NULL/zero/drop output for the row — a
+      10^12-clip job must not die on one corrupt container, and the signal
+      gate already drops "0 samples" rows."""
     if codec is not None and str(codec).lower().startswith("wav"):
         import struct
 
@@ -72,14 +94,106 @@ def decode_by_codec(raw: bytes, codec: "str | None") -> "tuple[np.ndarray, int |
             wave, sr, ch = decode_wav(raw)
         except (ValueError, struct.error):
             # struct.error: a chunk header declaring more bytes than the
-            # file holds (truncated container) — NOT a ValueError subclass,
-            # and it must not escape either (code-review r4 finding)
+            # file holds (truncated container) — NOT a ValueError subclass
             return np.zeros(0, dtype=np.float32), None
         if ch > 1:
             wave = wave[: len(wave) - len(wave) % ch]
             wave = wave.reshape(-1, ch).mean(axis=1).astype(np.float32)
         return wave, sr
     return decode_pcm_s16le(raw), None
+
+
+# Rate assumed for a decoded row whose container and ``sr_hz`` carry none;
+# the operators that need a true rate (resample, chunk) skip such rows.
+FALLBACK_SR = 16_000
+
+
+def _clip_rows(pdf: pd.DataFrame, gate_col: "str | None" = None,
+               fallback_sr: "int | None" = FALLBACK_SR) -> Iterator[tuple]:
+    """The one row reader: yield ``(wave, sr)`` for each row of one Arrow
+    batch of the clips table, ``wave`` from ``decode_by_codec`` and ``sr``
+    the container's rate, else a positive ``sr_hz``, else ``fallback_sr``.
+    Yields ``(None, None)`` for NULL or empty ``bytes``, rows whose
+    ``gate_col`` is false, undecodable rows and rows of unknown rate. A
+    frame without ``sr_hz`` or ``codec`` reads them as NULL."""
+    n = len(pdf)
+    codecs = pdf["codec"] if "codec" in pdf else [None] * n
+    srs = pdf["sr_hz"] if "sr_hz" in pdf else [None] * n
+    gates = pdf[gate_col] if gate_col else [True] * n
+    for raw, codec, meta_sr, gate in zip(pdf["bytes"], codecs, srs, gates):
+        if not gate or raw is None or not len(raw):
+            yield None, None
+            continue
+        wave, sr = decode_by_codec(raw, codec)
+        if not sr and not pd.isna(meta_sr):  # NULL sr_hz is NaN: truthy
+            sr = int(meta_sr)
+        if not sr or sr < 0:
+            sr = fallback_sr
+        yield (wave, sr) if len(wave) and sr else (None, None)
+
+
+# pandas dtypes that carry NULL into the Spark type (None → NA / NaN)
+_PANDAS_DTYPE = {IntegerType: "Int32", FloatType: "float32"}
+
+
+def _append_columns(df: DataFrame, fields: "list[tuple[StructField, object]]",
+                    clip_fn: Callable, gate_col: "str | None" = None,
+                    fallback_sr: "int | None" = FALLBACK_SR) -> DataFrame:
+    """Append-columns shape: ``df`` plus one column per ``(field, default)``
+    in ``fields``. A decoded row takes ``clip_fn(wave, sr)``'s tuple of
+    values, every other row the defaults. One Arrow pass, no shuffle; the
+    input columns (``bytes`` included) pass through untouched."""
+    out_schema = StructType(list(df.schema.fields) + [f for f, _ in fields])
+    defaults = tuple(d for _, d in fields)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            vals = [
+                defaults if w is None else clip_fn(w, sr)
+                for w, sr in _clip_rows(pdf, gate_col, fallback_sr)
+            ]
+            cols = list(zip(*vals)) or [()] * len(fields)
+            pdf = pdf.copy(deep=False)
+            for (f, _), col in zip(fields, cols):
+                pdf[f.name] = pd.Series(
+                    col, dtype=_PANDAS_DTYPE.get(type(f.dataType), object),
+                    index=pdf.index,
+                )
+            yield pdf
+
+    return df.mapInPandas(run, schema=out_schema)
+
+
+def _explode_clips(df: DataFrame, id_name: str, fields: "list[StructField]",
+                   clip_fn: Callable, carry_cols: "tuple[str, ...]" = (),
+                   fallback_sr: "int | None" = FALLBACK_SR) -> DataFrame:
+    """Fan-out shape: ``clip_fn(wave, sr)`` returns the rows (sequences
+    over ``fields``) one decoded clip emits; each row gets the clip's
+    ``clip_id`` as ``id_name`` in front and its ``carry_cols`` behind.
+    Other rows emit nothing. One Arrow pass, no shuffle."""
+    out_schema = StructType(
+        [StructField(id_name, StringType())] + fields
+        + [df.schema[c] for c in carry_cols]
+    )
+    names = [f.name for f in fields]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows: list = []
+            owner: "list[int]" = []
+            for i, (w, sr) in enumerate(_clip_rows(pdf, None, fallback_sr)):
+                if w is not None:
+                    out = clip_fn(w, sr)
+                    rows.extend(out)
+                    owner.extend([i] * len(out))
+            at = np.asarray(owner, dtype=np.int64)
+            frame = pd.DataFrame(rows, columns=names)
+            frame.insert(0, id_name, pdf["clip_id"].to_numpy()[at])
+            for c in carry_cols:
+                frame[c] = pdf[c].to_numpy()[at]
+            yield frame
+
+    return df.mapInPandas(run, schema=out_schema)
 
 
 def snr_db(reference: np.ndarray, test: np.ndarray) -> float:
@@ -104,219 +218,86 @@ SILENCE_FRAME_MS = 20
 SILENCE_RMS = 0.01
 
 
-def audio_features_df(df: DataFrame, bytes_col: str = "bytes",
-                      sr_col: str = "sr_hz",
-                      gate_col: "str | None" = None,
-                      codec_col: "str | None" = "codec") -> DataFrame:
-    """Append cheap waveform statistics (rms, peak, n_samples, clip_ratio,
-    silence_ratio) computed from the audio column via Arrow batches. The
-    bytes column passes through untouched. ``silence_ratio`` is the fraction
-    of 20 ms frames whose RMS falls below ``SILENCE_RMS`` — the VAD-lite
-    input to the signal keep/drop gate (audio_signal_flags).
-
-    ``codec_col`` (present by default on the clips schema) dispatches the
-    decode per row via ``decode_by_codec``: ``wav`` rows get the full RIFF
-    parse (mono downmix; the container's sample rate overrides drifted
-    metadata for silence framing), everything else is raw PCM16; a column
-    name that is absent from ``df`` is ignored (pure-PCM frames keep
-    working). Malformed WAV ⇒ zero-sample stats ⇒ the signal gate drops the
-    row instead of the job dying.
+def audio_features_df(df: DataFrame,
+                      gate_col: "str | None" = None) -> DataFrame:
+    """Append cheap waveform statistics (n_samples, rms, peak, clip_ratio,
+    silence_ratio). ``silence_ratio`` is the fraction of 20 ms frames whose
+    RMS falls below ``SILENCE_RMS`` (framed at the row's rate, 16 kHz when
+    unknown) — the VAD-lite input to the signal keep/drop gate
+    (audio_signal_flags). Rows that yield no wave (NULL/empty/malformed)
+    keep the zero/silent defaults, so the signal gate drops them instead of
+    the job dying.
 
     ``gate_col`` (boolean): rows where it is false skip the decode entirely
     (stats stay at their zero/silent defaults) — lets the pipeline decode
     only rows that survived the cheap transcript gate, in ONE pass with no
     split/union re-read."""
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("n_samples", IntegerType()),
-            StructField("rms", FloatType()),
-            StructField("peak", FloatType()),
-            StructField("clip_ratio", FloatType()),
-            StructField("silence_ratio", FloatType()),
-        ]
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            ns = np.zeros(n, dtype=np.int32)
-            rms = np.zeros(n, dtype=np.float32)
-            peak = np.zeros(n, dtype=np.float32)
-            clip = np.zeros(n, dtype=np.float32)
-            sil = np.ones(n, dtype=np.float32)  # empty/NULL audio = silent
-            srs = pdf[sr_col].to_numpy() if sr_col in pdf else None
-            gates = pdf[gate_col].to_numpy() if gate_col else None
-            codecs = (
-                pdf[codec_col].to_numpy()
-                if codec_col is not None and codec_col in pdf
-                else None
-            )
-            for i, raw in enumerate(pdf[bytes_col]):
-                if gates is not None and not gates[i]:
-                    continue
-                if raw is None or len(raw) == 0:
-                    continue
-                w, wav_sr = decode_by_codec(
-                    raw, codecs[i] if codecs is not None else None
-                )
-                ns[i] = len(w)
-                if len(w):
-                    rms[i] = float(np.sqrt(np.mean(w.astype(np.float64) ** 2)))
-                    peak[i] = float(np.max(np.abs(w)))
-                    clip[i] = float(np.mean(np.abs(w) >= 32767.0 / 32768.0))
-                    # container sr wins; NULL metadata sr_hz reaches pandas
-                    # as NaN (truthy!) — guard it
-                    sr = wav_sr or (
-                        int(srs[i])
-                        if srs is not None and not pd.isna(srs[i]) and srs[i]
-                        else 16000
-                    )
-                    frame = max(1, sr * SILENCE_FRAME_MS // 1000)
-                    nfr = len(w) // frame
-                    if nfr:
-                        fr = w[: nfr * frame].astype(np.float64)
-                        fr = fr.reshape(nfr, frame)
-                        frms = np.sqrt(np.mean(fr * fr, axis=1))
-                        sil[i] = float(np.mean(frms < SILENCE_RMS))
-                    else:
-                        sil[i] = 1.0 if rms[i] < SILENCE_RMS else 0.0
-            pdf = pdf.copy(deep=False)
-            pdf["n_samples"] = ns
-            pdf["rms"] = rms
-            pdf["peak"] = peak
-            pdf["clip_ratio"] = clip
-            pdf["silence_ratio"] = sil
-            yield pdf
+    def stats(w, sr):
+        w64 = w.astype(np.float64)
+        rms = float(np.sqrt(np.mean(w64 ** 2)))
+        frame = max(1, sr * SILENCE_FRAME_MS // 1000)
+        nfr = len(w) // frame
+        if nfr:
+            fr = w64[: nfr * frame].reshape(nfr, frame)
+            sil = float(np.mean(np.sqrt(np.mean(fr * fr, axis=1)) < SILENCE_RMS))
+        else:
+            sil = 1.0 if rms < SILENCE_RMS else 0.0
+        return (len(w), rms, float(np.max(np.abs(w))),
+                float(np.mean(np.abs(w) >= 32767.0 / 32768.0)), sil)
 
-    return df.mapInPandas(run, schema=out_schema)
+    return _append_columns(df, [
+        (StructField("n_samples", IntegerType()), 0),
+        (StructField("rms", FloatType()), 0.0),
+        (StructField("peak", FloatType()), 0.0),
+        (StructField("clip_ratio", FloatType()), 0.0),
+        (StructField("silence_ratio", FloatType()), 1.0),  # no audio = silent
+    ], stats, gate_col)
 
 
-def resample_audio_df(df: DataFrame, target_sr: int = 16_000,
-                      bytes_col: str = "bytes", sr_col: str = "sr_hz",
-                      codec_col: "str | None" = "codec",
-                      out_col: str = "bytes_rs") -> DataFrame:
+def resample_audio_df(df: DataFrame, target_sr: int = 16_000) -> DataFrame:
     """Resample every clip to ``target_sr`` (the sample-rate unification
     step every ASR/audio-training pipeline runs before feature extraction):
-    per-row codec dispatch (``decode_by_codec`` — WAV containers are parsed,
-    downmixed, and their OWN sample rate used) → ``resample_linear`` →
-    re-encode into a NEW column of RAW PCM s16le (wav rows lose their
-    container: ``bytes_rs`` is uniformly raw PCM at ``sr_rs`` — the point
-    of unification). Raw-PCM clips already at ``target_sr`` pass through
-    BYTE-IDENTICAL (no decode/encode round-trip drift).
+    decode (WAV containers downmixed, their OWN sample rate used) →
+    ``resample_linear`` → re-encode into ``bytes_rs``, RAW PCM s16le at
+    ``sr_rs`` (wav rows lose their container — the point of unification).
+    Raw-PCM clips already at ``target_sr`` come out BYTE-IDENTICAL (decode
+    and encode are exact inverses on PCM16).
 
     ``bytes_rs`` is therefore UNIFORMLY raw PCM s16le or NULL: rows that
     CANNOT be resampled (NULL/empty audio, unknown rate, malformed
-    container) emit ``bytes_rs`` NULL alongside ``sr_rs`` NULL (ADVICE r04:
-    passing the original container bytes through here invited consumers to
-    decode container headers as samples). The un-resampled original is
-    never lost — the source ``bytes`` column is untouched (passthrough
-    invariant). Arrow-batched mapInPandas, one pass, no shuffle."""
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField(out_col, BinaryType()),
-            StructField("sr_rs", IntegerType()),
-            StructField("n_samples_rs", IntegerType()),
-        ]
+    container) emit ``bytes_rs`` NULL alongside ``sr_rs`` NULL and
+    ``n_samples_rs`` 0 (ADVICE r04: container bytes must never masquerade
+    as samples). The original is never lost — the source ``bytes`` column
+    is untouched."""
+
+    def resample(w, sr):
+        w = resample_linear(w, sr, target_sr)
+        return encode_pcm_s16le(w), target_sr, len(w)
+
+    return _append_columns(df, [
+        (StructField("bytes_rs", BinaryType()), None),
+        (StructField("sr_rs", IntegerType()), None),
+        (StructField("n_samples_rs", IntegerType()), 0),
+    ], resample, fallback_sr=None)
+
+
+def audio_embedding_df(df: DataFrame, n_mels: int = 16) -> DataFrame:
+    """Append ``aemb``, a fixed-size ACOUSTIC embedding per clip: the
+    time-mean log-mel energy vector (``array<float>``, length ``n_mels``)
+    from the real ``mel_features`` STFT path — a timbre signature that makes
+    the engine's embedding operators (brute_force_topk / lsh_ann_topk /
+    embedding_neardup) work on AUDIO content, not just text: near-identical
+    recordings land at cosine ≈ 1 regardless of length, different spectral
+    content separates. Empty/NULL/malformed audio → NULL embedding (the
+    similarity ops already NULL-propagate)."""
+
+    def embed(w, sr):
+        return ([float(x) for x in mel_features(w, sr, n_mels=n_mels).mean(axis=0)],)
+
+    return _append_columns(
+        df, [(StructField("aemb", ArrayType(FloatType())), None)], embed
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs: "list[bytes | None]" = []
-            ns = np.zeros(len(pdf), dtype=np.int32)
-            sr_out: "list[int | None]" = []
-            srs = pdf[sr_col].to_numpy()
-            codecs = (
-                pdf[codec_col].to_numpy()
-                if codec_col is not None and codec_col in pdf
-                else None
-            )
-            for i, raw in enumerate(pdf[bytes_col]):
-                meta_sr = int(srs[i]) if not pd.isna(srs[i]) and srs[i] else 0
-                codec = codecs[i] if codecs is not None else None
-                is_wav = codec is not None and str(codec).lower().startswith("wav")
-                if raw is None or len(raw) == 0:
-                    outs.append(None)
-                    sr_out.append(None)
-                    continue
-                if not is_wav and meta_sr == target_sr:
-                    outs.append(raw)  # raw PCM already at target: bit-exact
-                    ns[i] = len(raw) // 2
-                    sr_out.append(target_sr)
-                    continue
-                w, wav_sr = decode_by_codec(raw, codec)
-                sr = wav_sr or meta_sr
-                if sr <= 0 or len(w) == 0:
-                    # unknown rate / malformed container: NULL out-column
-                    # (the original survives in `bytes`) — emitting the
-                    # container bytes here would hand consumers header
-                    # bytes as "PCM" (ADVICE r04)
-                    outs.append(None)
-                    sr_out.append(None)
-                    continue
-                w = resample_linear(w, sr, target_sr)
-                outs.append(encode_pcm_s16le(w))
-                ns[i] = len(w)
-                sr_out.append(target_sr)
-            pdf = pdf.copy(deep=False)
-            pdf[out_col] = outs
-            pdf["sr_rs"] = pd.array(sr_out, dtype="Int32")
-            pdf["n_samples_rs"] = ns
-            yield pdf
-
-    return df.mapInPandas(run, schema=out_schema)
-
-
-def audio_embedding_df(df: DataFrame, n_mels: int = 16,
-                       bytes_col: str = "bytes", sr_col: str = "sr_hz",
-                       codec_col: "str | None" = "codec",
-                       out_col: str = "aemb") -> DataFrame:
-    """Append a fixed-size ACOUSTIC embedding per clip: the time-mean log-mel
-    energy vector (``array<float>``, length ``n_mels``) from the real
-    ``mel_features`` STFT path — a timbre signature that makes the engine's
-    embedding operators (brute_force_topk / lsh_ann_topk / embedding_neardup)
-    work on AUDIO content, not just text: near-identical recordings land at
-    cosine ≈ 1 regardless of length, different spectral content separates.
-    Per-row codec dispatch via ``decode_by_codec`` (WAV parsed/downmixed,
-    container sr authoritative); empty/NULL/malformed audio → NULL embedding
-    (the similarity ops already NULL-propagate). Arrow-batched mapInPandas,
-    one pass, no shuffle."""
-    from pyspark.sql.types import ArrayType
-
-    out_schema = StructType(
-        list(df.schema.fields) + [StructField(out_col, ArrayType(FloatType()))]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs: "list[list[float] | None]" = []
-            srs = pdf[sr_col].to_numpy()
-            codecs = (
-                pdf[codec_col].to_numpy()
-                if codec_col is not None and codec_col in pdf
-                else None
-            )
-            for i, raw in enumerate(pdf[bytes_col]):
-                if raw is None or len(raw) == 0:
-                    outs.append(None)
-                    continue
-                w, wav_sr = decode_by_codec(
-                    raw, codecs[i] if codecs is not None else None
-                )
-                sr = wav_sr or (
-                    int(srs[i]) if not pd.isna(srs[i]) and srs[i] else 16000
-                )
-                if len(w) == 0:  # malformed container
-                    outs.append(None)
-                    continue
-                mel = mel_features(w, sr, n_mels=n_mels)
-                outs.append([float(x) for x in mel.mean(axis=0)])
-            pdf = pdf.copy(deep=False)
-            pdf[out_col] = outs
-            yield pdf
-
-    return df.mapInPandas(run, schema=out_schema)
 
 
 # Loudness normalization: target RMS on the [-1,1) float scale and the gain
@@ -325,43 +306,26 @@ TARGET_RMS = 0.1
 MAX_GAIN = 20.0
 
 
-def normalize_loudness_df(df: DataFrame, bytes_col: str = "bytes",
-                          out_col: str = "bytes_norm",
-                          target_rms: float = TARGET_RMS,
+def normalize_loudness_df(df: DataFrame, target_rms: float = TARGET_RMS,
                           max_gain: float = MAX_GAIN) -> DataFrame:
-    """Gain-normalize each clip's PCM to ``target_rms`` (standard pre-ASR
+    """Gain-normalize each clip to ``target_rms`` (standard pre-ASR
     conditioning): decode → scale by ``min(max_gain, target/rms)`` → clip to
-    [-1, 1) → re-encode into a NEW column. The original ``bytes`` column is
-    untouched (the pipeline's passthrough invariant stays intact); the
-    applied ``gain_db`` is emitted per clip. Arrow-batched mapInPandas, one
-    pass, no shuffle."""
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("gain_db", FloatType()),
-            StructField(out_col, BinaryType()),
-        ]
-    )
+    [-1, 1) → re-encode into ``bytes_norm`` (raw mono PCM16). The original
+    ``bytes`` column is untouched (the pipeline's passthrough invariant);
+    the applied ``gain_db`` is emitted per clip. Rows that yield no wave
+    (NULL/empty/malformed) emit ``bytes_norm`` NULL and ``gain_db`` 0 (the
+    resample_audio_df contract — NULL marks not-PCM)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            gains = np.zeros(len(pdf), dtype=np.float32)
-            outs: "list[bytes | None]" = []
-            for i, raw in enumerate(pdf[bytes_col]):
-                if raw is None or len(raw) == 0:
-                    outs.append(raw)
-                    continue
-                w = decode_pcm_s16le(raw)
-                rms = float(np.sqrt(np.mean(w.astype(np.float64) ** 2)))
-                g = min(max_gain, target_rms / rms) if rms > 0 else 1.0
-                gains[i] = 20.0 * np.log10(g) if g > 0 else 0.0
-                outs.append(encode_pcm_s16le(np.clip(w * g, -1.0, 1.0 - 1.0 / 32768)))
-            pdf = pdf.copy(deep=False)
-            pdf["gain_db"] = gains
-            pdf[out_col] = outs
-            yield pdf
+    def normalize(w, sr):
+        rms = float(np.sqrt(np.mean(w.astype(np.float64) ** 2)))
+        g = min(max_gain, target_rms / rms) if rms > 0 else 1.0
+        return (20.0 * np.log10(g) if g > 0 else 0.0,
+                encode_pcm_s16le(np.clip(w * g, -1.0, 1.0 - 1.0 / 32768)))
 
-    return df.mapInPandas(run, schema=out_schema)
+    return _append_columns(df, [
+        (StructField("gain_db", FloatType()), 0.0),
+        (StructField("bytes_norm", BinaryType()), None),
+    ], normalize)
 
 
 def chunk_bounds(n_samples: int, win: int, min_tail: int) -> "list[tuple[int, int]]":
@@ -380,68 +344,43 @@ def chunk_bounds(n_samples: int, win: int, min_tail: int) -> "list[tuple[int, in
 
 
 def chunk_audio_df(df: DataFrame, window_ms: int = 30_000,
-                   min_tail_ms: int = 1_000,
-                   bytes_col: str = "bytes", sr_col: str = "sr_hz",
-                   id_col: str = "clip_id") -> DataFrame:
-    """Segment each clip's PCM into fixed ``window_ms`` windows (the
-    standard long-audio prep for ASR training): emits one row per chunk
-    with (chunk_id, chunk_idx, start_ms, bytes, sr_hz, dur_ms). A final
-    tail shorter than ``min_tail_ms`` is merged into the previous chunk
-    rather than emitted as a sliver.
+                   min_tail_ms: int = 1_000) -> DataFrame:
+    """Segment each clip into fixed ``window_ms`` windows (the standard
+    long-audio prep for ASR training): emits one row per chunk with
+    (chunk_id, clip_id, chunk_idx, start_ms, sr_hz, dur_ms, bytes), the
+    chunk ``bytes`` raw mono PCM16 at ``sr_hz`` (a WAV row's container rate).
+    A final tail shorter than ``min_tail_ms`` is merged into the previous
+    chunk rather than emitted as a sliver. Rows that yield no wave or have
+    no known rate emit no chunks.
 
     Transcripts CANNOT be split without word-level alignment, which the
     input schema doesn't carry — so chunks keep no transcript column;
     callers needing aligned text must join alignment data themselves (the
     honest contract, same policy as the stubbed lossy codecs).
 
-    Scale shape: pure per-row fan-out inside one Arrow pass (byte slicing
-    on sample boundaries, no decode needed beyond arithmetic) — no shuffle;
+    Scale shape: per-row fan-out inside one Arrow pass, no shuffle;
     downstream ops re-partition on chunk_id as usual."""
-    out_schema = StructType(
-        [
-            StructField("chunk_id", StringType(), False),
-            StructField(id_col, StringType()),
-            StructField("chunk_idx", IntegerType()),
-            StructField("start_ms", IntegerType()),
-            StructField(sr_col, IntegerType()),
-            StructField("dur_ms", IntegerType()),
-            StructField("bytes", BinaryType()),
+
+    def chunks(w, sr):
+        win = max(1, sr * window_ms // 1000)
+        bounds = chunk_bounds(len(w), win, sr * min_tail_ms // 1000)
+        return [
+            (idx, s0 * 1000 // sr, sr, (e0 - s0) * 1000 // sr,
+             encode_pcm_s16le(w[s0:e0]))
+            for idx, (s0, e0) in enumerate(bounds)
         ]
+
+    out = _explode_clips(df, "clip_id", [
+        StructField("chunk_idx", IntegerType()),
+        StructField("start_ms", IntegerType()),
+        StructField("sr_hz", IntegerType()),
+        StructField("dur_ms", IntegerType()),
+        StructField("bytes", BinaryType()),
+    ], chunks, fallback_sr=None)
+    return out.select(
+        F.format_string("%s#%04d", "clip_id", "chunk_idx").alias("chunk_id"),
+        *out.columns,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for cid, raw, sr in zip(pdf[id_col], pdf[bytes_col], pdf[sr_col]):
-                # NULL sr_hz reaches pandas as NaN, which is truthy — pd.isna
-                # first, or int(sr) below raises inside the Arrow batch
-                if raw is None or len(raw) < 2 or pd.isna(sr) or not sr:
-                    continue
-                n = len(raw) // 2
-                win = max(1, int(sr) * window_ms // 1000)
-                min_tail = int(sr) * min_tail_ms // 1000
-                for idx, (s0, e0) in enumerate(chunk_bounds(n, win, min_tail)):
-                    chunk = raw[2 * s0 : 2 * e0]
-                    rows.append(
-                        (
-                            f"{cid}#{idx:04d}",
-                            cid,
-                            idx,
-                            s0 * 1000 // int(sr),
-                            int(sr),
-                            (e0 - s0) * 1000 // int(sr),
-                            chunk,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "chunk_id", id_col, "chunk_idx", "start_ms",
-                    sr_col, "dur_ms", "bytes",
-                ],
-            )
-
-    return df.mapInPandas(run, schema=out_schema)
 
 
 def speech_segments(speech: "np.ndarray", min_speech_frames: int = 2,
@@ -480,85 +419,47 @@ def _frame_speech_mask(w: "np.ndarray", sr: int, frame_ms: int,
     return frms >= speech_rms, frame
 
 
-def vad_segments_df(df: DataFrame, bytes_col: str = "bytes",
-                    sr_col: str = "sr_hz", id_col: str = "clip_id",
-                    codec_col: "str | None" = "codec",
+def vad_segments_df(df: DataFrame,
                     frame_ms: int = SILENCE_FRAME_MS,
                     speech_rms: float = SILENCE_RMS,
                     min_speech_frames: int = 2,
                     max_gap_frames: int = 1) -> DataFrame:
     """Energy-based voice-activity detection: one output row per detected
-    speech segment — (id, seg_idx, start_ms, end_ms, dur_ms, seg_rms). The
-    frame mask is RMS ≥ ``speech_rms`` over ``frame_ms`` frames; segments
-    bridge silent gaps of ≤ ``max_gap_frames`` and must span ≥
+    speech segment — (clip_id, seg_idx, start_ms, end_ms, dur_ms, seg_rms).
+    The frame mask is RMS ≥ ``speech_rms`` over ``frame_ms`` frames;
+    segments bridge silent gaps of ≤ ``max_gap_frames`` and must span ≥
     ``min_speech_frames`` (see :func:`speech_segments`). Undecodable or
     silent clips emit no rows (the signal gate already flags them).
 
-    Scale shape: ONE Arrow pass, decode + frame math vectorized per row in
-    numpy, no shuffle; the fan-out is bounded by clip duration / frame_ms.
+    Scale shape: ONE Arrow pass, frame math vectorized per row in numpy, no
+    shuffle; the fan-out is bounded by clip duration / frame_ms.
     (Engine-side addition — the reference has no audio path; VAD is the
     standard speech-corpus prep between codec decode and chunking.)"""
-    out_schema = StructType(
-        [
-            StructField(id_col, StringType()),
-            StructField("seg_idx", IntegerType()),
-            StructField("start_ms", IntegerType()),
-            StructField("end_ms", IntegerType()),
-            StructField("dur_ms", IntegerType()),
-            StructField("seg_rms", FloatType()),
-        ]
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            srs = pdf[sr_col].to_numpy() if sr_col in pdf else None
-            codecs = (
-                pdf[codec_col].to_numpy()
-                if codec_col is not None and codec_col in pdf
-                else None
-            )
-            rows = []
-            for i, (cid, raw) in enumerate(zip(pdf[id_col], pdf[bytes_col])):
-                if raw is None or len(raw) == 0:
-                    continue
-                w, wav_sr = decode_by_codec(
-                    raw, codecs[i] if codecs is not None else None
-                )
-                if not len(w):
-                    continue
-                sr = wav_sr or (
-                    int(srs[i])
-                    if srs is not None and not pd.isna(srs[i]) and srs[i]
-                    else 16000
-                )
-                mask, frame = _frame_speech_mask(w, sr, frame_ms, speech_rms)
-                for k, (f0, f1) in enumerate(
-                    speech_segments(mask, min_speech_frames, max_gap_frames)
-                ):
-                    s0, s1 = f0 * frame, min(f1 * frame, len(w))
-                    seg = w[s0:s1].astype(np.float64)
-                    rows.append(
-                        (
-                            cid, k,
-                            s0 * 1000 // sr, s1 * 1000 // sr,
-                            (s1 - s0) * 1000 // sr,
-                            float(np.sqrt(np.mean(seg * seg))),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "seg_idx", "start_ms", "end_ms", "dur_ms",
-                    "seg_rms",
-                ],
-            )
+    def segments(w, sr):
+        mask, frame = _frame_speech_mask(w, sr, frame_ms, speech_rms)
+        rows = []
+        for k, (f0, f1) in enumerate(
+            speech_segments(mask, min_speech_frames, max_gap_frames)
+        ):
+            s0, s1 = f0 * frame, min(f1 * frame, len(w))
+            seg = w[s0:s1].astype(np.float64)
+            rows.append((
+                k, s0 * 1000 // sr, s1 * 1000 // sr, (s1 - s0) * 1000 // sr,
+                float(np.sqrt(np.mean(seg * seg))),
+            ))
+        return rows
 
-    return df.mapInPandas(run, schema=out_schema)
+    return _explode_clips(df, "clip_id", [
+        StructField("seg_idx", IntegerType()),
+        StructField("start_ms", IntegerType()),
+        StructField("end_ms", IntegerType()),
+        StructField("dur_ms", IntegerType()),
+        StructField("seg_rms", FloatType()),
+    ], segments)
 
 
-def trim_silence_df(df: DataFrame, bytes_col: str = "bytes",
-                    sr_col: str = "sr_hz",
-                    codec_col: "str | None" = "codec",
+def trim_silence_df(df: DataFrame,
                     frame_ms: int = SILENCE_FRAME_MS,
                     speech_rms: float = SILENCE_RMS,
                     pad_frames: int = 1) -> DataFrame:
@@ -577,65 +478,24 @@ def trim_silence_df(df: DataFrame, bytes_col: str = "bytes",
 
     One Arrow pass, no shuffle; a clip already starting and ending in
     speech passes its samples through byte-identically."""
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("bytes_trim", BinaryType()),
-            StructField("sr_trim", IntegerType()),
-            StructField("n_samples_trim", IntegerType()),
-            StructField("trim_head_ms", IntegerType()),
-            StructField("trim_tail_ms", IntegerType()),
-        ]
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            srs = pdf[sr_col].to_numpy() if sr_col in pdf else None
-            codecs = (
-                pdf[codec_col].to_numpy()
-                if codec_col is not None and codec_col in pdf
-                else None
-            )
-            outb, outsr, outn, outh, outt = [], [], [], [], []
-            for i, raw in enumerate(pdf[bytes_col]):
-                if raw is None or len(raw) == 0:
-                    outb.append(None), outsr.append(None), outn.append(0)
-                    outh.append(0), outt.append(0)
-                    continue
-                w, wav_sr = decode_by_codec(
-                    raw, codecs[i] if codecs is not None else None
-                )
-                if not len(w):
-                    outb.append(None), outsr.append(None), outn.append(0)
-                    outh.append(0), outt.append(0)
-                    continue
-                sr = wav_sr or (
-                    int(srs[i])
-                    if srs is not None and not pd.isna(srs[i]) and srs[i]
-                    else 16000
-                )
-                mask, frame = _frame_speech_mask(w, sr, frame_ms, speech_rms)
-                idx = np.flatnonzero(mask)
-                if idx.size == 0:
-                    outb.append(b""), outsr.append(sr), outn.append(0)
-                    outh.append(len(w) * 1000 // sr), outt.append(0)
-                    continue
-                s0 = max(0, (int(idx[0]) - pad_frames)) * frame
-                s1 = min(len(w), (int(idx[-1]) + 1 + pad_frames) * frame)
-                outb.append(encode_pcm_s16le(w[s0:s1]))
-                outsr.append(sr)
-                outn.append(s1 - s0)
-                outh.append(s0 * 1000 // sr)
-                outt.append((len(w) - s1) * 1000 // sr)
-            pdf = pdf.copy(deep=False)
-            pdf["bytes_trim"] = pd.Series(outb, dtype=object)
-            pdf["sr_trim"] = pd.Series(outsr, dtype=object)
-            pdf["n_samples_trim"] = np.asarray(outn, dtype=np.int32)
-            pdf["trim_head_ms"] = np.asarray(outh, dtype=np.int32)
-            pdf["trim_tail_ms"] = np.asarray(outt, dtype=np.int32)
-            yield pdf
+    def trim(w, sr):
+        mask, frame = _frame_speech_mask(w, sr, frame_ms, speech_rms)
+        idx = np.flatnonzero(mask)
+        if idx.size == 0:
+            return b"", sr, 0, len(w) * 1000 // sr, 0
+        s0 = max(0, (int(idx[0]) - pad_frames)) * frame
+        s1 = min(len(w), (int(idx[-1]) + 1 + pad_frames) * frame)
+        return (encode_pcm_s16le(w[s0:s1]), sr, s1 - s0, s0 * 1000 // sr,
+                (len(w) - s1) * 1000 // sr)
 
-    return df.mapInPandas(run, schema=out_schema)
+    return _append_columns(df, [
+        (StructField("bytes_trim", BinaryType()), None),
+        (StructField("sr_trim", IntegerType()), None),
+        (StructField("n_samples_trim", IntegerType()), 0),
+        (StructField("trim_head_ms", IntegerType()), 0),
+        (StructField("trim_tail_ms", IntegerType()), 0),
+    ], trim)
 
 
 # Signal-gate thresholds (audio twin of operators/quality.py rule_flags).
@@ -645,25 +505,24 @@ MIN_RMS = 0.005            # essentially digital silence end-to-end
 MAX_DUR_DRIFT = 0.02       # |n_samples/sr − dur_ms/1000| tolerance (2%)
 
 
-def audio_signal_flags(df: DataFrame,
-                       sr_col: str = "sr_hz",
-                       dur_col: str = "dur_ms") -> DataFrame:
+def audio_signal_flags(df: DataFrame) -> DataFrame:
     """Pure-Catalyst keep/drop gate over the waveform statistics emitted by
-    ``audio_features_df`` — the signal-level twin of the transcript rules
-    (operators/quality.py). Appends ``signal_flags`` (comma-joined, '' =
-    clean) and boolean ``keep_signal``.
+    ``audio_features_df`` and the clips table's ``sr_hz``/``dur_ms`` — the
+    signal-level twin of the transcript rules (operators/quality.py).
+    Appends ``signal_flags`` (comma-joined, '' = clean) and boolean
+    ``keep_signal``.
 
     Scale shape: runs AFTER the metadata + transcript gates in a real
     pipeline so the expensive PCM decode only touches survivors; the flags
     themselves are codegen'd projections — no Python, no shuffle."""
-    dur_s = F.col(dur_col).cast("double") / 1000.0
-    decoded_s = F.col("n_samples").cast("double") / F.col(sr_col).cast("double")
+    dur_s = F.col("dur_ms").cast("double") / 1000.0
+    decoded_s = F.col("n_samples").cast("double") / F.col("sr_hz").cast("double")
     drift = F.abs(decoded_s - dur_s) > (dur_s * MAX_DUR_DRIFT + 1e-3)
     flags = F.array(
         F.when(F.col("rms") < MIN_RMS, F.lit("digital_silence")),
         F.when(F.col("silence_ratio") > MAX_SILENCE_RATIO, F.lit("mostly_silent")),
         F.when(F.col("clip_ratio") > MAX_CLIP_RATIO, F.lit("clipped")),
-        F.when((F.col(dur_col) > 0) & drift, F.lit("metadata_drift")),
+        F.when((F.col("dur_ms") > 0) & drift, F.lit("metadata_drift")),
         F.when(F.col("n_samples") <= 0, F.lit("no_audio")),
     )
     flags = F.array_compact(flags)
@@ -789,52 +648,23 @@ def mel_features(wave: np.ndarray, sr_hz: int, n_mels: int = 80,
     return np.log1p(mel).astype(np.float32)
 
 
-def mel_stats_df(df: DataFrame, bytes_col: str = "bytes",
-                 sr_col: str = "sr_hz", n_mels: int = 80) -> DataFrame:
+def mel_stats_df(df: DataFrame, n_mels: int = 80) -> DataFrame:
     """Append log-mel summary columns (n_frames, mel_mean, mel_dom_bin)
-    computed with the REAL ``mel_features`` over Arrow batches — the
-    feature-extraction stage of an audio training-data pipeline. Bytes stay
-    executor-side; the summary keeps the driver-facing schema flat-scalar
-    (the full (frames × mels) matrix would be per-clip payload, not a query
-    result)."""
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("n_frames", IntegerType()),
-            StructField("mel_mean", FloatType()),
-            StructField("mel_dom_bin", IntegerType()),
-        ]
-    )
+    computed with the REAL ``mel_features`` at the row's rate (16 kHz when
+    unknown) — the feature-extraction stage of an audio training-data
+    pipeline. Bytes stay executor-side; the summary keeps the driver-facing
+    schema flat-scalar (the full (frames × mels) matrix would be per-clip
+    payload, not a query result). Rows that yield no wave keep zeros."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            nf = np.zeros(n, dtype=np.int32)
-            mm = np.zeros(n, dtype=np.float32)
-            dom = np.zeros(n, dtype=np.int32)
-            srs = pdf[sr_col].to_numpy()
-            for i, raw in enumerate(pdf[bytes_col]):
-                if raw is None or len(raw) == 0:
-                    continue
-                mel = mel_features(decode_pcm_s16le(raw), int(srs[i]),
-                                   n_mels=n_mels)
-                nf[i] = mel.shape[0]
-                mm[i] = float(mel.mean())
-                dom[i] = int(np.argmax(mel.mean(axis=0)))
-            pdf = pdf.copy(deep=False)
-            pdf["n_frames"] = nf
-            pdf["mel_mean"] = mm
-            pdf["mel_dom_bin"] = dom
-            yield pdf
+    def summary(w, sr):
+        mel = mel_features(w, sr, n_mels=n_mels)
+        return mel.shape[0], float(mel.mean()), int(np.argmax(mel.mean(axis=0)))
 
-    return df.mapInPandas(run, schema=out_schema)
-
-
-# ------------------------------------------------------------------ stubs
-
-MEL_SCHEMA = StructType(
-    [StructField("mel", ArrayType(FloatType())), StructField("n_frames", IntegerType())]
-)
+    return _append_columns(df, [
+        (StructField("n_frames", IntegerType()), 0),
+        (StructField("mel_mean", FloatType()), 0.0),
+        (StructField("mel_dom_bin", IntegerType()), 0),
+    ], summary)
 
 
 # --------------------------------------- spectral-subtraction noise removal
@@ -896,59 +726,26 @@ def spectral_denoise(wave: "np.ndarray", noise_pct: float = 10.0,
     return out[hop:hop + n].astype(np.float32), noise_db
 
 
-def denoise_audio_df(df: DataFrame, bytes_col: str = "bytes",
-                     sr_col: str = "sr_hz",
-                     codec_col: "str | None" = "codec",
-                     noise_pct: float = 10.0, alpha: float = 2.0,
-                     floor: float = 0.05,
+def denoise_audio_df(df: DataFrame, noise_pct: float = 10.0,
+                     alpha: float = 2.0, floor: float = 0.05,
                      gate_col: "str | None" = None) -> DataFrame:
     """Append ``bytes_dn`` (spectral-subtraction-denoised raw mono PCM16)
     and ``noise_db`` (the per-clip noise-floor estimate in dBFS). Rows that
-    cannot be decoded emit ``bytes_dn`` = NULL (the resample_audio_df
-    contract — NULL marks not-PCM). One Arrow pass, no shuffle; the source
-    bytes column passes through untouched (same new-column policy as
-    loudness normalization). ``gate_col`` (boolean): rows where it is false
-    skip the decode+FFT entirely and emit NULLs — the pipeline uses it so
-    only keep-survivors pay the transform."""
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("bytes_dn", BinaryType()),
-            StructField("noise_db", FloatType()),
-        ]
-    )
+    cannot be decoded emit ``bytes_dn`` = NULL and ``noise_db`` = NULL (the
+    resample_audio_df contract — NULL marks not-PCM). One Arrow pass, no
+    shuffle; the source bytes column passes through untouched (same
+    new-column policy as loudness normalization). ``gate_col`` (boolean):
+    rows where it is false skip the decode+FFT entirely and emit NULLs —
+    the pipeline uses it so only keep-survivors pay the transform."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            codecs = (
-                pdf[codec_col].to_numpy()
-                if codec_col is not None and codec_col in pdf
-                else None
-            )
-            gates = pdf[gate_col].to_numpy() if gate_col else None
-            outb, outdb = [], []
-            for i, raw in enumerate(pdf[bytes_col]):
-                if gates is not None and not gates[i]:
-                    outb.append(None), outdb.append(None)
-                    continue
-                if raw is None or len(raw) == 0:
-                    outb.append(None), outdb.append(None)
-                    continue
-                w, _ = decode_by_codec(
-                    raw, codecs[i] if codecs is not None else None
-                )
-                if not len(w):
-                    outb.append(None), outdb.append(None)
-                    continue
-                dn, ndb = spectral_denoise(w, noise_pct, alpha, floor)
-                outb.append(encode_pcm_s16le(dn))
-                outdb.append(np.float32(ndb))
-            pdf = pdf.copy(deep=False)
-            pdf["bytes_dn"] = pd.Series(outb, dtype=object)
-            pdf["noise_db"] = pd.Series(outdb, dtype="float32")
-            yield pdf
+    def denoise(w, sr):
+        dn, ndb = spectral_denoise(w, noise_pct, alpha, floor)
+        return encode_pcm_s16le(dn), ndb
 
-    return df.mapInPandas(run, schema=out_schema)
+    return _append_columns(df, [
+        (StructField("bytes_dn", BinaryType()), None),
+        (StructField("noise_db", FloatType()), None),
+    ], denoise, gate_col)
 
 
 # --------------------------------- landmark (Shazam-style) fingerprinting
@@ -1036,9 +833,7 @@ def landmark_hashes(peaks: "np.ndarray", fan_out: int = FP_FAN,
     return lm
 
 
-def audio_fingerprints_df(df: DataFrame, bytes_col: str = "bytes",
-                          codec_col: "str | None" = "codec",
-                          id_col: str = "clip_id",
+def audio_fingerprints_df(df: DataFrame,
                           carry_cols: "tuple[str, ...]" = ()) -> DataFrame:
     """Explode each clip into its landmark-fingerprint table
     ``(id, hash, t1)`` — the audio twin of the text shingle explode.
@@ -1054,49 +849,13 @@ def audio_fingerprints_df(df: DataFrame, bytes_col: str = "bytes",
     through the extraction this way — the watermark is re-declared on the
     carried column afterwards, since a mapInPandas output is a fresh
     attribute set and cannot inherit the annotation)."""
-    out_schema = StructType([
-        StructField("id", StringType()),
+    return _explode_clips(df, "id", [
         StructField("hash", LongType()),
         StructField("t1", IntegerType()),
-    ] + [df.schema[c] for c in carry_cols])
+    ], lambda w, sr: landmark_hashes(spectral_peaks(w)).tolist(), carry_cols)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            codecs = (
-                pdf[codec_col].to_numpy()
-                if codec_col is not None and codec_col in pdf
-                else None
-            )
-            ids, hashes, t1s = [], [], []
-            carried: "dict[str, list]" = {c: [] for c in carry_cols}
-            for i, raw in enumerate(pdf[bytes_col]):
-                if raw is None or len(raw) == 0:
-                    continue
-                try:
-                    wave, _ = decode_by_codec(
-                        raw, None if codecs is None else codecs[i]
-                    )
-                except (ValueError, NotImplementedError):
-                    continue
-                lm = landmark_hashes(spectral_peaks(wave))
-                if not len(lm):
-                    continue
-                ids.extend([pdf[id_col].iloc[i]] * len(lm))
-                for c in carry_cols:
-                    carried[c].extend([pdf[c].iloc[i]] * len(lm))
-                hashes.append(lm[:, 0])
-                t1s.append(lm[:, 1].astype(np.int32))
-            yield pd.DataFrame({
-                "id": ids,
-                "hash": np.concatenate(hashes) if hashes
-                else np.array([], dtype=np.int64),
-                "t1": np.concatenate(t1s) if t1s
-                else np.array([], dtype=np.int32),
-                **{c: carried[c] for c in carry_cols},
-            })
 
-    return df.mapInPandas(run, schema=out_schema)
-
+# ------------------------------------------------------------------ stubs
 
 def decode_compressed_audio(raw: bytes, codec: str) -> np.ndarray:
     """Decode opus/mp3/flac → waveform. STUB: no codec libs in this container."""

@@ -224,8 +224,8 @@ def capped_cross_pairs(new: DataFrame, ref: DataFrame,
     """Two-corpus twin of :func:`capped_bucket_pairs`: (id_a, id_b) pairs
     where a NEW-side row shares a bucket key with a REFERENCE-side row
     (id_a = new id, id_b = ref id; per-row payload columns in ``carry``
-    surface as a_<c>/b_<c>). Same hot-bucket doctrine as
-    :func:`cross_corpus_candidates`: the first ``max_bucket`` members of
+    surface as a_<c>/b_<c>; :func:`cross_corpus_candidates` is this over
+    MinHash band keys). Hot buckets: the first ``max_bucket`` members of
     each side (by id) pair exhaustively (≤ k·k per bucket); every overflow
     NEW member emits exactly ONE pair with the bucket's FIRST ref row (the
     representative link, payload included), so the hit signal survives any
@@ -351,37 +351,9 @@ def cross_corpus_candidates(df_new: DataFrame, df_ref: DataFrame,
     only pair multiplicity is lost, never the hit/no-hit signal."""
     sn = _band_sigs(_minhash_wide(df_new, text_col, id_col, n_shingle), bands)
     sr = _band_sigs(_minhash_wide(df_ref, text_col, id_col, n_shingle), bands)
-    if max_bucket is None:
-        pairs = sn.alias("n").join(sr.alias("r"), ["band", "sig"]).select(
-            F.col("n.id").alias("id_new"), F.col("r.id").alias("id_ref")
-        )
-    else:
-        w = Window.partitionBy("band", "sig").orderBy("id")
-        # ref representative = min id per bucket: a tiny map-side-combinable
-        # aggregate, NOT a window over the big side
-        rep = sr.groupBy("band", "sig").agg(F.min("id").alias("rep_id"))
-        sr_kept = (
-            sr.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") <= max_bucket)
-            .drop("_rk")
-        )
-        sn_ranked = sn.withColumn("_rk", F.row_number().over(w))
-        sn_kept = sn_ranked.filter(F.col("_rk") <= max_bucket).drop("_rk")
-        sn_over = sn_ranked.filter(F.col("_rk") > max_bucket).drop("_rk")
-        pairs = (
-            sn_kept.alias("n")
-            .join(sr_kept.alias("r"), ["band", "sig"])
-            .select(
-                F.col("n.id").alias("id_new"), F.col("r.id").alias("id_ref")
-            )
-            .unionByName(
-                sn_over.join(rep, ["band", "sig"]).select(
-                    F.col("id").alias("id_new"),
-                    F.col("rep_id").alias("id_ref"),
-                )
-            )
-        )
-    return pairs.distinct()
+    return capped_cross_pairs(sn, sr, ["band", "sig"], max_bucket).select(
+        F.col("id_a").alias("id_new"), F.col("id_b").alias("id_ref")
+    ).distinct()
 
 
 def incremental_dedup(df_new: DataFrame, df_ref: DataFrame,

@@ -382,7 +382,8 @@ def streaming_minhash_candidates(
             # the one shingle-hash path, shared with the verified lane; a
             # NULL text hashes to NULL (the UDF would hash it as '')
             F.when(F.col(text_col).isNotNull(),
-                   minhash_features_udf()(F.col(text_col))["hs"]).alias("_hs"),
+                   minhash_features_udf(with_sig=False)(F.col(text_col))["hs"]
+                   ).alias("_hs"),
             *extra,
         )
         .select(
@@ -407,19 +408,21 @@ def streaming_minhash_candidates(
 _MINHASH_UDF_MEMO_CAP = 500_000
 
 
-def minhash_features_udf():
+def minhash_features_udf(with_sig: bool = True):
     """The one shingle-hash path of the stateful near-dup stages: text →
     struct<hs: array<bigint>, sig: array<bigint>> where ``hs`` are the
     h60-mod-p DISTINCT-shingle hashes (the affine band family's input) and
     ``sig`` the H salted minhashes (the batch estimator's
     ``_minhash_wide_salted`` family) — BIT-IDENTICAL to the Catalyst
     expressions over ``dedup.shingles_expr`` (the parity references live in
-    tests/test_streaming.py).
+    tests/test_streaming.py). ``with_sig=False`` returns struct<hs> only
+    and hashes each new shingle once instead of H + 1 times: the
+    candidates lane reads no signature.
 
     Why a UDF beats the expression here (measured, see BENCH.md): the
     expression path evaluates 12 interpreted ``array_min(transform(...))``
     higher-order functions per row (~6k rows/s ceiling on 12-word texts);
-    this path memoizes each distinct shingle's 13 hash values in a
+    this path memoizes each distinct shingle's hash values in a
     per-worker dict — on real (boilerplate-heavy) streams most shingles
     repeat, so steady-state cost is a dict hit + one ``np.minimum`` reduce.
 
@@ -441,18 +444,16 @@ def minhash_features_udf():
 
     from ..operators.dedup import MERSENNE_P, MINHASH_PARAMS
 
-    H = len(MINHASH_PARAMS)
     # Java-\s equivalents: Spark's regexp_replace('\s') is ASCII-only
     _strip = re.compile(r"^[ \t\n\x0b\f\r]+|[ \t\n\x0b\f\r]+$")
     _ws = re.compile(r"[ \t\n\x0b\f\r]+")
     memo: "dict[str, np.ndarray]" = {}
-    salts = [f"{i}|".encode() for i in range(H)]
+    salts = [f"{i}|".encode() for i in range(len(MINHASH_PARAMS))
+             if with_sig]
 
     out_type = StructType(
-        [
-            StructField("hs", ArrayType(LongType())),
-            StructField("sig", ArrayType(LongType())),
-        ]
+        [StructField("hs", ArrayType(LongType()))]
+        + ([StructField("sig", ArrayType(LongType()))] if with_sig else [])
     )
 
     @F.pandas_udf(out_type)
@@ -462,7 +463,7 @@ def minhash_features_udf():
         for t in texts:
             # cap checked PER ROW, not per Arrow batch (ADVICE r04): one
             # batch of high-entropy text can insert thousands of distinct
-            # shingles (13 int64 each), so a batch-entry check lets the
+            # shingles (up to 13 int64 each), so a batch-entry check lets the
             # dict overshoot the cap by the whole batch's shingle count
             if len(memo) > _MINHASH_UDF_MEMO_CAP:
                 memo.clear()
@@ -480,7 +481,7 @@ def minhash_features_udf():
                 e = memo.get(s)
                 if e is None:
                     b = s.encode("utf-8")
-                    e = np.empty(H + 1, dtype=np.int64)
+                    e = np.empty(len(salts) + 1, dtype=np.int64)
                     e[0] = int(hashlib.md5(b).hexdigest()[:15], 16) % MERSENNE_P
                     for i, salt in enumerate(salts):
                         e[i + 1] = (
@@ -489,10 +490,14 @@ def minhash_features_udf():
                         )
                     memo[s] = e
                 hs.append(int(e[0]))
-                acc = e[1:] if acc is None else np.minimum(acc, e[1:])
+                if with_sig:
+                    acc = e[1:] if acc is None else np.minimum(acc, e[1:])
             out_hs.append(hs)
-            out_sig.append([int(x) for x in acc])
-        return pd.DataFrame({"hs": out_hs, "sig": out_sig})
+            if with_sig:
+                out_sig.append([int(x) for x in acc])
+        return pd.DataFrame(
+            {"hs": out_hs, "sig": out_sig} if with_sig else {"hs": out_hs}
+        )
 
     return feats
 
@@ -683,9 +688,6 @@ def windowed_lang_counts(
 
 def streaming_fingerprint_links(
     clips_stream: DataFrame,
-    bytes_col: str = "bytes",
-    codec_col: "str | None" = "codec",
-    id_col: str = "clip_id",
     max_entries_per_hash: int = 8,
     ttl_ms: "int | None" = None,
     event_time_col: "str | None" = None,
@@ -822,12 +824,9 @@ def streaming_fingerprint_links(
                 "dt_off": pd.array(out_dt, dtype="int32"),
             })
 
-    src = clips_stream.filter(F.col(id_col).isNotNull())
+    src = clips_stream.filter(F.col("clip_id").isNotNull())
     carry = (event_time_col,) if event_mode else ()
-    fp = audio_fingerprints_df(
-        src, bytes_col=bytes_col, codec_col=codec_col, id_col=id_col,
-        carry_cols=carry,
-    )
+    fp = audio_fingerprints_df(src, carry_cols=carry)
     if event_mode:
         fp = fp.withWatermark(event_time_col, watermark_delay).withColumn(
             "_evt", F.unix_millis(F.col(event_time_col).cast("timestamp"))

@@ -84,10 +84,10 @@ def operators(spark, path):
     small = clips.filter(F.col("clip_id") < "clip-000000002000")
 
     def vad():
-        t = (trim_silence_df(clips).drop("bytes", "sr_hz")
+        t = (trim_silence_df(clips).drop("bytes", "sr_hz", "codec")
              .withColumnRenamed("bytes_trim", "bytes")
              .withColumnRenamed("sr_trim", "sr_hz"))
-        return vad_segments_df(t, codec_col=None)
+        return vad_segments_df(t)
 
     def fp_matches():
         fp = audio_fingerprints_df(small)

@@ -15,8 +15,6 @@ distributed once per host via --archives, and its path is passed with
 import argparse
 import sys
 
-from pyspark.sql import SparkSession
-
 
 def main() -> int:
     ap = argparse.ArgumentParser()
@@ -30,12 +28,12 @@ def main() -> int:
                          "silence/clipping/drift flags into keep")
     args = ap.parse_args()
 
-    spark = SparkSession.builder.appName("heliport_quality_filter").getOrCreate()
-    # engine posture even when the session comes from spark-submit confs
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-
     from heliport_spark.pipeline import run_pipeline
+    from heliport_spark.plans import get_spark
+
+    # the engine's one conf table (plans.session_conf); spark-submit's own
+    # master stays in charge, so the stock Python daemon is kept
+    spark = get_spark(app_name="heliport_quality_filter")
 
     clips = spark.read.parquet(args.input)
     counters = run_pipeline(
@@ -44,6 +42,7 @@ def main() -> int:
         with_signal_gate=args.signal_gate,
     )
     print(f"pipeline complete: {counters}")
+    spark.stop()
     return 0
 
 

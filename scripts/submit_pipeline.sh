@@ -2,7 +2,10 @@
 # Package the engine and launch the quality-filter pipeline via spark-submit.
 #   ./scripts/submit_pipeline.sh INPUT_PARQUET OUTPUT_TABLE [MASTER] [extra args...]
 # On a real cluster set MASTER to yarn/k8s and pass --model-dir pointing at a
-# shared-filesystem copy of models/heli.
+# shared-filesystem copy of models/heli. Session confs come from the engine's
+# one conf table (heliport_spark.plans.session_conf), applied by
+# pipeline_submit.py; only the driver memory is set here, because the driver
+# JVM starts before any Python runs.
 set -euo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 INPUT="$1"; OUTPUT="$2"; MASTER="${3:-local[8]}"; shift 2 || true; shift || true
@@ -14,10 +17,5 @@ exec spark-submit \
   --master "$MASTER" \
   --py-files "$ZIP" \
   --driver-memory "${DRIVER_MEMORY:-8g}" \
-  --conf spark.sql.shuffle.partitions=32 \
-  --conf spark.sql.execution.arrow.maxRecordsPerBatch=10000 \
-  --conf spark.sql.parquet.columnarReaderBatchSize=1024 \
-  --conf spark.executorEnv.OMP_NUM_THREADS=1 \
-  --conf spark.executorEnv.OPENBLAS_NUM_THREADS=1 \
   "$REPO/scripts/pipeline_submit.py" "$INPUT" "$OUTPUT" \
   --model-dir "${HELIPORT_MODEL_DIR:-$REPO/models/heli}" "$@"

@@ -454,6 +454,152 @@ def test_chunk_audio(spark):
     assert a[0]["chunk_id"] == "a#0000"
 
 
+# Edge rows every audio operator must survive: each yields no wave
+# (NULL bytes, b"", malformed or truncated-fmt WAV) or decodes with a quirk
+# (odd byte count, stereo WAV whose 8 kHz container rate overrides the
+# 16 kHz metadata, NULL sr_hz).
+_EDGE_DROPPED = ("null", "empty", "bad_wav", "trunc_wav")
+
+
+def _edge_clips(spark):
+    from heliport_spark.functions.audio import encode_wav
+
+    tone16 = (0.3 * np.sin(2 * np.pi * 440 * np.arange(16000) / 16000)
+              ).astype(np.float32)
+    tone8 = (0.3 * np.sin(2 * np.pi * 440 * np.arange(8000) / 8000)
+             ).astype(np.float32)
+    stereo = np.repeat(tone8, 2)  # L == R: the downmix is tone8
+    pcm = encode_pcm_s16le(tone16)
+    rows = [
+        ("null", None, 16000, 1000, "pcm_s16le"),
+        ("empty", b"", 16000, 1000, "pcm_s16le"),
+        ("odd", pcm + b"\x7f", 16000, 1000, "pcm_s16le"),
+        ("bad_wav", b"RIFFgarbage-not-a-wave-file", 16000, 1000, "wav"),
+        ("trunc_wav",
+         b"RIFF" + (20).to_bytes(4, "little") + b"WAVE"
+         + b"fmt " + (16).to_bytes(4, "little") + b"\x01\x00",
+         16000, 1000, "wav"),
+        ("stereo", encode_wav(stereo, 8000, channels=2), 16000, 1000, "wav"),
+        ("nosr", pcm, None, 1000, "pcm_s16le"),
+    ]
+    df = spark.createDataFrame(
+        rows, "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string"
+    )
+    return df, pcm, encode_pcm_s16le(tone8)
+
+
+def _edge_append(defaults, decoded, no_wave=_EDGE_DROPPED):
+    """Check for an append-columns operator: every input row comes out,
+    the ``no_wave`` rows carrying ``defaults`` and the others passing
+    ``decoded(clip_id, row, pcm, pcm8)``."""
+    def check(rows, pcm, pcm8):
+        out = {r["clip_id"]: r for r in rows}
+        assert set(out) == set(_EDGE_DROPPED) | {"odd", "stereo", "nosr"}
+        for cid, r in out.items():
+            if cid in no_wave:
+                assert {c: r[c] for c in defaults} == defaults, cid
+            else:
+                decoded(cid, r, pcm, pcm8)
+    return check
+
+
+def _edge_fan_out(ids, decoded=None):
+    """Check for a fan-out operator: exactly ``ids`` emit rows."""
+    def check(rows, pcm, pcm8):
+        assert {r["clip_id"] for r in rows} == ids
+        if decoded:
+            decoded(rows, pcm, pcm8)
+    return check
+
+
+def _n(cid):
+    """Decoded samples of an edge row (the stereo row is 1 s at 8 kHz)."""
+    return 8000 if cid == "stereo" else 16000
+
+
+def _edge_cases():
+    from heliport_spark.functions import audio as A
+
+    def features(cid, r, pcm, pcm8):
+        assert r["n_samples"] == _n(cid)
+        assert abs(r["rms"] - 0.3 / np.sqrt(2)) < 1e-3
+        assert r["silence_ratio"] == 0.0
+
+    def resampled(cid, r, pcm, pcm8):
+        assert r["sr_rs"] == 16000 and r["n_samples_rs"] == 16000
+        if cid == "odd":
+            assert r["bytes_rs"] == pcm
+
+    def embedded(cid, r, pcm, pcm8):
+        assert len(r["aemb"]) == 16
+
+    def normalized(cid, r, pcm, pcm8):
+        assert len(r["bytes_norm"]) == 2 * _n(cid) and r["gain_db"] < 0
+
+    def trimmed(cid, r, pcm, pcm8):
+        assert r["bytes_trim"] == (pcm8 if cid == "stereo" else pcm)
+        assert r["sr_trim"] == _n(cid) and r["n_samples_trim"] == _n(cid)
+
+    def mel(cid, r, pcm, pcm8):
+        assert r["n_frames"] > 0
+
+    def denoised(cid, r, pcm, pcm8):
+        assert len(r["bytes_dn"]) == 2 * _n(cid)
+
+    def chunks_rejoin(rows, pcm, pcm8):
+        for cid, want in (("odd", pcm), ("stereo", pcm8)):
+            got = sorted((r for r in rows if r["clip_id"] == cid),
+                         key=lambda r: r["chunk_idx"])
+            assert b"".join(bytes(r["bytes"]) for r in got) == want, cid
+            assert {r["sr_hz"] for r in got} == {_n(cid)}, cid
+
+    decoded = {"odd", "stereo", "nosr"}
+    return {
+        "audio_features": (A.audio_features_df, _edge_append(
+            {"n_samples": 0, "rms": 0.0, "silence_ratio": 1.0}, features)),
+        # no known rate: resampling emits NULL, chunking skips the row
+        "resample_audio": (A.resample_audio_df, _edge_append(
+            {"bytes_rs": None, "sr_rs": None, "n_samples_rs": 0}, resampled,
+            _EDGE_DROPPED + ("nosr",))),
+        "audio_embedding": (A.audio_embedding_df,
+                            _edge_append({"aemb": None}, embedded)),
+        "normalize_loudness": (A.normalize_loudness_df, _edge_append(
+            {"gain_db": 0.0, "bytes_norm": None}, normalized)),
+        "trim_silence": (A.trim_silence_df, _edge_append(
+            {"bytes_trim": None, "sr_trim": None, "n_samples_trim": 0},
+            trimmed)),
+        "mel_stats": (A.mel_stats_df, _edge_append(
+            {"n_frames": 0, "mel_mean": 0.0, "mel_dom_bin": 0}, mel)),
+        "denoise_audio": (A.denoise_audio_df, _edge_append(
+            {"bytes_dn": None, "noise_db": None}, denoised)),
+        "chunk_audio": (
+            lambda df: A.chunk_audio_df(df, window_ms=300, min_tail_ms=50),
+            _edge_fan_out({"odd", "stereo"}, chunks_rejoin)),
+        "vad_segments": (A.vad_segments_df, _edge_fan_out(decoded)),
+        "audio_fingerprints": (
+            lambda df: A.audio_fingerprints_df(df).withColumnRenamed(
+                "id", "clip_id"),
+            _edge_fan_out(decoded)),
+    }
+
+
+@pytest.mark.parametrize("op", [
+    "audio_features", "resample_audio", "audio_embedding",
+    "normalize_loudness", "trim_silence", "mel_stats", "denoise_audio",
+    "chunk_audio", "vad_segments", "audio_fingerprints",
+])
+def test_audio_operator_edge_rows(spark, op):
+    """Every audio operator survives NULL bytes, b"", odd-length PCM,
+    malformed and truncated-fmt WAV, stereo WAV and NULL sr_hz without
+    failing the task, and gives each its documented NULL/zero/drop
+    output; the odd-length row decodes with its trailing byte dropped, the
+    NULL-rate row at the 16 kHz fallback (no rows or NULL where the
+    operator needs a true rate)."""
+    df, pcm, pcm8 = _edge_clips(spark)
+    fn, check = _edge_cases()[op]
+    check(fn(df).collect(), pcm, pcm8)
+
+
 def test_multimodal_stubs():
     with pytest.raises(NotImplementedError):
         decode_compressed_audio(b"\x00", "opus")
@@ -1993,7 +2139,7 @@ def test_vad_segments_df(spark):
     df = spark.createDataFrame(rows, ["clip_id", "bytes", "sr_hz"])
     segs = {
         (r.clip_id, r.seg_idx): (r.start_ms, r.end_ms)
-        for r in vad_segments_df(df, codec_col=None).collect()
+        for r in vad_segments_df(df).collect()
     }
     assert set(segs) == {("a", 0), ("a", 1)}
     # frame quantization is 20 ms — bounds land on the planted edges

@@ -606,6 +606,28 @@ def test_minhash_features_udf_parity(spark):
     assert a == b
 
 
+def test_minhash_features_udf_hs_only(spark):
+    """The candidates lane's hs-only form of the features UDF returns just
+    ``hs``, the same distinct-shingle hash set as the full form."""
+    from pyspark.sql import functions as F
+
+    from heliport_spark.streaming.stream import minhash_features_udf
+
+    df = spark.createDataFrame(
+        [("a", "the quick brown fox"), ("b", ""), ("c", "ab"),
+         ("d", "Ünïcode  text\twith tabs"), ("e", None)],
+        "id string, text string",
+    )
+    txt = F.coalesce(F.col("text"), F.lit(""))
+    out = df.select(
+        "id", minhash_features_udf(with_sig=False)(txt).alias("h"),
+        minhash_features_udf()(txt)["hs"].alias("hs"),
+    )
+    assert out.schema["h"].dataType.fieldNames() == ["hs"]
+    for r in out.collect():
+        assert frozenset(r["h"]["hs"]) == frozenset(r["hs"]), r["id"]
+
+
 def test_windowed_lang_counts_plan(spark):
     # watermark + window aggregation compiles against a streaming source
     clips = golden_clips(spark).withColumn(
