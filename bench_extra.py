@@ -13,6 +13,13 @@ Modes:
   --pipeline-stages  stage-isolation of the flagship pipeline over the
                      materialized scaling clips table: scan-only, +identify,
                      +scrub, +rules, full (each via noop sink)
+  --manifest-commits N [DIR]
+                     time N TableManifest.commit_bucket calls in a fresh
+                     temporary directory under DIR (default: the current
+                     directory, i.e. the filesystem output roots live on),
+                     next to N durable writes onto one existing file (the
+                     pointer rewrite the manifest no longer does); prints
+                     p50, max and total of each. No Spark.
 
 Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_REPS as bench.py.
 """
@@ -180,6 +187,42 @@ def run_pipeline_stages():
     spark.stop()
 
 
+def run_manifest_commits(n, where):
+    """Filesystem cost of a commit loop of n buckets, measured in place."""
+    import shutil
+    import statistics
+    import tempfile
+    from pathlib import Path
+
+    from heliport_spark.sources.manifest import TableManifest
+
+    def timed(fn):
+        ts = []
+        for i in range(n):
+            t0 = time.perf_counter()
+            fn(i)
+            ts.append(time.perf_counter() - t0)
+        return {"p50_ms": round(statistics.median(ts) * 1e3, 3),
+                "max_ms": round(max(ts) * 1e3, 3),
+                "total_s": round(sum(ts), 4)}
+
+    root = tempfile.mkdtemp(prefix="manifest_commits_", dir=where)
+    try:
+        mf = TableManifest(os.path.join(root, "table"))
+        commits = timed(lambda b: mf.commit_bucket(
+            b, rows=b, counters={"clips_seen": b},
+            lineage={"n_buckets": n, "source": "clips", "bucket": b}))
+        pointer = Path(root, "pointer")
+        replaces = timed(lambda i: mf._durable_write(
+            pointer, f"snapshot-{i}.json"))
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+    print(json.dumps({"mode": "manifest_commits", "n": n,
+                      "dir": os.path.abspath(where),
+                      "commit_bucket": commits,
+                      "replace_existing": replaces}))
+
+
 if __name__ == "__main__":
     args = sys.argv[1:]
     if "--explain" in args:
@@ -190,6 +233,9 @@ if __name__ == "__main__":
         run_explain(tag)
     elif "--pipeline-stages" in args:
         run_pipeline_stages()
+    elif "--manifest-commits" in args:
+        rest = args[args.index("--manifest-commits") + 1:]
+        run_manifest_commits(int(rest[0]), rest[1] if len(rest) > 1 else ".")
     elif "--noop" in args:
         names = [a for a in args[args.index("--noop") + 1:]
                  if not a.startswith("--")]

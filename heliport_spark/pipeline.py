@@ -50,8 +50,17 @@ from .operators.quality import (
 )
 from .sources.manifest import TableManifest
 
-COUNTER_NAMES = ("clips_seen", "dropped_by_rule", "scrubbed_spans")
 BUCKET_COL = "_bucket"
+# per-bucket counters: name → aggregate over bucket {b}'s rows, as SQL text,
+# because one F.expr is ~4 py4j round trips and the same aggregate composed
+# from F.col/F.when/alias objects ~40 (3·n of them per run)
+COUNTERS = {
+    "clips_seen": f"count(CASE WHEN {BUCKET_COL} = {{b}} THEN 1 END)",
+    "dropped_by_rule":
+        f"count(CASE WHEN {BUCKET_COL} = {{b}} AND NOT keep THEN 1 END)",
+    "scrubbed_spans":
+        f"sum(CASE WHEN {BUCKET_COL} = {{b}} THEN quality.scrub_spans END)",
+}
 
 
 def quality_filter(
@@ -261,14 +270,8 @@ def run_pipeline(
     # derived on the output, so no opt-in stage has to carry it
     withb = out.withColumn(BUCKET_COL, bucket)
     obs = Observation()
-    per_bucket = []
-    for b in todo:
-        inb = F.col(BUCKET_COL) == b
-        per_bucket += [
-            F.count(F.when(inb, 1)).alias(f"clips_seen_{b}"),
-            F.count(F.when(inb & ~F.col("keep"), 1)).alias(f"dropped_by_rule_{b}"),
-            F.sum(F.when(inb, F.col("quality.scrub_spans"))).alias(f"scrubbed_spans_{b}"),
-        ]
+    per_bucket = [F.expr(f"{agg.format(b=b)} AS {k}_{b}")
+                  for b in todo for k, agg in COUNTERS.items()]
     staging = os.path.join(out_root, "_staging")
     shutil.rmtree(staging, ignore_errors=True)
     withb.observe(obs, *per_bucket).write.partitionBy(BUCKET_COL).parquet(staging)
@@ -287,7 +290,7 @@ def run_pipeline(
             if not os.path.isdir(empty):
                 out.limit(0).write.parquet(empty)
             shutil.copytree(empty, dst)
-        counters = {k: int(got.get(f"{k}_{b}") or 0) for k in COUNTER_NAMES}
+        counters = {k: int(got.get(f"{k}_{b}") or 0) for k in COUNTERS}
         mf.commit_bucket(
             b,
             rows=counters["clips_seen"],

@@ -10,10 +10,14 @@ set -euo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 INPUT="$1"; OUTPUT="$2"; MASTER="${3:-local[8]}"; shift 2 || true; shift || true
 
-ZIP="$(mktemp -d)/heliport_spark.zip"
+ZIPDIR="$(mktemp -d)"
+trap 'rm -rf "$ZIPDIR"' EXIT
+ZIP="$ZIPDIR/heliport_spark.zip"
 (cd "$REPO" && zip -qr "$ZIP" heliport_spark -x '*__pycache__*')
 
-exec spark-submit \
+# not exec'd, so the EXIT trap removes the zip; the script exits with
+# spark-submit's status (set -e)
+spark-submit \
   --master "$MASTER" \
   --py-files "$ZIP" \
   --driver-memory "${DRIVER_MEMORY:-8g}" \

@@ -336,6 +336,65 @@ def test_no_resume_resets_stale_manifest(spark):
         shutil.rmtree(out, ignore_errors=True)
 
 
+def test_manifest_never_renames_onto_an_existing_file(spark, monkeypatch,
+                                                      tmp_path):
+    """reset() and a 16-bucket run commit by renaming each snapshot onto a
+    new name: no rename replaces a file (on ext4 mounted ``discard`` one
+    that does costs ~50 ms), and no pointer or tmp file is left."""
+    import heliport_spark.sources.manifest as manifest_mod
+
+    out = tmp_path / "out"
+    TableManifest(out).commit_bucket(0, rows=1)  # something for reset()
+    targets = []
+    replace = manifest_mod.os.replace
+
+    def guarded(src, dst):
+        assert not os.path.exists(dst), f"rename onto existing {dst}"
+        targets.append(os.path.basename(dst))
+        return replace(src, dst)
+
+    monkeypatch.setattr(manifest_mod.os, "replace", guarded)
+    clips = clips_from_documents(spark, SF_TINY, with_golden=False)
+    run_pipeline(spark, clips, str(out), n_buckets=16, resume=False,
+                 with_ft=False)
+    snaps = [f"snapshot-{n}.json" for n in range(1, 18)]
+    assert [t for t in targets if t.startswith("snapshot-")] == snaps
+    assert sorted(os.listdir(out / "_manifest")) == sorted(
+        ["snapshot-0.json"] + snaps)
+    assert set(TableManifest(out).committed_buckets()) == set(range(16))
+
+
+def test_torn_snapshot_tmp_is_ignored(tmp_path):
+    """A ``snapshot-<n>.json.tmp`` left by a crash mid-write is not a
+    snapshot: readers skip it and the next commit overwrites it."""
+    mf = TableManifest(tmp_path)
+    mf.commit_bucket(0, rows=5, counters={"clips_seen": 5})
+    (mf.mdir / "snapshot-1.json.tmp").write_text('{"snapshot_id": 1, "buck')
+    assert mf.committed_buckets() == {
+        0: {"rows": 5, "counters": {"clips_seen": 5}, "lineage": {}}}
+    snap = mf.commit_bucket(1, rows=3)
+    assert (snap["snapshot_id"], snap["parent_id"]) == (1, 0)
+    assert set(mf.committed_buckets()) == {0, 1}
+    assert mf.current_snapshot()["total_rows"] == 8
+    assert sorted(os.listdir(mf.mdir)) == ["snapshot-0.json",
+                                           "snapshot-1.json"]
+
+
+def test_old_layout_stale_current_reads_highest_snapshot(tmp_path):
+    """A root written with a ``CURRENT`` pointer file: the highest snapshot
+    is current even where the pointer names an older one (a crash between
+    the old layout's two writes), and commits continue from it."""
+    mf = TableManifest(tmp_path)
+    for b in range(3):
+        mf.commit_bucket(b, rows=b + 1)
+    (mf.mdir / "CURRENT").write_text("snapshot-1.json")
+    assert set(mf.committed_buckets()) == {0, 1, 2}
+    assert mf.current_snapshot()["snapshot_id"] == 2
+    snap = mf.commit_bucket(3, rows=4)
+    assert (snap["snapshot_id"], snap["parent_id"]) == (3, 2)
+    assert snap["total_rows"] == 10
+
+
 def test_compile_model_rejects_unknown_lang(tmp_path):
     from heliport_spark.model_compile import compile_model
 
@@ -602,3 +661,24 @@ def test_lang_mix_df(spark):
     assert abs(r2.lang_mix_ratio - 1 / 3) < 1e-6
     assert got[3].n_segs == 0 and got[3].maj_lang is None
     assert got[4].maj_lang == "spa" and got[4].lang_mix_ratio == 0.0
+
+
+def test_submit_script_removes_its_zip_and_keeps_exit_code(tmp_path):
+    """scripts/submit_pipeline.sh removes the package zip it builds and
+    exits with spark-submit's status (a stub spark-submit on PATH)."""
+    import subprocess
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    bin_dir, tmp = tmp_path / "bin", tmp_path / "tmp"
+    bin_dir.mkdir()
+    tmp.mkdir()
+    stub = bin_dir / "spark-submit"
+    stub.write_text('#!/bin/sh\ntest -f "$4" || exit 99\nexit 7\n')
+    stub.chmod(0o755)
+    env = {**os.environ, "TMPDIR": str(tmp),
+           "PATH": f"{bin_dir}{os.pathsep}{os.environ['PATH']}"}
+    done = subprocess.run(
+        ["bash", os.path.join(repo, "scripts", "submit_pipeline.sh"),
+         "in.parquet", str(tmp_path / "out"), "local[1]"], env=env)
+    assert done.returncode == 7  # the zip existed while spark-submit ran
+    assert os.listdir(tmp) == []
